@@ -1,8 +1,10 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints JSON lines (see ``result_lines``): the full result
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...},
+then the per-query minima in small chunks, then the compact headline with
+the calibration scalars as the very last line.
 
 value = total wall time of the headline suite (lower is better). Each query
 is fully materialized via the noop sink (count() would let Catalyst prune
@@ -55,7 +57,7 @@ SANE_TOTAL_SEC = float(
 def main() -> None:
     """Parent: run the suite in a child process; if the child's total wall
     time says the process was degraded, retry once in a fresh child and
-    report the better run. Prints exactly ONE JSON line either way."""
+    report the better run, as the lines of ``result_lines``."""
     if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1":
         run_suite()
         return
@@ -93,51 +95,51 @@ def main() -> None:
     # best-of-N passes; ALSO keep the min across all children, so a
     # cross-round per-query diff compares steady-state cost even when
     # one child process was hit by the sandbox's scheduling degradation
-    out = dict(best[1])
+    for line in result_lines(best[1], per_query_min):
+        print(line)
+
+
+HEADLINE_KEYS = (
+    "metric", "value", "unit", "sf", "n_queries", "sec_per_query",
+    "per_query_min_total", "ingest_rows_per_sec",
+    "storage_bytes_per_vector", "calib_roundtrip_ms", "calib_shuffle_ms",
+)
+
+
+def result_lines(result: dict, per_query_min: dict[str, float]) -> list[str]:
+    """The parent's stdout, in order: the full result line (with both
+    per-query maps), the per-query minima as small labeled JSON chunks,
+    and LAST the compact headline with the calibration scalars.
+
+    Readers of this output may keep only its TAIL, and the full line is
+    long enough that truncation can eat its head. Every chunk stays well
+    under 2 KB (values rounded to 0.01 s), so each survives any plausible
+    tail window, and the headline — suite total plus ``calib_*`` — is the
+    very last line, so even a cut artifact yields the total."""
+    out = dict(result)
     out["per_query_min"] = per_query_min
     out["per_query_min_total"] = round(sum(per_query_min.values()), 3)
-    print(json.dumps(out))
-    # The driver's artifact stores only the TAIL of stdout, and the full
-    # line above (two per-query maps) is long enough that truncation can
-    # eat its head, leaving the headline totals unrecoverable (BENCH_r06:
-    # parsed=null, total lost). Repeat the headline scalars as the FINAL
-    # line — compact, always inside any tail window (round-6 verdict
-    # item 7).
-    headline = {
-        k: out[k]
-        for k in (
-            "metric", "value", "unit", "sf", "n_queries", "sec_per_query",
-            "per_query_min_total", "ingest_rows_per_sec",
-            "storage_bytes_per_vector", "calib_roundtrip_ms",
-            "calib_shuffle_ms",
-        )
-        if k in out
-    }
-    print(json.dumps(headline))
-    # Round-11 verdict item 1: the driver's PERF comparison reads only the
-    # TAIL of stdout, and the full first line's per-query map is long enough
-    # that truncation eats its head — PERF_r11 recovered zero common queries.
-    # Repeat the per-query MINIMA as the FINAL lines, split into small
-    # labeled JSON chunks (each well under 2 KB) so every chunk survives any
-    # plausible tail window. Values rounded to 0.01 s; additions only — the
-    # first line and the headline line above are unchanged.
-    items = sorted(per_query_min.items())
     chunks: list[dict[str, float]] = []
     cur: dict[str, float] = {}
-    for q, t in items:
+    for q, t in sorted(per_query_min.items()):
         cur[q] = round(t, 2)
         if len(json.dumps(cur)) > 1500:
             chunks.append(cur)
             cur = {}
     if cur:
         chunks.append(cur)
-    for i, ch in enumerate(chunks):
-        print(json.dumps({
+    lines = [json.dumps(out)]
+    lines += [
+        json.dumps({
             "metric": "per_query_min_sec",
             "chunk": i + 1,
             "n_chunks": len(chunks),
             "queries": ch,
-        }))
+        })
+        for i, ch in enumerate(chunks)
+    ]
+    lines.append(json.dumps({k: out[k] for k in HEADLINE_KEYS if k in out}))
+    return lines
 
 
 def run_suite() -> None:

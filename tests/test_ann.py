@@ -176,7 +176,7 @@ def test_assign_cells_fold_matches_crossjoin_reference(spark):
     ref = {
         r["vec_id"]: r["cell"]
         for r in df.crossJoin(cent_df)
-        .select("vec_id", "cell", cosine(F.col("v"), "_cv").alias("_cs"))
+        .select("vec_id", "cell", cosine("v", "_cv").alias("_cs"))
         .groupBy("vec_id")
         .agg(F.max_by("cell", F.struct(F.col("_cs"), -F.col("cell"))).alias("cell"))
         .collect()
@@ -302,7 +302,7 @@ def test_ivf_assign_sql_matches_builder_reference(spark):
 
     from pyspark.sql import functions as F
 
-    from victor_spark.functions.vector import bind, dot, lit_doubles, norm
+    from victor_spark.functions.vector import bind, lit_doubles, norm
     from victor_spark.plans.catalog import _ivf_assign_map_side
 
     rng = random.Random(17)
@@ -347,7 +347,11 @@ def test_ivf_assign_sql_matches_builder_reference(spark):
                     cent_arr,
                     init,
                     lambda acc, c: bind(
-                        dot(F.col("v"), c["cv"]) / (vn * c["cn"]),
+                        F.aggregate(
+                            F.zip_with(F.col("v"), c["cv"], lambda x, y: x * y),
+                            F.lit(0.0),
+                            lambda s, x: s + x,
+                        ) / (vn * c["cn"]),
                         lambda cs: F.when(
                             (cs > acc["cs"])
                             | ((cs == acc["cs"]) & (c["cell"] < acc["cell"])),

@@ -297,3 +297,23 @@ def test_semantic_dedup_nan_embedding_is_sentineled(spark):
     with pytest.raises(ValueError, match="empty"):
         semantic_dedup(df, "doc", "v",
                        cents.filter("cell < 0"), threshold=0.9)
+
+
+def test_recall_audit_pair_keys_are_unique(spark):
+    """dedup_recall_audit full-outer-joins truth and candidates on
+    (id_a, id_b) and counts rows, so each side must hold every pair key
+    at most once — otherwise a pair is counted twice."""
+    from tests.conftest import SF_T2
+    from victor_spark.plans.catalog import _recall_audit_sides
+
+    truth, cand = _recall_audit_sides(spark, SF_T2)
+    try:
+        for side in (truth, cand):
+            r = side.groupBy("id_a", "id_b").count().agg(
+                F.count("*").alias("keys"),
+                F.max("count").alias("max_n"),
+                F.count(F.when(F.col("id_a") >= F.col("id_b"), 1)).alias("bad"),
+            ).first()
+            assert r["keys"] > 0 and r["max_n"] == 1 and r["bad"] == 0, r
+    finally:
+        dedup.release_shingle_caches()

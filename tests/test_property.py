@@ -339,7 +339,7 @@ def test_morton_key_roundtrips_and_orders(spark, pts):
 
     df = spark.createDataFrame(pts, "x long, y long")
     rows = df.select(
-        "x", "y", morton_key(F.col("x"), F.col("y"), bits=16).alias("z")
+        "x", "y", morton_key("x", "y", bits=16).alias("z")
     ).collect()
     for r in rows:
         xs = sum(((r.z >> (2 * i)) & 1) << i for i in range(16))

@@ -14,7 +14,11 @@ import re
 
 from pyspark.sql import functions as F
 
-from victor_spark.functions.url import robots_best_match, robots_rule
+from victor_spark.functions.url import (
+    robots_best_match,
+    robots_rule,
+    robots_rule_of,
+)
 
 # é (2 UTF-8 bytes) and 日 (3) make octet-vs-character precedence
 # observable: a 2-char multibyte pattern must beat a 3-char ASCII one
@@ -75,7 +79,7 @@ def test_robots_matcher_sweep_vs_reference(spark):
         "case_id int, prefix string, allow boolean",
     )
     folded = rule_rows.groupBy("case_id").agg(
-        F.collect_list(robots_rule(F.col("prefix"), F.col("allow"))).alias(
+        F.collect_list(robots_rule_of("prefix", "allow")).alias(
             "rules"
         )
     )
@@ -97,3 +101,56 @@ def test_robots_matcher_sweep_vs_reference(spark):
         if got[cid] != expected:
             mismatches.append((cid, rules, target, got[cid], expected))
     assert not mismatches, mismatches[:5]
+
+
+LITERAL_RULES = [
+    ("/private", False),
+    ("/tmp", False),
+    ("/private/p", True),
+    ("/a/*", True),
+    ("/end$", False),
+    ("/mid$dle", True),
+    ("/meta.([x])+{2}|^", False),
+    ("", True),
+    ("/uni/é中", False),  # multibyte octets in plen
+]
+
+
+def _ref_rule(prefix: str, allow: bool) -> tuple:
+    """The compiled rule struct, restated: octet length, allow rank,
+    literal flag, and the Java regex (metachars escaped, '*' -> '.*',
+    trailing '$' anchors)."""
+    anchored = prefix.endswith("$")
+    body = prefix[:-1] if anchored else prefix
+    escaped = re.sub(r"([.\\+?\[\]()^${}|*])", r"\\\1", body)
+    rx = "^" + escaped.replace("\\*", ".*") + ("$" if anchored else "")
+    return (len(prefix.encode("utf-8")), int(allow), prefix, allow,
+            not ("*" in prefix or anchored), rx)
+
+
+def test_robots_rule_literal_struct_fields(spark):
+    got = spark.range(1).select(
+        *[robots_rule(p, a).alias(f"r{i}") for i, (p, a) in enumerate(LITERAL_RULES)]
+    ).first()
+    for i, (prefix, allow) in enumerate(LITERAL_RULES):
+        assert tuple(got[f"r{i}"]) == _ref_rule(prefix, allow), prefix
+
+
+def test_robots_rule_literals_in_best_match(spark):
+    rules = LITERAL_RULES[:5]
+    paths = ["/private/p/x", "/tmp/y", "/other", "/end", "/end/x", "/a/b"]
+    df = spark.createDataFrame([(p,) for p in paths], "path string")
+    best = robots_best_match(
+        "path", F.array(*[robots_rule(p, a) for p, a in rules])
+    )
+    got = {
+        r["path"]: (r["prefix"], r["allow"])
+        for r in df.select(
+            "path", best["prefix"].alias("prefix"), best["allow"].alias("allow")
+        ).collect()
+    }
+    for path in paths:
+        ref = _ref_best(rules, path)
+        assert got[path] == ((None, None) if ref is None else ref[2:]), path
+    assert got["/private/p/x"] == ("/private/p", True)
+    assert got["/end"] == ("/end$", False) and got["/end/x"] == (None, None)

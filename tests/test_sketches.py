@@ -336,14 +336,12 @@ def test_bloom_null_probe_is_definitely_absent(spark):
     assert got[None] is False  # not NULL — negated filters keep the row
 
 
-def test_hashing_sql_fast_paths_match_builders(spark):
-    """The round-11 one-SQL-string fast paths (taken for string column
-    names) must produce exactly what the Column-builder paths produce —
-    signatures, band keys, simhash fingerprints and LSH buckets, incl.
-    empty arrays and negative/32-bit-boundary hash values."""
+def test_hashing_kernels_match_python_reference(spark):
+    """Signatures, band keys, simhash fingerprints and LSH buckets against
+    a plain-Python replay of each formula, incl. empty hash sets, a zero
+    vector and hash values across the 32-bit range."""
+    import math
     import random
-
-    from pyspark.sql import functions as F
 
     from victor_spark.functions import hashing as H
 
@@ -365,12 +363,35 @@ def test_hashing_sql_fast_paths_match_builders(spark):
         H.simhash32("h").alias("sh"),
         H.hyperplane_bucket("v", 8).alias("bk"),
     ).withColumn("bands", H.band_keys("sig", 8, 2))
-    ref = df.select(
-        "i",
-        H.minhash_signature(F.col("h"), 16).alias("sig"),
-        H.simhash32(F.col("h")).alias("sh"),
-        H.hyperplane_bucket(F.col("v"), 8).alias("bk"),
-    ).withColumn("bands", H.band_keys(F.col("sig"), 8, 2))
-    g = {r["i"]: (r["sig"], r["bands"], r["sh"], r["bk"]) for r in got.collect()}
-    r = {r["i"]: (r["sig"], r["bands"], r["sh"], r["bk"]) for r in ref.collect()}
-    assert g == r
+    got = {r["i"]: (r["sig"], r["bands"], r["sh"], r["bk"]) for r in got.collect()}
+
+    def _sig(h):
+        return [
+            min(((x * a + b) % H.MERSENNE31 for x in h), default=H.MERSENNE31)
+            for a, b in H.hash_params(16)
+        ]
+
+    def _bands(sig):
+        return ["_".join([str(j)] + [str(x) for x in sig[2 * j:2 * j + 2]])
+                for j in range(8)]
+
+    def _simhash(h):
+        return sum(
+            1 << b for b in range(32)
+            if 2 * sum(1 for x in h if x & (1 << b)) > len(h)
+        )
+
+    def _bucket(v):
+        out = 0
+        for j in range(8):
+            acc = 0.0
+            for i, x in enumerate(v):
+                acc += x * math.sin(float(j) * 12.9898 + float(i) * 78.233)
+            out |= (1 << j) if acc > 0.0 else 0
+        return out
+
+    assert len(got) == len(rows)
+    for i, h, v in rows:
+        sig = _sig(h)
+        assert got[i] == (sig, _bands(sig), _simhash(h), _bucket(v)), i
+    assert got[100] == ([H.MERSENNE31] * 16, _bands([H.MERSENNE31] * 16), 0, 0)

@@ -132,30 +132,6 @@ def test_quantize_idempotent(spark):
     assert r["err"] < 1e-9
 
 
-def test_pandas_cosine_matches_native_kernel(spark):
-    """The Arrow/numpy cosine and the native fold agree to float tolerance
-    on real vectors (exact hash parity is the native kernel's job)."""
-    from victor_spark.functions.vector import (
-        cosine_to_literal,
-        cosine_to_literal_pandas,
-        to_double_array,
-    )
-    from victor_spark.sources import load_table
-    from tests.conftest import SF_SMOKE
-
-    e = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("v")
-    ).limit(50)
-    q = [float(x) for x in e.first()["v"]]
-    both = e.select(
-        cosine_to_literal("v", q).alias("native"),
-        cosine_to_literal_pandas("v", q).alias("arrow"),
-    ).collect()
-    assert len(both) == 50
-    for r in both:
-        assert abs(r["native"] - r["arrow"]) < 1e-12
-
-
 def test_l2_normalize_matches_cosine_contract(spark):
     import math
 
@@ -169,9 +145,9 @@ def test_l2_normalize_matches_cosine_contract(spark):
     )
     rows = df.select(
         l2_normalize("a").alias("na"),
-        dot(l2_normalize("a"), l2_normalize("b")).alias("nd"),
+        l2_normalize("b").alias("nb"),
         cosine("a", "b").alias("c"),
-    ).collect()
+    ).select("na", dot("na", "nb").alias("nd"), "c").collect()
     # normalized dot tracks cosine to float tolerance on real vectors
     assert rows[0]["na"] == [0.6, 0.8]
     assert abs(rows[0]["nd"] - rows[0]["c"]) < 1e-12
@@ -222,3 +198,165 @@ def test_lit_doubles_bit_exact_vs_per_element_lits(spark):
         df.select(lit_doubles_2d([]).alias("a")).schema["a"].dataType.simpleString()
         == "array<array<double>>"
     )
+
+
+# ---------------------------------------------------------------------------
+# Kernels against a plain-Python replay of their arithmetic, over the edge
+# vectors: zero norm, subnormal, NaN, ±inf, empty, length mismatch, null
+# and overflow. Spark semantics replayed: a length mismatch pads with null,
+# which poisons the fold to null; SQL `=` holds for NaN = NaN; the
+# zero-norm guard turns the would-be 0/0 into NaN.
+# ---------------------------------------------------------------------------
+
+SUB = 5e-324  # smallest subnormal double
+
+EDGE_VECTORS = [
+    ([1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
+    ([0.0, 0.0], [0.0, 0.0]),                      # zero norm -> NaN
+    ([SUB, -0.0], [SUB, 0.0]),                     # subnormal / signed zero
+    ([float("nan"), 1.0], [1.0, 1.0]),             # NaN poison
+    ([float("inf"), 1.0], [1.0, float("-inf")]),   # infinities
+    ([], []),                                      # empty
+    ([1.0, 2.0], [1.0]),                           # length mismatch -> null
+    (None, [1.0]),                                 # null array
+    ([1e308, 1e308], [1e308, -1e308]),             # overflow territory
+]
+
+
+def _fold(a, b, f):
+    if a is None or b is None or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += f(x, y)
+    return acc
+
+
+def _py_dot(a, b):
+    return _fold(a, b, lambda x, y: x * y)
+
+
+def _py_norm(a):
+    d = _py_dot(a, a)
+    return None if d is None else math.sqrt(d)
+
+
+def _py_guarded_div(num, den):
+    if den is None:
+        return None
+    if den == 0.0:
+        return float("nan")
+    return None if num is None else num / den
+
+
+def _py_cosine(a, b):
+    na, nb = _py_norm(a), _py_norm(b)
+    return _py_guarded_div(_py_dot(a, b), None if None in (na, nb) else na * nb)
+
+
+def _py_euclidean(a, b):
+    s = _fold(a, b, lambda x, y: (x - y) * (x - y))
+    return None if s is None else math.sqrt(s)
+
+
+def _py_l2_normalize(a):
+    n = _py_norm(a)
+    if n is None:
+        return None
+    return [float("nan") if n == 0.0 else x / n for x in a]
+
+
+def _same(got, want):
+    """Bit-level equality with NaN == NaN (repr is exact for doubles)."""
+    if isinstance(want, list):
+        return isinstance(got, list) and len(got) == len(want) and all(
+            _same(g, w) for g, w in zip(got, want)
+        )
+    return repr(got) == repr(want)
+
+
+@pytest.fixture(scope="module")
+def edge_vectors(spark):
+    return spark.createDataFrame(EDGE_VECTORS, "a array<double>, b array<double>")
+
+
+def test_vector_kernels_on_edge_vectors(edge_vectors):
+    from victor_spark.functions.vector import l2_normalize
+
+    rows = edge_vectors.select(
+        "a", "b",
+        dot("a", "b").alias("dot"),
+        norm("a").alias("norm"),
+        cosine("a", "b").alias("cos"),
+        euclidean("a", "b").alias("l2"),
+        l2_normalize("a").alias("unit"),
+    ).collect()
+    assert len(rows) == len(EDGE_VECTORS)
+    for r in rows:
+        a, b = r["a"], r["b"]
+        assert _same(r["dot"], _py_dot(a, b)), r
+        assert _same(r["norm"], _py_norm(a)), r
+        assert _same(r["cos"], _py_cosine(a, b)), r
+        assert _same(r["l2"], _py_euclidean(a, b)), r
+        assert _same(r["unit"], _py_l2_normalize(a)), r
+
+
+def test_literal_kernels_on_edge_vectors(edge_vectors):
+    from victor_spark.functions.vector import (
+        cosine_to_literal,
+        euclidean_to_literal,
+    )
+
+    for q in ([3.0, -4.0], [0.0, 0.0], [SUB, -0.0], [float("nan"), 1.0], []):
+        qnorm = sum(x * x for x in q) ** 0.5
+        rows = edge_vectors.select(
+            "a",
+            cosine_to_literal("a", q).alias("cos"),
+            euclidean_to_literal("a", q).alias("l2"),
+        ).collect()
+        for r in rows:
+            a = r["a"]
+            na = _py_norm(a)
+            want_cos = _py_guarded_div(
+                _py_dot(a, q), None if na is None else na * qnorm
+            )
+            assert _same(r["cos"], want_cos), (q, r)
+            assert _same(r["l2"], _py_euclidean(a, q)), (q, r)
+
+
+def test_dotted_operand_resolves_struct_field(spark):
+    """A non-identifier operand is SQL: ``s.x`` reads the struct field."""
+    df = spark.range(1).select(
+        F.struct(F.array(F.lit(1.0), F.lit(2.0)).alias("x")).alias("s")
+    )
+    got = df.select(norm("s.x").alias("n")).collect()[0].n
+    assert got == pytest.approx(math.sqrt(5.0))
+
+
+def test_kernels_reject_column_operands():
+    """Every SQL-template kernel refuses a Column with a TypeError that
+    names the fix (pass a name or an expression)."""
+    from victor_spark.functions import hashing as H
+    from victor_spark.functions import text as T
+    from victor_spark.functions import url as U
+    from victor_spark.functions import vector as V
+    from victor_spark.operators.zorder import int_rank, morton_key
+
+    c = F.col("v")
+    calls = [
+        lambda: V.dot(c, "v"), lambda: V.dot("v", c), lambda: V.norm(c),
+        lambda: V.l2_normalize(c), lambda: V.cosine("v", c),
+        lambda: V.cosine_to_literal(c, [1.0]), lambda: V.euclidean(c, "v"),
+        lambda: V.euclidean_to_literal(c, [1.0]),
+        lambda: T.tokens(c), lambda: T.token_count(c),
+        lambda: T.quality_score(c), lambda: T.lang_id(c),
+        lambda: T.c4_kept_lines(c),
+        lambda: U.canonical_url(c), lambda: U.robots_rule(c, True),
+        lambda: U.robots_rule("/p", c), lambda: U.robots_rule_of(c, "allow"),
+        lambda: H.minhash_signature(c), lambda: H.band_keys(c, 8, 2),
+        lambda: H.simhash32(c), lambda: H.hyperplane_bucket(c),
+        lambda: int_rank(c, "lo", "hi"), lambda: morton_key("x", c),
+    ]
+    for call in calls:
+        with pytest.raises(TypeError, match="name|expression"):
+            call()

@@ -5,6 +5,7 @@ min/max on BOTH interleaved columns, which is the entire point.
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -48,21 +49,21 @@ def test_morton_key_interleaves_bits(spark):
     # x=0b011 -> bits at 0,2 ; y=0b101 -> bits at 1,5... interleaved:
     # z = x0<<0 | y0<<1 | x1<<2 | y1<<3 | x2<<4 | y2<<5
     #   = 1 + 2 + 4 + 0 + 0 + 32 = 39
-    row = df.select(morton_key(F.col("x"), F.col("y"), bits=3).alias("z")).collect()
+    row = df.select(morton_key("x", "y", bits=3).alias("z")).collect()
     assert row[0].z == 39
 
 
 def test_int_rank_hits_both_ends_exactly(spark):
     df = spark.range(101).select(F.col("id").alias("x"))
     r = df.select(
-        int_rank(F.col("x"), F.lit(0), F.lit(100), bits=8).alias("r")
+        int_rank("x", "0", "100", bits=8).alias("r")
     ).agg(F.min("r"), F.max("r")).collect()[0]
     assert (r[0], r[1]) == (0, 255)
 
 
 def test_constant_column_ranks_zero(spark):
     df = spark.range(5).select(F.lit(7).alias("x"))
-    r = df.select(int_rank(F.col("x"), F.lit(7), F.lit(7)).alias("r")).collect()
+    r = df.select(int_rank("x", "7", "7").alias("r")).collect()
     assert all(row.r == 0 for row in r)
 
 
@@ -123,10 +124,26 @@ def test_zorder_write_roundtrips_rows(spark, tmp_path):
         F.sum("event_id")
     ).collect()
 
-def test_zorder_sql_fast_paths_match_builders(spark):
-    """Round-11: column NAMES route int_rank/morton_key through one parsed
-    SQL string; the expression must be bit-identical to the builder form
-    (incl. the span==0 rank, negative domains, and the 2^31 bit literal)."""
+def _py_int_rank(x, lo, hi, bits=16):
+    span = hi - lo
+    return 0 if span == 0 else math.floor((x - lo) * ((1 << bits) - 1) / span)
+
+
+def _py_morton_key(x, y, bits=16):
+    """Spark's integer % is Java's remainder (sign of the dividend), so a
+    negative input contributes negative bit terms — replayed with fmod."""
+    def bit(v, i):
+        return int(math.fmod(math.floor(v / (1 << i)), 2))
+
+    return sum(
+        bit(x, i) * (1 << (2 * i)) + bit(y, i) * (1 << (2 * i + 1))
+        for i in range(bits)
+    )
+
+
+def test_zorder_kernels_match_python_reference(spark):
+    """int_rank and morton_key against a plain-Python replay, incl. the
+    span==0 rank, negative domains, and the 2^31 bit literal."""
     rows = [
         (0, 0, 0, 100, -50, 50),
         (100, 37, 0, 100, -50, 50),
@@ -137,47 +154,40 @@ def test_zorder_sql_fast_paths_match_builders(spark):
     df = spark.createDataFrame(
         rows, "x long, y long, xmin long, xmax long, ymin long, ymax long"
     )
-    both = df.select(
-        int_rank("x", "xmin", "xmax").alias("rs"),
-        int_rank(F.col("x"), F.col("xmin"), F.col("xmax")).alias("rb"),
-        morton_key("x", "y").alias("ms"),
-        morton_key(F.col("x"), F.col("y")).alias("mb"),
-        morton_key("x", "y", bits=16).alias("ms16"),
+    got = df.select(
+        int_rank("x", "xmin", "xmax").alias("r"),
+        morton_key("x", "y").alias("m"),
+        morton_key("x", "y", bits=4).alias("m4"),
     ).collect()
-    for r in both:
-        assert r.rs == r.rb
-        assert r.ms == r.mb
-        assert r.ms16 == r.ms
+    for (x, y, xmin, xmax, _, _), g in zip(rows, got):
+        assert g.r == _py_int_rank(x, xmin, xmax), (x, g)
+        assert g.m == _py_morton_key(x, y), (x, y, g)
+        assert g.m4 == _py_morton_key(x, y, bits=4), (x, y, g)
+    assert [g.r for g in got] == [0, 65535, 0, 0, 40453]
 
 
 def test_morton_key_mixed_str_column_args(spark):
-    """Round-12 advice fix: a mixed (str, Column) call must resolve the
-    string as a COLUMN, not a string literal (which yielded NULL keys or
-    an ANSI cast failure), and equal the all-Column builder result."""
-    df = spark.range(64).select(
-        (F.col("id") % 7).alias("xs"), (F.col("id") % 5).alias("ys")
-    )
-    ref = df.select(morton_key(F.col("xs"), F.col("ys"), 4).alias("k")).collect()
+    """Operands are SQL: a Column anywhere raises TypeError with the fix
+    in the message, instead of a str being misread as a string literal
+    (silent NULL keys) or a Column silently taking another code path."""
     for a, b in ((F.col("xs"), "ys"), ("xs", F.col("ys"))):
-        got = df.select(morton_key(a, b, 4).alias("k")).collect()
-        assert got == ref
+        with pytest.raises(TypeError, match="column name"):
+            morton_key(a, b, 4)
 
 
-def test_zorder_fast_path_guard_rejects_odd_names(spark):
-    """Dotted names must fall back to the builder, where F.col resolves
-    them as struct-field access — not be backticked into the SQL fast
-    path as a single literal identifier (unresolvable)."""
+def test_zorder_dotted_names_resolve_struct_fields(spark):
+    """Dotted operands are SQL expressions: ``s.x`` reads the struct
+    field, not a backticked single identifier."""
     df = spark.range(8).select(
         F.struct(
             (F.col("id") % 3).alias("x"), (F.col("id") % 2).alias("y")
         ).alias("s")
     )
-    ref = df.select(
-        morton_key(F.col("s.x"), F.col("s.y"), 4).alias("k"),
-        int_rank(F.col("s.x"), F.lit(0), F.lit(2), 4).alias("r"),
-    ).collect()
     got = df.select(
+        F.col("s.x").alias("x"), F.col("s.y").alias("y"),
         morton_key("s.x", "s.y", 4).alias("k"),
-        int_rank(F.col("s.x"), F.lit(0), F.lit(2), 4).alias("r"),
+        int_rank("s.x", "0", "2", 4).alias("r"),
     ).collect()
-    assert got == ref
+    for g in got:
+        assert g.k == _py_morton_key(g.x, g.y, 4)
+        assert g.r == _py_int_rank(g.x, 0, 2, 4)

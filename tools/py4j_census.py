@@ -6,29 +6,40 @@ deterministic and load-invariant (like qmetrics); build wall carries host
 smear. Use it to find queries whose DRIVER-side plan construction is the
 cost (guide §7.3 "planning time as the bottleneck").
 
+py4j's object-release messages are not counted: Python's garbage
+collector sends them at timing-dependent moments, and counting them made
+per-query figures swing by thousands between identical runs. The last
+line is the total over the queries run.
+
 Usage: python tools/py4j_census.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import py4j.clientserver  # noqa: E402
 import py4j.java_gateway  # noqa: E402
+import py4j.protocol  # noqa: E402
 
 _COUNT = {"n": 0}
+
+
+_RELEASE = py4j.protocol.MEMORY_COMMAND_NAME + py4j.protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
 
 def _patch() -> None:
     for cls in (py4j.java_gateway.GatewayClient, py4j.clientserver.JavaClient):
         orig = cls.send_command
 
-        def wrapped(self, *a, _orig=orig, **kw):
-            _COUNT["n"] += 1
-            return _orig(self, *a, **kw)
+        def wrapped(self, command, *a, _orig=orig, **kw):
+            if not command.startswith(_RELEASE):
+                _COUNT["n"] += 1
+            return _orig(self, command, *a, **kw)
 
         cls.send_command = wrapped
 
@@ -56,6 +67,8 @@ def main() -> None:
     rows.sort(key=lambda r: -r[1])
     for name, calls, wall in rows:
         print(f"{name:32s} {calls:7d} calls  {wall:7.2f}s build")
+    print(f"{'TOTAL':32s} {sum(r[1] for r in rows):7d} calls  "
+          f"{sum(r[2] for r in rows):7.2f}s build")
 
 
 if __name__ == "__main__":

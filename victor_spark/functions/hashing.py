@@ -7,6 +7,12 @@ driver's value-hash correctness gate can verify the approximate operators
 everything on md5 (identical in both engines) rather than engine-native
 hashes (xxhash64 vs duckdb hash, which differ).
 
+The signature/fingerprint kernels (minhash_signature, band_keys,
+simhash32, hyperplane_bucket) are one SQL template each over a name or
+SQL-expression operand (``vector.sql_operand``): a Column-builder form
+costs one py4j round trip per expression node — hundreds to thousands
+per kernel.
+
 Base hash: h32(s) = first 8 hex chars of md5(s) as an integer in [0, 2^32).
 Derived families: hⱼ(x) = (aⱼ·x + bⱼ) mod p with p = 2^31−1 and odd
 constants aⱼ,bⱼ < p derived from j — the classic Carter-Wegman linear
@@ -20,7 +26,13 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from victor_spark.functions.vector import _col, bind, ColumnOrName
+from victor_spark.functions.vector import (
+    _col,
+    _dlit_sql,
+    bind,
+    ColumnOrName,
+    sql_operand,
+)
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime
 
@@ -67,7 +79,7 @@ def char_shingles(s: ColumnOrName, n: int = 3) -> Column:
     )
 
 
-def word_shingles(s: ColumnOrName, n: int = 3) -> Column:
+def word_shingles(s: str, n: int = 3) -> Column:
     """Distinct word n-grams (space-joined) of a string, as array<string>.
 
     Word shingles discriminate much better than character shingles on
@@ -90,7 +102,9 @@ def word_shingles(s: ColumnOrName, n: int = 3) -> Column:
 
 
 def shingle_hashes(s: ColumnOrName, n: int = 3, unit: str = "char") -> Column:
-    """Distinct 32-bit hashes of the n-grams (char or word) of s."""
+    """Distinct 32-bit hashes of the n-grams (char or word) of s; word
+    n-grams tokenize through :func:`text.tokens`, so ``s`` is then a
+    name or SQL expression."""
     grams = char_shingles(s, n) if unit == "char" else word_shingles(s, n)
     return F.array_distinct(F.transform(grams, lambda g: _md5_32_expr(g)))
 
@@ -99,112 +113,63 @@ def _md5_32_expr(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signature(hashes: ColumnOrName, num_hashes: int = 16, seed: int = 42) -> Column:
+def _minhash_signature_sql(ref: str, num_hashes: int, seed: int) -> str:
+    elems = ",".join(
+        "coalesce(array_min(transform(_mh, _mx -> "
+        f"(_mx * {a} + {b}) % {MERSENNE31})), {MERSENNE31})"
+        for a, b in hash_params(num_hashes, seed)
+    )
+    return f"get(transform(array({ref}), _mh -> array({elems})), 0)"
+
+
+def minhash_signature(hashes: str, num_hashes: int = 16, seed: int = 42) -> Column:
     """MinHash signature: for each hⱼ, min over the element hashes.
 
     array<bigint> of length num_hashes. Empty input → signature of p (the
     hash family's max), keeping the column total.
-
-    A string input (a column NAME — the cached shingle-hash table's hot
-    path) takes the one-parsed-SQL-string fast path: the builder form
-    costs one py4j round trip per expression node (hundreds per
-    signature; guide §7.3 planning-time bottleneck), the parsed string
-    one. Column inputs keep the builder path; the two are pinned equal by
-    tests/test_sketches.py::test_hashing_sql_fast_paths_match_builders.
     """
-    params = hash_params(num_hashes, seed)
-    if isinstance(hashes, str):
-        elems = ",".join(
-            "coalesce(array_min(transform(_mh, _mx -> "
-            f"(_mx * {a} + {b}) % {MERSENNE31})), {MERSENNE31})"
-            for a, b in params
+    return F.expr(_minhash_signature_sql(sql_operand(hashes), num_hashes, seed))
+
+
+def _band_keys_sql(ref: str, bands: int, rows_per_band: int) -> str:
+    keys = ",".join(
+        "concat_ws('_', '{j}', {parts})".format(
+            j=j,
+            parts=",".join(
+                f"CAST({ref}[{j * rows_per_band + r}] AS STRING)"
+                for r in range(rows_per_band)
+            ),
         )
-        return F.expr(
-            f"get(transform(array(`{hashes}`), _mh -> array({elems})), 0)"
-        )
-
-    def _lin(a: int, b: int):
-        return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MERSENNE31)
-
-    def _sig(hs: Column) -> Column:
-        sig = [
-            F.array_min(F.transform(hs, _lin(a, b)))
-            for a, b in params
-        ]
-        return F.array(
-            *[F.coalesce(c, F.lit(MERSENNE31)).alias(f"h{i}") for i, c in enumerate(sig)]
-        )
-
-    return bind(_col(hashes), _sig)
+        for j in range(bands)
+    )
+    return f"array({keys})"
 
 
-def band_keys(sig: ColumnOrName, bands: int, rows_per_band: int) -> Column:
+def band_keys(sig: str, bands: int, rows_per_band: int) -> Column:
     """LSH banding: split the signature into `bands` bands of `rows_per_band`
     and key each band by its joined values. array<string> of length bands;
     element j = 'j:v1_v2_...'. Docs sharing any band key are candidates.
-
-    String input (column name) → one parsed SQL expression (see
-    :func:`minhash_signature`); Column input keeps the builder path.
     """
-    if isinstance(sig, str):
-        keys = ",".join(
-            "concat_ws('_', '{j}', {parts})".format(
-                j=j,
-                parts=",".join(
-                    f"CAST(`{sig}`[{j * rows_per_band + r}] AS STRING)"
-                    for r in range(rows_per_band)
-                ),
-            )
-            for j in range(bands)
-        )
-        return F.expr(f"array({keys})")
-    sig = _col(sig)
-    keys = []
-    for j in range(bands):
-        parts = [F.lit(str(j))] + [
-            sig.getItem(j * rows_per_band + r).cast("string") for r in range(rows_per_band)
-        ]
-        keys.append(F.concat_ws("_", *parts))
-    return F.array(*keys)
+    return F.expr(_band_keys_sql(sql_operand(sig), bands, rows_per_band))
 
 
-def simhash32(token_hashes: ColumnOrName) -> Column:
+def _simhash32_sql(ref: str) -> str:
+    bits = " + ".join(
+        "CASE WHEN (size(filter(_sh, _sx -> (_sx & {m}) != 0)) * 2) > "
+        "size(_sh) THEN CAST({m} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        .format(m=1 << i)
+        for i in range(32)
+    )
+    return f"get(transform(array({ref}), _sh -> CAST(0 AS BIGINT) + {bits}), 0)"
+
+
+def simhash32(token_hashes: str) -> Column:
     """32-bit SimHash over a bag of token hashes (Charikar 2002).
 
     bit i of the fingerprint = 1 iff (count of tokens with bit i set) >
     n_tokens/2. Strict majority in both engines. Returns bigint.
-
-    String input (column name) → one parsed SQL expression (the
-    :func:`minhash_signature` rationale — the builder form is 32 filter
-    lambdas, ~1,000 py4j round trips); Column input keeps the builder.
     """
-    if isinstance(token_hashes, str):
-        bits = " + ".join(
-            "CASE WHEN (size(filter(_sh, _sx -> (_sx & {m}) != 0)) * 2) > "
-            "size(_sh) THEN CAST({m} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-            .format(m=1 << i)
-            for i in range(32)
-        )
-        return F.expr(
-            "get(transform(array(`{h}`), _sh -> "
-            "CAST(0 AS BIGINT) + {bits}), 0)".format(h=token_hashes, bits=bits)
-        )
-
-    def _bit_set(mask: int):
-        return lambda x: x.bitwiseAND(F.lit(mask)) != 0
-
-    def _fold(th: Column) -> Column:
-        n = F.size(th)
-        acc = F.lit(0).cast("long")
-        for i in range(32):
-            ones = F.size(F.filter(th, _bit_set(1 << i)))
-            bit = F.when(ones * 2 > n, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            acc = acc + bit
-        return acc
-
-    return bind(_col(token_hashes), _fold)
+    return F.expr(_simhash32_sql(sql_operand(token_hashes)))
 
 
 def jaccard(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -227,66 +192,30 @@ def hamming32(a: ColumnOrName, b: ColumnOrName) -> Column:
     return F.bit_count(_col(a).bitwiseXOR(_col(b)))
 
 
-def hyperplane_value(j: int, i: Column) -> Column:
-    """Deterministic pseudo-random hyperplane component in (−1, 1).
+def _hyperplane_bucket_sql(ref: str, num_planes: int) -> str:
+    """bit j = sign(v · plane_j) with plane_j[i] = sin(j·12.9898 +
+    i·78.233) — the classic shader-noise formula truncated to its sin()
+    core, so Spark and the SQL oracle (both IEEE-754 double sin) produce
+    bitwise-identical planes without shipping a matrix literal."""
+    planes = " + ".join(
+        "CASE WHEN aggregate(zip_with(_hv, transform(sequence(0, "
+        "size(_hv) - 1), _hi -> sin({off} + CAST(_hi AS DOUBLE) * "
+        "78.233D)), (_hx, _hp) -> _hx * _hp), 0.0D, "
+        "(_ha, _hx) -> _ha + _hx) > 0.0D THEN CAST({m} AS BIGINT) "
+        "ELSE CAST(0 AS BIGINT) END".format(
+            off=_dlit_sql(float(j) * 12.9898), m=1 << j
+        )
+        for j in range(num_planes)
+    )
+    return f"get(transform(array({ref}), _hv -> CAST(0 AS BIGINT) + {planes}), 0)"
 
-    plane_j[i] = sin(j·12.9898 + i·78.233) — the classic shader-noise
-    formula truncated to its sin() core so that Spark and the SQL oracle
-    (both IEEE-754 double sin) produce bitwise-identical planes without
-    shipping a matrix literal.
-    """
-    return F.sin(F.lit(float(j) * 12.9898) + i.cast("double") * F.lit(78.233))
 
-
-def hyperplane_bucket(v: ColumnOrName, num_planes: int = 8) -> Column:
+def hyperplane_bucket(v: str, num_planes: int = 8) -> Column:
     """Random-hyperplane LSH bucket id of a vector: bit j = sign(v·plane_j).
 
     Cosine-similar vectors land in the same bucket with probability
     1 − θ/π per plane (Charikar 2002) — the bucket is a coarse partition key
     for ANN; at 100 TB the bucket column is what the join shuffles on
     instead of the O(n²) cross product.
-
-    String input (column name) → one parsed SQL expression (the
-    :func:`minhash_signature` rationale — the builder form is num_planes
-    aggregate/zip_with/transform chains, hundreds of py4j round trips);
-    Column input keeps the builder path.
     """
-    if isinstance(v, str):
-        from victor_spark.functions.vector import _dlit_sql
-
-        planes = " + ".join(
-            "CASE WHEN aggregate(zip_with(_hv, transform(sequence(0, "
-            "size(_hv) - 1), _hi -> sin({off} + CAST(_hi AS DOUBLE) * "
-            "78.233D)), (_hx, _hp) -> _hx * _hp), 0.0D, "
-            "(_ha, _hx) -> _ha + _hx) > 0.0D THEN CAST({m} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END".format(
-                off=_dlit_sql(float(j) * 12.9898), m=1 << j
-            )
-            for j in range(num_planes)
-        )
-        return F.expr(
-            "get(transform(array(`{v}`), _hv -> "
-            "CAST(0 AS BIGINT) + {planes}), 0)".format(v=v, planes=planes)
-        )
-
-    def _plane(j: int):
-        return lambda i: hyperplane_value(j, i)
-
-    def _buckets(vec: Column) -> Column:
-        acc = F.lit(0).cast("long")
-        for j in range(num_planes):
-            proj = F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.transform(F.sequence(F.lit(0), F.size(vec) - 1), _plane(j)),
-                    lambda x, p: x * p,
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            acc = acc + F.when(proj > 0.0, F.lit(1 << j).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        return acc
-
-    return bind(_col(v), _buckets)
+    return F.expr(_hyperplane_bucket_sql(sql_operand(v), num_planes))

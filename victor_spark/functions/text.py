@@ -1,8 +1,11 @@
 """Text-analysis column functions for the LLM-data-pipeline extension ops.
 
-All native Column expressions (regexp/length/array fns) — these run inside
+All native expressions (regexp/length/array fns) — these run inside
 whole-stage codegen over the `documents` table and scale linearly with a
-100 TB text corpus; there is no Python in any of these paths.
+100 TB text corpus; there is no Python in any of these paths. The token
+kernels (tokens, token_count, quality_score, lang_id, c4_kept_lines) are
+one SQL template each over a name or SQL-expression operand (see
+``vector.sql_operand``).
 
 Regex patterns are kept in the common subset of Java regex (Spark) and RE2
 (DuckDB oracle) — character classes and + quantifiers only.
@@ -15,9 +18,9 @@ from pyspark.sql import functions as F
 
 from victor_spark.functions.vector import (
     _col,
-    _is_simple_name,  # noqa: F401 — canonical impl lives in vector.py
     bind,
     ColumnOrName,
+    sql_operand,
 )
 
 # Tiny per-language marker-word lists for the n-gram/stopword language-ID
@@ -38,29 +41,17 @@ PUNCT_RE = "[^A-Za-z0-9 ]"
 
 
 def _tokens_sql(ref: str) -> str:
-    """SQL source of tokens() over a pre-rendered operand (backticked
-    name or embedded expression) — the same string _quality_score_sql
-    and _lang_id_sql inline."""
     return f"filter(split({ref}, ' '), _t -> _t != '')"
 
 
-def tokens(s: ColumnOrName) -> Column:
-    """Whitespace tokens (empties removed) — array<string>.
-
-    Column NAMES take a one-parsed-SQL fast path (round-12, guide §7.3
-    — ~130 py4j round trips on the builder path, and tokens() is the
-    most-called builder in the catalog); Column inputs keep the builder.
-    """
-    if _is_simple_name(s):
-        return F.expr(_tokens_sql(f"`{s}`"))
-    return F.filter(F.split(_col(s), " "), lambda t: t != "")
+def tokens(s: str) -> Column:
+    """Whitespace tokens (empties removed) — array<string>."""
+    return F.expr(_tokens_sql(sql_operand(s)))
 
 
-def token_count(s: ColumnOrName) -> Column:
+def token_count(s: str) -> Column:
     """Whitespace token count."""
-    if _is_simple_name(s):
-        return F.expr(f"size({_tokens_sql(f'`{s}`')})")
-    return F.size(tokens(s))
+    return F.expr(f"size({_tokens_sql(sql_operand(s))})")
 
 
 def term_counts(t: ColumnOrName) -> Column:
@@ -129,7 +120,17 @@ def term_counts(t: ColumnOrName) -> Column:
     return bind(F.array_sort(t), _with_sorted)
 
 
-def c4_kept_lines(lines: Column) -> Column:
+def _c4_kept_lines_sql(lines: str) -> str:
+    ends = " OR ".join(
+        f"endswith(_l, '{e}')" for e in (".", "!", "?", '."', '!"', '?"')
+    )
+    return (
+        f"filter({lines}, _l -> "
+        f"size({_tokens_sql('_l')}) >= 3 AND ({ends}))"
+    )
+
+
+def c4_kept_lines(lines: str) -> Column:
     """The C4 line-filter predicate (Raffel 2020 §2.2) over an
     ``array<string>`` of lines: keep lines with >= 3 whitespace tokens
     ending in terminal punctuation (``. ! ?`` or their close-quote
@@ -137,18 +138,7 @@ def c4_kept_lines(lines: Column) -> Column:
     by the batch catalog queries (c4_line_filter, crawl_pipeline) and
     the streaming curation topology, so the C4 contract cannot drift
     between planes; the DuckDB oracles restate it literally."""
-    return F.filter(
-        lines,
-        lambda l: (token_count(l) >= 3)
-        & (
-            l.endswith(".")
-            | l.endswith("!")
-            | l.endswith("?")
-            | l.endswith('."')
-            | l.endswith('!"')
-            | l.endswith('?"')
-        ),
-    )
+    return F.expr(_c4_kept_lines_sql(sql_operand(lines)))
 
 
 def word_count(s: ColumnOrName) -> Column:
@@ -160,7 +150,7 @@ def char_count(s: ColumnOrName) -> Column:
     return F.length(_col(s))
 
 
-def avg_token_len(s: ColumnOrName) -> Column:
+def avg_token_len(s: str) -> Column:
     """Mean token length in characters; 0 for empty docs."""
     return bind(
         tokens(s),
@@ -178,7 +168,7 @@ def punct_ratio(s: ColumnOrName) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct.cast("double") / n)
 
 
-def stopword_ratio(s: ColumnOrName) -> Column:
+def stopword_ratio(s: str) -> Column:
     """Fraction of whitespace tokens that are (lowercased) stopwords."""
     def _ratio(t: Column) -> Column:
         hits = F.size(
@@ -191,39 +181,34 @@ def stopword_ratio(s: ColumnOrName) -> Column:
     return bind(tokens(s), _ratio)
 
 
-# _is_simple_name is imported from vector.py (one canonical guard for
-# every SQL fast path in the repo).
-
-# The SQL fast paths below interpolate these constants into single-quoted
+# The SQL templates below interpolate these constants into single-quoted
 # SQL literals verbatim. A future word with an apostrophe ("don't") or a
-# regex with a quote/backslash would break the F.expr parse or silently
-# diverge from the builder path — fail loudly at import time instead
-# (round-11 advice item).
+# regex with a quote/backslash would break the F.expr parse — fail loudly
+# at import time instead.
 assert all(
     "'" not in w and "\\" not in w
     for words in LANG_MARKERS.values()
     for w in words
-), "LANG_MARKERS words must be quote/backslash-free (SQL fast path)"
+), "LANG_MARKERS words must be quote/backslash-free (SQL templates)"
 assert all(
     "'" not in w and "\\" not in w for w in STOPWORDS
-), "STOPWORDS must be quote/backslash-free (SQL fast path)"
+), "STOPWORDS must be quote/backslash-free (SQL templates)"
 assert "'" not in PUNCT_RE and "\\" not in PUNCT_RE, (
-    "PUNCT_RE must be quote/backslash-free (SQL fast path)"
+    "PUNCT_RE must be quote/backslash-free (SQL templates)"
 )
 
 _STOPWORD_IN = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
 
 
-def _quality_score_sql(s: str) -> str:
-    """One-parsed-SQL twin of quality_score's builder tree (round-11,
-    guide §7.3 — the hashing-kernel precedent): same bind() structure,
-    same duplicated subtrees, double literals suffixed D so no decimal
-    types sneak in. Pinned == builder by tests/test_text.py."""
-    toks = f"filter(split(`{s}`, ' '), _t -> _t != '')"
+def _quality_score_sql(ref: str) -> str:
+    """Tokens bind once per row (``_t``; the punctuation ratio reads the
+    operand inside that lambda, so an operand may not itself be named
+    ``_t``); double literals carry the D suffix so no decimal types
+    sneak in."""
     pr = (
-        f"CASE WHEN length(`{s}`) = 0 THEN 0.0D "
-        f"ELSE CAST(size(regexp_extract_all(`{s}`, '{PUNCT_RE}', 0)) AS DOUBLE)"
-        f" / length(`{s}`) END"
+        f"CASE WHEN length({ref}) = 0 THEN 0.0D "
+        f"ELSE CAST(size(regexp_extract_all({ref}, '{PUNCT_RE}', 0)) AS DOUBLE)"
+        f" / length({ref}) END"
     )
     atl = (
         "CASE WHEN size(_t) = 0 THEN 0.0D "
@@ -239,72 +224,28 @@ def _quality_score_sql(s: str) -> str:
     punct_ok = f"CASE WHEN ({pr}) <= 0.2D THEN 1.0D ELSE 0.5D END"
     stop_ok = f"least(({sr}) * 10.0D, 1.0D)"
     body = f"((({len_ok}) + ({tok_ok}) + ({punct_ok}) + ({stop_ok})) / 4.0D)"
-    return f"get(transform(array({toks}), _t -> {body}), 0)"
+    return f"get(transform(array({_tokens_sql(ref)}), _t -> {body}), 0)"
 
 
-def quality_score(s: ColumnOrName) -> Column:
+def quality_score(s: str) -> Column:
     """Heuristic document quality in [0, 1].
 
     Combines length sufficiency, reasonable mean token length, punctuation
     sanity and stopword presence — the standard cheap pre-filter stack for
     pretraining-data curation (C4/Gopher-style rules).
-
-    Column NAMES take a one-parsed-SQL fast path (~1.2k py4j round trips
-    on the builder path); Column inputs keep the builder.
     """
-    if _is_simple_name(s):
-        return F.expr(_quality_score_sql(s))
-    pr = punct_ratio(s)
-
-    def _score(t: Column) -> Column:
-        n_tok = F.size(t).cast("double")
-        atl = F.when(F.size(t) == 0, F.lit(0.0)).otherwise(
-            F.aggregate(t, F.lit(0.0), lambda a, x: a + F.length(x)) / F.size(t)
-        )
-        hits = F.size(
-            F.filter(t, lambda x: F.lower(x).isin(*[F.lit(w) for w in STOPWORDS]))
-        )
-        sr = F.when(F.size(t) == 0, F.lit(0.0)).otherwise(
-            hits.cast("double") / F.size(t)
-        )
-        len_ok = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-        tok_ok = F.when((atl >= 3.0) & (atl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
-        punct_ok = F.when(pr <= 0.2, F.lit(1.0)).otherwise(F.lit(0.5))
-        stop_ok = F.least(sr * F.lit(10.0), F.lit(1.0))
-        return (len_ok + tok_ok + punct_ok + stop_ok) / F.lit(4.0)
-
-    return bind(tokens(s), _score)
+    return F.expr(_quality_score_sql(sql_operand(s)))
 
 
-def _in_markers(markers: tuple[str, ...]):
-    return lambda x: x.isin(*[F.lit(w) for w in markers])
-
-
-def _marker_counts(t: Column) -> Column:
-    """array<int> of marker-word hits per language (LANG_MARKERS order)
-    over a bound lowercased-token variable."""
-    return F.array(
-        *[F.size(F.filter(t, _in_markers(m))) for m in LANG_MARKERS.values()]
+def _lang_id_sql(ref: str) -> str:
+    """Lowercased tokens, then the per-language marker counts, each bind
+    once per row; the argmax is an unrolled CASE chain over the bound
+    counts (``_sc``), so every reference is a slot read — the naive
+    composition is exponential in chain depth."""
+    lowered = (
+        f"get(transform(array({_tokens_sql(ref)}), "
+        f"_t -> transform(_t, _x -> lower(_x))), 0)"
     )
-
-
-def lang_scores(s: ColumnOrName) -> dict[str, Column]:
-    """Marker-word hit count per language over the lowercased tokens."""
-    counts = bind(
-        bind(tokens(s), lambda t: F.transform(t, F.lower)), _marker_counts
-    )
-    return {
-        lang: F.get(counts, i) for i, lang in enumerate(LANG_MARKERS)
-    }
-
-
-def _lang_id_sql(s: str) -> str:
-    """One-parsed-SQL twin of lang_id's builder tree: the same nested
-    binds and the same unrolled argmax when-chains (generated by the
-    same loop, so the chain structure cannot drift). Pinned == builder
-    by tests/test_text.py."""
-    toks = f"filter(split(`{s}`, ' '), _t -> _t != '')"
-    lowered = f"get(transform(array({toks}), _t -> transform(_t, _x -> lower(_x))), 0)"
     counts = ", ".join(
         "size(filter(_lt, _x -> _x IN ("
         + ", ".join(f"'{w}'" for w in m)
@@ -325,34 +266,13 @@ def _lang_id_sql(s: str) -> str:
     return f"get(transform(array({scores}), _sc -> {body}), 0)"
 
 
-def lang_id(s: ColumnOrName) -> Column:
+def lang_id(s: str) -> Column:
     """Predicted language = argmax marker count; 'und' if all zero.
 
     Ties break by the fixed language order en>de>fr>es>zh (strictly-greater
     comparison), identically in the SQL oracle.
-
-    The argmax when-chain references each score several times; scores are
-    bound (see ``bind``) so each reference is a slot read, not a fresh
-    token-scan — the naive composition is exponential in chain depth.
-
-    Column NAMES take a one-parsed-SQL fast path (~1.5k py4j round trips
-    on the builder path); Column inputs keep the builder.
     """
-    if _is_simple_name(s):
-        return F.expr(_lang_id_sql(s))
-    lowered = bind(tokens(s), lambda t: F.transform(t, F.lower))
-
-    def _argmax(sc: Column) -> Column:
-        langs = list(LANG_MARKERS)
-        best_lang = F.lit(langs[0])
-        best_score = F.get(sc, 0)
-        for i, lang in enumerate(langs[1:], start=1):
-            cond = F.get(sc, i) > best_score
-            best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
-            best_score = F.when(cond, F.get(sc, i)).otherwise(best_score)
-        return F.when(best_score > 0, best_lang).otherwise(F.lit("und"))
-
-    return bind(bind(lowered, _marker_counts), _argmax)
+    return F.expr(_lang_id_sql(sql_operand(s)))
 
 
 def fingerprint64(s: ColumnOrName) -> Column:

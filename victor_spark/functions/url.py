@@ -9,8 +9,9 @@ and deliberately nothing else: path case, query order, and tracking
 parameters are site-specific semantics where "normalizing" can merge
 genuinely different resources (the classic over-canonicalization bug).
 
-Pure built-in expressions over ``try_parse_url`` (NULL, never error, on
-malformed input — Spark 4's plain ``parse_url`` throws) — whole-stage
+One SQL template of built-in expressions over ``try_parse_url`` (NULL,
+never error, on malformed input — Spark 4's plain ``parse_url`` throws),
+over a name or SQL-expression operand (``vector.sql_operand``) — whole-stage
 codegen, so at 100 TB the canonical key costs what a projection costs,
 and URL dedup is then the same exact hash groupBy as every other dedup
 family.
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from victor_spark.functions.vector import _is_simple_name, bind
+from victor_spark.functions.vector import bind, sql_operand
 
 _DEFAULT_PORTS = {"http": "80", "https": "443", "ftp": "21"}
 
@@ -33,7 +34,7 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def canonical_url(url) -> Column:
+def canonical_url(url: str) -> Column:
     """Canonical form of a URL column: lowercased scheme and host,
     default ports stripped, fragment dropped, empty path -> ``/``,
     query preserved verbatim (order and tracking params are semantics,
@@ -41,56 +42,19 @@ def canonical_url(url) -> Column:
     never name a distinct crawlable resource, and keeping them would
     split aliases (stated here because it IS a collapse beyond pure
     case/port normalization). Malformed URLs (no scheme/host) return
-    NULL — filter or quarantine, the usual contract.
-
-    Column NAMES take a one-parsed-SQL twin of the builder tree
-    (round-12, guide §7.3 — ~770 py4j round trips on the builder path);
-    Column inputs keep the builder. Equality pinned by
-    tests/test_r12_fastpaths.py."""
-    if _is_simple_name(url):
-        return F.expr(_canonical_url_sql(f"`{url}`"))
-    c = F.col(url) if isinstance(url, str) else url
-    proto = F.lower(F.try_parse_url(c, F.lit("PROTOCOL")))
-    host = F.lower(F.try_parse_url(c, F.lit("HOST")))
-    # HOST excludes the port (it rides the authority), so the explicit
-    # port is extracted from the raw string for the default-port
-    # collapse. Anchored: skip an optional userinfo section (else a
-    # password like 'admin:1234@host' fabricates port 1234) and require
-    # the digits to END the authority (else a bracketed IPv6 literal's
-    # inner digits match).
-    port = F.regexp_extract(
-        c,
-        r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*?:(\d+)(?=[/?#]|$)",
-        1,
-    )
-    default_port = F.coalesce(
-        *[
-            F.when(proto == k, F.lit(v))
-            for k, v in _DEFAULT_PORTS.items()
-        ],
-        F.lit(""),
-    )
-    port_part = F.when(
-        (port != "") & (port != default_port), F.concat(F.lit(":"), port)
-    ).otherwise(F.lit(""))
-    path = F.try_parse_url(c, F.lit("PATH"))
-    path_part = F.when(
-        path.isNull() | (path == ""), F.lit("/")
-    ).otherwise(path)
-    query = F.try_parse_url(c, F.lit("QUERY"))
-    query_part = F.when(
-        query.isNotNull(), F.concat(F.lit("?"), query)
-    ).otherwise(F.lit(""))
-    out = F.concat(proto, F.lit("://"), host, port_part, path_part, query_part)
-    return F.when(proto.isNotNull() & host.isNotNull(), out)
+    NULL — filter or quarantine, the usual contract."""
+    return F.expr(_canonical_url_sql(sql_operand(url)))
 
 
+# HOST excludes the port (it rides the authority), so the explicit port
+# is extracted from the raw string for the default-port collapse.
+# Anchored: skip an optional userinfo section (else a password like
+# 'admin:1234@host' fabricates port 1234) and require the digits to END
+# the authority (else a bracketed IPv6 literal's inner digits match).
 _PORT_RX = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?[^/?#]*?:(\d+)(?=[/?#]|$)"
 
 
 def _canonical_url_sql(ref: str) -> str:
-    """One-parsed-SQL twin of the canonical_url builder tree over a
-    pre-rendered operand: same subtree duplication, same CASE shapes."""
     proto = f"lower(try_parse_url({ref}, 'PROTOCOL'))"
     host = f"lower(try_parse_url({ref}, 'HOST'))"
     port = f"regexp_extract({ref}, {_sql_str(_PORT_RX)}, 1)"
@@ -127,12 +91,8 @@ def _canonical_url_sql(ref: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def robots_rule(prefix, allow) -> Column:
-    """One robots rule as the struct :func:`robots_best_match` orders by:
-    (pattern length, allow-wins-ties rank, pattern, allow). Accepts
-    Python literals or Columns, so rule sets can be plan literals (a
-    handful of rules) or rows of a static host-keyed table (a
-    crawl-scale rule corpus, broadcast-joined).
+def _robots_rule_sql(p: str, a: str) -> str:
+    """The rule struct over pattern SQL ``p`` and allow-flag SQL ``a``.
 
     RFC 9309 §2.2.3 special characters are compiled here, ONCE per rule:
     ``*`` matches any octet sequence and a TRAILING ``$`` anchors the
@@ -140,50 +100,12 @@ def robots_rule(prefix, allow) -> Column:
     RFC's "designates the end" wording). Patterns without specials keep
     ``is_literal=true`` so the hot path stays a plain ``startswith`` —
     the overwhelming majority of real robots lines — and only wildcard
-    rules pay the regex. Precedence length is the RAW pattern's octet
-    length (the RFC ranks by pattern length, specials included).
-
-    PYTHON-LITERAL (str, bool) inputs take a one-parsed-SQL twin of the
-    builder tree (round-12, guide §7.3 — ~560 py4j round trips on the
-    builder path, and rule-set literals build several per query);
-    Column inputs keep the builder."""
-    if isinstance(prefix, str) and isinstance(allow, bool):
-        return F.expr(_robots_rule_sql(prefix, allow))
-    p = F.lit(prefix) if isinstance(prefix, str) else prefix
-    a = F.lit(allow) if isinstance(allow, bool) else allow
-    anchored = p.endswith("$")
-    body = F.when(anchored, F.substring(p, 1, F.length(p) - 1)).otherwise(p)
+    rules pay the regex. Precedence length is the RAW pattern's OCTET
+    length: the RFC ranks by pattern length, specials included, and a
+    multibyte UTF-8 pattern must win the longest-match tiebreak its
+    byte length earns."""
     # escape Java-regex metachars (incl. '*' and '$'), then turn the
     # escaped wildcard back into '.*'
-    escaped = F.regexp_replace(
-        body, F.lit(r"([.\\+?\[\]()^${}|*])"), F.lit(r"\\$1")
-    )
-    rx = F.concat(
-        F.lit("^"),
-        F.replace(escaped, F.lit(r"\*"), F.lit(".*")),
-        F.when(anchored, F.lit("$")).otherwise(F.lit("")),
-    )
-    is_literal = ~(p.contains("*") | anchored)
-    return F.struct(
-        # RFC 9309 §2.2.2 ranks precedence by OCTETS, not characters:
-        # real robots.txt files do carry raw UTF-8 paths, and a
-        # multibyte pattern must win the longest-match tiebreak its
-        # byte length earns (ADVICE r8; F.length counts characters)
-        F.octet_length(p).alias("plen"),
-        a.cast("int").alias("arank"),
-        p.alias("prefix"),
-        a.alias("allow"),
-        is_literal.alias("is_literal"),
-        rx.alias("rx"),
-    )
-
-
-def _robots_rule_sql(prefix: str, allow: bool) -> str:
-    """One-parsed-SQL twin of the robots_rule builder tree for Python
-    literal inputs — same subtree shapes (the constant folding the
-    optimizer does to the builder's literal tree applies identically)."""
-    p = _sql_str(prefix)
-    a = "TRUE" if allow else "FALSE"
     meta_rx = _sql_str(r"([.\\+?\[\]()^${}|*])")
     meta_rep = _sql_str(r"\\$1")
     star = _sql_str(r"\*")
@@ -204,6 +126,25 @@ def _robots_rule_sql(prefix: str, allow: bool) -> str:
         f"'prefix', {p}, 'allow', {a}, "
         f"'is_literal', {is_literal}, 'rx', {rx})"
     )
+
+
+def robots_rule(prefix: str, allow: bool) -> Column:
+    """One literal robots rule as the struct :func:`robots_best_match`
+    orders by: (pattern length, allow-wins-ties rank, pattern, allow,
+    is_literal, compiled regex) — rule sets as plan literals."""
+    if not (isinstance(prefix, str) and isinstance(allow, bool)):
+        raise TypeError(
+            "robots_rule takes a literal (str, bool) rule; pass column "
+            "names or SQL expressions to robots_rule_of instead"
+        )
+    return F.expr(_robots_rule_sql(_sql_str(prefix), "TRUE" if allow else "FALSE"))
+
+
+def robots_rule_of(prefix: str, allow: str) -> Column:
+    """The :func:`robots_rule` struct over pattern and allow-flag
+    COLUMNS (names or SQL expressions) — rows of a static host-keyed
+    rule table, a crawl-scale rule corpus broadcast-joined."""
+    return F.expr(_robots_rule_sql(sql_operand(prefix), sql_operand(allow)))
 
 
 def robots_best_match(path, rules) -> Column:

@@ -1,9 +1,9 @@
-"""Vector kernels as native Column expressions.
+"""Vector kernels as native Spark SQL expressions.
 
 Parity with the reference's similarity kernels (cosine
 /root/reference/src/similarity.rs:1-24, euclidean :26-43) and its 8-bit
 scalar quantizer (/root/reference/src/packed_vector.rs:11-35), re-expressed
-as pyspark.sql.functions higher-order expressions so every kernel runs
+as Spark SQL higher-order expressions so every kernel runs
 JVM-side inside whole-stage codegen — no Python in the hot path, which is
 what keeps a 100 TB scan compute-bound rather than serialization-bound.
 
@@ -24,12 +24,24 @@ def _col(c: ColumnOrName) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def _is_simple_name(s) -> bool:
-    """True for a plain column identifier a SQL fast path may backtick
-    (dots/odd chars fall back to the builder, where F.col resolves them).
-    Canonical home of the guard shared by every one-parsed-SQL fast path
-    (text/zorder re-export it)."""
-    return isinstance(s, str) and s.replace("_", "").isalnum()
+def sql_operand(x: str) -> str:
+    """SQL source for one kernel operand.
+
+    Every kernel below is ONE parsed SQL template (one ``F.expr`` call —
+    a handful of py4j round trips, where the equivalent Column-builder
+    tree costs one per expression node, hundreds per kernel). Operands
+    are therefore SQL, never Columns: a plain identifier such as ``v``
+    renders as a backticked column name; any other string is a SQL
+    expression (``lower(text)``, ``l.vec``, a literal) and renders
+    parenthesized so it binds as one operand wherever the template
+    places it."""
+    if not isinstance(x, str):
+        raise TypeError(
+            f"kernel operands are SQL, not {type(x).__name__}: pass a "
+            "column name ('v') or a SQL expression ('lower(text)') "
+            "instead of a Column"
+        )
+    return f"`{x}`" if x.isidentifier() else f"({x})"
 
 
 def bind(col: ColumnOrName, fn) -> Column:
@@ -45,7 +57,9 @@ def bind(col: ColumnOrName, fn) -> Column:
     ``transform`` binds it to a NamedLambdaVariable: every reference inside
     ``fn`` is then an O(1) slot read and the subtree runs exactly once per
     row, in every context the expression lands in (including optimizer-
-    inferred copies such as explode's non-empty pre-filter).
+    inferred copies such as explode's non-empty pre-filter). The SQL
+    templates below spell the same idiom ``get(transform(array(x),
+    _v -> ...), 0)``.
     """
     return F.get(F.transform(F.array(_col(col)), fn), 0)
 
@@ -70,6 +84,13 @@ def _dlit_sql(x: float) -> str:
     return repr(x) + "D"
 
 
+def lit_doubles_sql(vals) -> str:
+    """SQL source of an array<double> literal (see :func:`lit_doubles`)."""
+    if len(vals) == 0:  # len(), not truthiness: numpy arrays reject bool()
+        return "CAST(array() AS array<double>)"
+    return "array(" + ",".join(_dlit_sql(float(x)) for x in vals) + ")"
+
+
 def lit_doubles(vals) -> Column:
     """array<double> literal built as ONE parsed SQL expression.
 
@@ -80,11 +101,7 @@ def lit_doubles(vals) -> Column:
     the bottleneck). One ``F.expr`` call parses the same CreateArray-of-
     Literals tree in the JVM ~9× faster; resolved trees and values are
     identical."""
-    if len(vals) == 0:  # len(), not truthiness: numpy arrays reject bool()
-        return F.expr("CAST(array() AS array<double>)")
-    return F.expr(
-        "array(" + ",".join(_dlit_sql(float(x)) for x in vals) + ")"
-    )
+    return F.expr(lit_doubles_sql(vals))
 
 
 def lit_doubles_2d(rows) -> Column:
@@ -102,9 +119,21 @@ def lit_doubles_2d(rows) -> Column:
     )
 
 
+# ---------------------------------------------------------------------------
+# Similarity kernels: one SQL template each, over pre-rendered operand SQL
+# ---------------------------------------------------------------------------
+#
+# Operands sit only in argument positions OUTSIDE the templates' lambda
+# bodies, so an operand that names an outer lambda variable can never be
+# captured by a template's own variables.
+
+_NAN = "CAST('NaN' AS DOUBLE)"
+
+
 def _dot_sql(a: str, b: str) -> str:
-    """SQL source of dot()'s exact fold over two pre-rendered operand
-    expressions (backticked names or literal array sources)."""
+    """Σ aᵢ·bᵢ as a sequential left-to-right fold (zip_with + aggregate) —
+    the oracle's evaluation order. A length mismatch pads with null,
+    which poisons the fold to null."""
     return (
         f"aggregate(zip_with({a}, {b}, (_vx, _vy) -> _vx * _vy), "
         f"0.0D, (_vacc, _vx) -> _vacc + _vx)"
@@ -115,138 +144,33 @@ def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
 
-def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Σ aᵢ·bᵢ as a sequential fold (zip_with + aggregate).
-
-    Mirrors /root/reference/src/similarity.rs:10-13 (`dot`). Sequential
-    left-to-right accumulation matches the oracle's evaluation order.
-
-    Column NAMES take a one-parsed-SQL fast path (round-12, guide §7.3
-    — ~250 py4j round trips on the builder path); Column inputs keep the
-    builder. Equality pinned by tests/test_r12_fastpaths.py.
-    """
-    if _is_simple_name(a) and _is_simple_name(b):
-        return F.expr(_dot_sql(f"`{a}`", f"`{b}`"))
-    return F.aggregate(
-        F.zip_with(_col(a), _col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _l2_normalize_sql(a: str) -> str:
+    """The array and its norm each bind to a lambda variable, so the
+    norm's fold runs once per ROW; a zero norm yields NaN components."""
+    return (
+        f"get(transform(array({a}), _la -> "
+        f"get(transform(array({_norm_sql('_la')}), _ln -> "
+        f"transform(_la, _lx -> CASE WHEN _ln = 0.0D THEN {_NAN} "
+        f"ELSE _lx / _ln END)), 0)), 0)"
     )
 
 
-def norm(a: ColumnOrName) -> Column:
-    """L2 norm √Σ aᵢ² (reference similarity.rs:15-17 via dot(a,a))."""
-    if _is_simple_name(a):
-        return F.expr(_norm_sql(f"`{a}`"))
-    return F.sqrt(dot(a, a))
-
-
-def l2_normalize(a: ColumnOrName) -> Column:
-    """v / ‖v‖ in one pass: the array and its norm each bind to a lambda
-    variable, so the norm's fold runs once per ROW — pre-normalizing a
-    corpus turns every downstream pairwise cosine into a single dot
-    (vs dot + two norm folds per pair).
-
-    Zero-norm inputs yield NaN components — the same contract as
-    ``cosine`` (reference's IEEE division, similarity.rs:10-22); under
-    Spark 4's default ANSI mode the bare x/0 would otherwise be a hard
-    DIVIDE_BY_ZERO job failure.
-
-    Column NAMES take a one-parsed-SQL twin of the nested binds (~560
-    py4j round trips on the builder path)."""
-    if _is_simple_name(a):
-        return F.expr(
-            "get(transform(array(`{a}`), _la -> "
-            "get(transform(array({n}), _ln -> "
-            "transform(_la, _lx -> CASE WHEN _ln = 0.0D THEN "
-            "CAST('NaN' AS DOUBLE) ELSE _lx / _ln END)), 0)), 0)".format(
-                a=a, n=_norm_sql("_la")
-            )
-        )
-    return bind(
-        _col(a),
-        lambda arr: bind(
-            norm(arr),
-            lambda n: F.transform(
-                arr,
-                lambda x: F.when(n == 0.0, F.lit(float("nan"))).otherwise(x / n),
-            ),
-        ),
+def _cosine_sql(a: str, b: str) -> str:
+    na, nb = _norm_sql(a), _norm_sql(b)
+    return (
+        f"CASE WHEN ({na} * {nb}) = 0.0D THEN {_NAN} "
+        f"ELSE {_dot_sql(a, b)} / ({na} * {nb}) END"
     )
 
 
-def cosine(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Cosine similarity dot/(‖a‖‖b‖) (reference similarity.rs:5-24).
-
-    The reference errors on length mismatch (similarity.rs:7-9); zip_with
-    pads with null which poisons the aggregate to null — callers that want
-    strict behavior use `check_uniform_dim` at ingest instead.
-
-    Zero-norm inputs score NaN, matching the reference's IEEE f32 division
-    (similarity.rs:10-22) — under Spark 4's default ANSI mode the bare 0/0
-    would instead be a hard DIVIDE_BY_ZERO job failure (hypothesis-caught:
-    a subnormal-only vector's norm underflows to exactly 0.0). The caller's
-    NaN policy (VectorIndex.search strict/drop) then decides.
-
-    Column NAMES take a one-parsed-SQL fast path (~900 py4j round trips
-    on the builder path — the heaviest composite builder in the repo).
-    """
-    if _is_simple_name(a) and _is_simple_name(b):
-        na, nb = _norm_sql(f"`{a}`"), _norm_sql(f"`{b}`")
-        return F.expr(
-            f"CASE WHEN ({na} * {nb}) = 0.0D THEN CAST('NaN' AS DOUBLE) "
-            f"ELSE {_dot_sql(f'`{a}`', f'`{b}`')} / ({na} * {nb}) END"
-        )
-    denom = norm(a) * norm(b)
-    return F.when(denom == 0.0, F.lit(float("nan"))).otherwise(dot(a, b) / denom)
-
-
-def cosine_to_literal(v: ColumnOrName, q: list[float]) -> Column:
-    """Cosine of each row against one fixed query vector.
-
-    The query's norm is folded to a Python-side constant so the per-row work
-    is one fused dot+norm pass — this is the kernel of the search hot path
-    (reference db.rs:250 scoring loop) and stays fully inside codegen.
-    """
+def _cosine_to_literal_sql(v: str, q: list[float]) -> str:
+    """The query's norm folds to a Python-side constant, so the per-row
+    work is one dot plus one norm fold."""
     qnorm = sum(x * x for x in q) ** 0.5
-    # Spark 4 runs ANSI SQL by default, so 0/0 would be DIVIDE_BY_ZERO
-    # instead of the reference's IEEE NaN (f32 division, similarity.rs:
-    # 10-22); restore NaN explicitly so zero-norm vectors score NaN and
-    # the caller's NaN policy (VectorIndex.search strict/drop) decides.
-    if _is_simple_name(v):
-        # one parsed SQL string: the query literal embeds via _dlit_sql
-        # (bit-identical to F.lit) and the whole scoring kernel — the ANN
-        # hot path — costs one py4j round trip to build
-        arr = (
-            "array(" + ",".join(_dlit_sql(float(x)) for x in q) + ")"
-            if len(q)
-            else "CAST(array() AS array<double>)"
-        )
-        denom_sql = f"({_norm_sql(f'`{v}`')} * {_dlit_sql(float(qnorm))})"
-        return F.expr(
-            f"CASE WHEN {denom_sql} = 0.0D THEN CAST('NaN' AS DOUBLE) "
-            f"ELSE {_dot_sql(f'`{v}`', arr)} / {denom_sql} END"
-        )
-    denom = norm(v) * F.lit(qnorm)
-    return F.when(denom == 0.0, F.lit(float("nan"))).otherwise(
-        dot(v, lit_doubles(q)) / denom
-    )
-
-
-def euclidean(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Euclidean distance √Σ(aᵢ−bᵢ)² (reference similarity.rs:26-43).
-
-    Used by projected-mode search — where, unlike the reference's
-    farthest-k bug (SURVEY.md §2.3), our callers order ASCENDING.
-    """
-    if _is_simple_name(a) and _is_simple_name(b):
-        return F.expr(_euclid_sql(f"`{a}`", f"`{b}`"))
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_col(a), _col(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    denom = f"({_norm_sql(v)} * {_dlit_sql(float(qnorm))})"
+    return (
+        f"CASE WHEN {denom} = 0.0D THEN {_NAN} "
+        f"ELSE {_dot_sql(v, lit_doubles_sql(q))} / {denom} END"
     )
 
 
@@ -257,16 +181,58 @@ def _euclid_sql(a: str, b: str) -> str:
     )
 
 
-def euclidean_to_literal(v: ColumnOrName, q: list[float]) -> Column:
+def dot(a: str, b: str) -> Column:
+    """Σ aᵢ·bᵢ (reference similarity.rs:10-13)."""
+    return F.expr(_dot_sql(sql_operand(a), sql_operand(b)))
+
+
+def norm(a: str) -> Column:
+    """L2 norm √Σ aᵢ² (reference similarity.rs:15-17 via dot(a,a))."""
+    return F.expr(_norm_sql(sql_operand(a)))
+
+
+def l2_normalize(a: str) -> Column:
+    """v / ‖v‖ in one pass — pre-normalizing a corpus turns every
+    downstream pairwise cosine into a single dot. Zero-norm inputs yield
+    NaN components, the same contract as ``cosine``."""
+    return F.expr(_l2_normalize_sql(sql_operand(a)))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity dot/(‖a‖‖b‖) (reference similarity.rs:5-24).
+
+    The reference errors on length mismatch (similarity.rs:7-9); here the
+    mismatch scores null — callers that want strict behavior use
+    `check_uniform_dim` at ingest instead.
+
+    Zero-norm inputs score NaN, matching the reference's IEEE f32 division
+    (similarity.rs:10-22) — under Spark 4's default ANSI mode the bare 0/0
+    would instead be a hard DIVIDE_BY_ZERO job failure (hypothesis-caught:
+    a subnormal-only vector's norm underflows to exactly 0.0). The caller's
+    NaN policy (VectorIndex.search strict/drop) then decides.
+    """
+    return F.expr(_cosine_sql(sql_operand(a), sql_operand(b)))
+
+
+def cosine_to_literal(v: str, q: list[float]) -> Column:
+    """Cosine of each row against one fixed query vector — the kernel of
+    the search hot path (reference db.rs:250 scoring loop); the query
+    embeds as a bit-exact literal and zero norms score NaN."""
+    return F.expr(_cosine_to_literal_sql(sql_operand(v), q))
+
+
+def euclidean(a: str, b: str) -> Column:
+    """Euclidean distance √Σ(aᵢ−bᵢ)² (reference similarity.rs:26-43).
+
+    Used by projected-mode search — where, unlike the reference's
+    farthest-k bug (SURVEY.md §2.3), our callers order ASCENDING.
+    """
+    return F.expr(_euclid_sql(sql_operand(a), sql_operand(b)))
+
+
+def euclidean_to_literal(v: str, q: list[float]) -> Column:
     """Euclidean distance of each row to one fixed query vector."""
-    if _is_simple_name(v):
-        arr = (
-            "array(" + ",".join(_dlit_sql(float(x)) for x in q) + ")"
-            if len(q)
-            else "CAST(array() AS array<double>)"
-        )
-        return F.expr(_euclid_sql(f"`{v}`", arr))
-    return euclidean(v, lit_doubles(q))
+    return F.expr(_euclid_sql(sql_operand(v), lit_doubles_sql(q)))
 
 
 # ---------------------------------------------------------------------------
@@ -332,35 +298,3 @@ def dequantize(quant: ColumnOrName, qmin: ColumnOrName, qmax: ColumnOrName) -> C
 def dim(v: ColumnOrName) -> Column:
     """Vector dimension."""
     return F.size(_col(v))
-
-
-def cosine_to_literal_pandas(v: ColumnOrName, q: list[float]):
-    """Vectorized (Arrow/numpy) cosine against a fixed query vector — the
-    Pandas-UDF alternative to the native ``cosine_to_literal`` fold.
-
-    The native expression wins below a few hundred dims (it never leaves
-    the JVM); at the reference's 1536 dims the Arrow batch transfer is
-    amortized by one numpy matmul per batch instead of per-element
-    interpreted folds — the same crossover that makes pca.py auto-pick its
-    matmul form for large models. Results are IEEE double ops in a
-    different summation order, so scores can differ from the fold by ulps:
-    callers that hash-compare must stay on the native kernel.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    qv = np.asarray(q, dtype=np.float64)
-    qn = float(np.sqrt(qv @ qv))
-
-    def _cos(col):
-        m = np.stack(col.to_numpy())  # (batch, d)
-        num = m @ qv
-        den = np.sqrt((m * m).sum(axis=1)) * qn
-        with np.errstate(invalid="ignore", divide="ignore"):
-            return pd.Series(num / den)
-
-    # `from __future__ import annotations` stringifies hints, which the
-    # pandas_udf signature parser rejects — set them as live objects
-    _cos.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    return pandas_udf(_cos, "double")(_col(v))

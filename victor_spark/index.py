@@ -241,10 +241,11 @@ class VectorIndex:
         from pyspark.sql import Window
 
         from victor_spark.functions.text import tokens as _tokens
+        from victor_spark.functions.url import _sql_str
 
         cand = self.search_text(text, k=fetch_k, tags=tags)
-        qt = F.array_distinct(_tokens(F.lit(text.lower())))
-        ct = F.array_distinct(_tokens(F.lower(F.col("content"))))
+        qt = F.array_distinct(_tokens(_sql_str(text.lower())))
+        ct = F.array_distinct(_tokens("lower(content)"))
         denom = F.size(F.array_union(ct, qt))
         jac = F.when(denom == 0, F.lit(0.0)).otherwise(
             F.size(F.array_intersect(ct, qt)) / denom
@@ -275,6 +276,7 @@ class VectorIndex:
         from pyspark.sql import Window
 
         from victor_spark.functions.text import tokens as _tokens
+        from victor_spark.functions.url import _sql_str
 
         ascending = self._load_model() is not None  # euclidean in projected mode
         vec = self.search_text(text, k=fetch_k, tags=tags)
@@ -285,8 +287,8 @@ class VectorIndex:
             "id", "content", "tags", "vec_rank"
         )
 
-        qt = F.array_distinct(_tokens(F.lit(text.lower())))
-        ct = F.array_distinct(_tokens(F.lower(F.col("content"))))
+        qt = F.array_distinct(_tokens(_sql_str(text.lower())))
+        ct = F.array_distinct(_tokens("lower(content)"))
         denom = F.size(F.array_union(ct, qt))
         jac = F.when(denom == 0, F.lit(0.0)).otherwise(
             F.size(F.array_intersect(ct, qt)) / denom

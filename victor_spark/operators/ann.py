@@ -22,6 +22,7 @@ from victor_spark.functions.vector import (
     cosine,
     cosine_to_literal,
     euclidean_to_literal,
+    sql_operand,
     to_double_array,
 )
 from victor_spark.operators.topk import topk, topk_per_group
@@ -35,7 +36,7 @@ def brute_force_topk(df: DataFrame, vec_col: str, query: list[float], k: int = 1
     distance (nearest-k — the reference's projected mode minus its
     farthest-k bug, SURVEY.md §2.3).
     """
-    v = to_double_array(vec_col)
+    v = f"CAST({sql_operand(vec_col)} AS array<double>)"
     if metric == "cosine":
         return topk(df, cosine_to_literal(v, query), k, ascending=False)
     if metric == "euclidean":
@@ -66,7 +67,8 @@ def batch_topk(corpus: DataFrame, queries: DataFrame, corpus_id: str, corpus_vec
 
 def bucketed_corpus(df: DataFrame, vec_col: str, num_planes: int = 8) -> DataFrame:
     """Attach the LSH `bucket` column; at scale, persist partitioned by it."""
-    return df.withColumn("bucket", H.hyperplane_bucket(to_double_array(vec_col), num_planes))
+    v = f"CAST({sql_operand(vec_col)} AS array<double>)"
+    return df.withColumn("bucket", H.hyperplane_bucket(v, num_planes))
 
 
 def lsh_topk(df: DataFrame, vec_col: str, query: list[float], k: int = 10,

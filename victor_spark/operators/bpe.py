@@ -22,13 +22,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from victor_spark.functions.text import tokens
+from victor_spark.functions.vector import sql_operand
 
 
 def word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     """(word, n) over lowercased whitespace tokens — the one corpus-sized
     aggregation of BPE training."""
     return (
-        docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
+        docs.select(F.explode(tokens(f"lower({sql_operand(text_col)})")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from victor_spark.functions import text as T
+from victor_spark.functions.vector import sql_operand
 
 
 def chunk_tokens(
@@ -36,7 +37,7 @@ def chunk_tokens(
         raise ValueError(f"need 0 <= overlap < chunk_size, got {overlap}/{chunk_size}")
     stride = chunk_size - overlap
     d = docs.select(
-        F.col(id_col), T.tokens(F.lower(F.col(text_col))).alias("_t")
+        F.col(id_col), T.tokens(f"lower({sql_operand(text_col)})").alias("_t")
     ).withColumn("_n", F.size("_t"))
     # ceil((n - size) / stride) as (n - size + stride - 1) div stride
     extra = F.floor(

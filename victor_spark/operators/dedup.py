@@ -50,15 +50,6 @@ def exact_duplicates(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     )
 
 
-def with_minhash(df: DataFrame, content_col: str, num_hashes: int = 16,
-                 shingle_n: int = 3, unit: str = "word") -> DataFrame:
-    """Attach `sig` (MinHash signature array<bigint>) to each row."""
-    return df.withColumn(
-        "sig",
-        H.minhash_signature(H.shingle_hashes(content_col, shingle_n, unit), num_hashes),
-    )
-
-
 # Live shingle-hash caches (bounded: each EVICTING build clears all
 # previous; an operator may hold at most two — see incremental dedup's
 # corpus+batch pair). Bounding this matters on a long-lived session —
@@ -387,9 +378,7 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
     """
     from victor_spark.sources.tables import fan_out
 
-    # name the double array first so hyperplane_bucket takes its
-    # one-parsed-SQL fast path (round-11: the builder form here cost
-    # ~5.6k py4j round trips per build); same value, slot-read reference
+    # name the double array first: the bucket kernel then reads a slot
     v = fan_out(df).select(
         F.col(id_col).alias("doc"),
         to_double_array(vec_col).alias("vec"),
@@ -400,7 +389,7 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
         .select(
             F.col("l.doc").alias("id_a"),
             F.col("r.doc").alias("id_b"),
-            cosine(F.col("l.vec"), F.col("r.vec")).alias("cos_sim"),
+            cosine("l.vec", "r.vec").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -448,7 +437,14 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     """
     import math
 
-    from victor_spark.functions.vector import bind, dot, l2_normalize, norm
+    from victor_spark.functions.vector import (
+        _dlit_sql,
+        _dot_sql,
+        dot,
+        l2_normalize,
+        lit_doubles_sql,
+        norm,
+    )
     from victor_spark.sources.tables import fan_out
 
     v_all = fan_out(df).select(
@@ -502,44 +498,29 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                 f"semantic_dedup: centroid cell {r['cell']} has zero norm"
             )
         ncents.append((int(r["cell"]), [x / n for x in cv]))
-    from victor_spark.functions.vector import lit_doubles
-
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(cell).cast("long").alias("cell"),
-                lit_doubles(ncv).alias("ncv"),
-            )
-            for cell, ncv in ncents
-        ]
-    )
+    cent_arr = "array(" + ",".join(
+        f"named_struct('cell', CAST({cell} AS BIGINT), "
+        f"'ncv', {lit_doubles_sql(ncv)})"
+        for cell, ncv in ncents
+    ) + ")"
     # fold semantics == max_by(cell, struct(cs, -cell)): strictly-higher
     # cosine wins; an exactly-equal cosine wins only with a lower cell
     # id. The init sentinel (-2.0) sits below any unit-vector cosine, so
     # the first centroid always replaces it — no NULL three-valued logic.
-    init = F.struct(
-        F.lit(-2.0).alias("cs"), F.lit(-(2 ** 62)).cast("long").alias("cell")
+    # The row's vector and each centroid's cosine bind to lambda
+    # variables, so every reference is a slot read.
+    init = (
+        f"named_struct('cs', {_dlit_sql(-2.0)}, "
+        f"'cell', CAST({-(2 ** 62)} AS BIGINT))"
     )
-    assigned = v.select(
-        "doc",
-        "nv",
-        bind(
-            F.col("nv"),
-            lambda nv: F.aggregate(
-                cent_arr,
-                init,
-                lambda acc, c: bind(
-                    dot(nv, c["ncv"]),
-                    lambda cs: F.when(
-                        (cs > acc["cs"])
-                        | ((cs == acc["cs"]) & (c["cell"] < acc["cell"])),
-                        F.struct(cs.alias("cs"), c["cell"].alias("cell")),
-                    ).otherwise(acc),
-                ),
-                lambda a: a["cell"],
-            ),
-        ).alias("cell"),
+    fold = (
+        f"get(transform(array(`nv`), _snv -> aggregate({cent_arr}, {init}, "
+        f"(_sacc, _sc) -> get(transform(array({_dot_sql('_snv', '_sc.ncv')}), "
+        "_scs -> CASE WHEN (_scs > _sacc.cs) OR ((_scs = _sacc.cs) AND "
+        "(_sc.cell < _sacc.cell)) THEN named_struct('cs', _scs, 'cell', "
+        "_sc.cell) ELSE _sacc END), 0), _sa -> _sa.cell)), 0)"
     )
+    assigned = v.select("doc", "nv", F.expr(fold).alias("cell"))
     # assigned feeds THREE consumers (both sides of the within-cluster
     # pair join + the final report join); without a reuse barrier
     # Catalyst re-runs the scan -> normalize -> k-way centroid fold
@@ -554,7 +535,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
         r, (F.col("l.cell") == F.col("r.cell")) & (F.col("l.doc") < F.col("r.doc"))
     ).select(
         F.col("r.doc").alias("doc"),
-        dot(F.col("l.nv"), F.col("r.nv")).alias("_s"),
+        dot("l.nv", "r.nv").alias("_s"),
     )
     worst = sims.groupBy("doc").agg(F.max("_s").alias("_max_sim"))
     out = (

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from victor_spark.functions import hashing as H
-from victor_spark.functions.vector import _dlit_sql
+from victor_spark.functions.vector import _cosine_sql, lit_doubles_sql
 from victor_spark.operators import pq as PQ
 
 
@@ -110,37 +110,21 @@ def assign_cells(df: DataFrame, id_col: str, vec_col: str,
     NaN, true under Spark's SQL ordering) wins only with a lower cell id;
     NULL cosines skip (the ``when`` condition is NULL → keep acc), just
     as max_by ignores NULL keys. The per-element cosine is the
-    ``functions.vector.cosine`` tree replicated verbatim in SQL, so
-    scores are bit-identical to the crossJoin plan's. The
+    ``functions.vector.cosine`` SQL template itself, so scores are
+    bit-identical to the crossJoin plan's. The
     init sentinel -2.0 sits below any real cosine, and NaN (zero-norm
     rows) compares greater than it under Spark's ordering, so the first
     centroid always replaces the sentinel — no NULL three-valued logic.
     """
     # One parsed SQL expression (the PQ.encode rationale — the builder
-    # form's nested binds/lambdas cost ~0.3 s of py4j per call). The
-    # string replicates the builder tree exactly: the same cosine
-    # expression (norm·norm == 0 → NaN guard, denom subtree embedded in
-    # both CASE branches just as the Column form embeds it), the same
-    # bind idiom around v and around each element's cosine, the same
-    # fold update — pinned by the fold-vs-crossJoin differential test.
-    def _arr(vs):
-        return "array(" + ",".join(_dlit_sql(float(x)) for x in vs) + ")"
-
+    # form's nested binds/lambdas cost ~0.3 s of py4j per call), with v
+    # and each element's cosine bound to lambda variables.
     cents_sql = "array(" + ",".join(
-        "named_struct('cell', CAST({c} AS BIGINT), 'cv', {cv})".format(
-            c=int(cell), cv=_arr(cv)
-        )
+        f"named_struct('cell', CAST({int(cell)} AS BIGINT), "
+        f"'cv', {lit_doubles_sql(cv)})"
         for cell, cv in sorted(centroids.items())
     ) + ")"
-    _dot = ("aggregate(zip_with({a}, {b}, (_zx, _zy) -> _zx * _zy), "
-            "0.0D, (_zacc, _zx) -> _zacc + _zx)")
-    _norm = "sqrt(" + _dot + ")"
-    denom = (_norm.format(a="_av", b="_av")
-             + " * " + _norm.format(a="_ac.cv", b="_ac.cv"))
-    cos_sql = (
-        "CASE WHEN ({denom}) = 0.0D THEN CAST('NaN' AS DOUBLE) "
-        "ELSE {dot} / ({denom}) END"
-    ).format(denom=denom, dot=_dot.format(a="_av", b="_ac.cv"))
+    cos_sql = _cosine_sql("_av", "_ac.cv")
     assign_sql = (
         "get(transform(array(`{v}`), _av -> aggregate({cents}, "
         "named_struct('cs', -2.0D, 'cell', CAST({init_cell} AS BIGINT)), "
@@ -184,9 +168,6 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, query_id,
     # and lambdas cost ~2,100 py4j round trips per call): v binds once,
     # the CASE picks the probed cell's centroid, no ELSE (non-probed rows
     # were filtered; a stray cell yields NULL, as the when-chain did).
-    def _arr_sql(vs):
-        return "array(" + ",".join(_dlit_sql(float(x)) for x in vs) + ")"
-
     resid_sql = (
         "get(transform(array(`{v}`), _iv -> CASE {whens} END), 0)"
     ).format(
@@ -194,7 +175,7 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, query_id,
         whens=" ".join(
             "WHEN `cell` = {c} THEN zip_with(_iv, {cv}, "
             "(_ix, _iy) -> _ix - _iy)".format(
-                c=int(c), cv=_arr_sql(centroids[c])
+                c=int(c), cv=lit_doubles_sql(centroids[c])
             )
             for c in probed
         ),
@@ -214,7 +195,7 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, query_id,
 
     def _lut_score_sql(lut):
         return "get(transform(array({lut}), _pql -> {terms}), 0)".format(
-            lut="array(" + ",".join(_arr_sql(row) for row in lut) + ")",
+            lut="array(" + ",".join(lit_doubles_sql(row) for row in lut) + ")",
             terms=" + ".join(
                 f"element_at(element_at(_pql, {j + 1}), "
                 f"element_at(`pq_code`, {j + 1}))"

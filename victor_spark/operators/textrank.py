@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from victor_spark.functions import text as T
+from victor_spark.functions.vector import sql_operand
 
 
 # internal column names the pipeline derives; an id_col colliding with
@@ -43,7 +44,7 @@ def cooccurrence_edges(docs: DataFrame, id_col: str, text_col: str) -> DataFrame
     """Weighted undirected adjacency edges: (id, u, v, w) both directions."""
     _check_id_col(id_col)
     d = docs.select(
-        F.col(id_col), T.tokens(F.lower(F.col(text_col))).alias("t")
+        F.col(id_col), T.tokens(f"lower({sql_operand(text_col)})").alias("t")
     )
     pairs = F.when(
         F.size("t") >= 2,
@@ -175,7 +176,7 @@ def textrank_keywords(
     _check_id_col(id_col)
     id_type = docs.schema[id_col].dataType.simpleString()
     d = docs.select(
-        F.col(id_col), T.tokens(F.lower(F.col(text_col))).alias("t")
+        F.col(id_col), T.tokens(f"lower({sql_operand(text_col)})").alias("t")
     )
 
     def farm(batches):

@@ -13,7 +13,9 @@ Delta/Iceberg, built here from plain column expressions).
 Determinism contract: ranks and the interleave are INTEGER arithmetic
 end-to-end (`((x - xmin) * (2^bits - 1)) div (xmax - xmin)`, then
 div/mod bit extraction) — no float scaling, so the key is reproducible
-across engines and a DuckDB oracle replays it exactly.
+across engines and a DuckDB oracle replays it exactly. Both kernels are
+one SQL template each over name or SQL-expression operands
+(``vector.sql_operand``).
 """
 
 from __future__ import annotations
@@ -21,11 +23,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from victor_spark.functions.text import _is_simple_name
+from victor_spark.functions.vector import sql_operand
 
 
-def int_rank(x: Column | str, xmin: Column | str, xmax: Column | str,
-             bits: int = 16) -> Column:
+def _int_rank_sql(x: str, xmin: str, xmax: str, bits: int) -> str:
+    top = (1 << bits) - 1
+    span = f"CAST(({xmax} - {xmin}) AS BIGINT)"
+    return (
+        f"CASE WHEN {span} = 0 THEN CAST(0 AS BIGINT) "
+        f"ELSE CAST(FLOOR((CAST({x} AS BIGINT) - CAST({xmin} AS BIGINT))"
+        f" * {top} / {span}) AS BIGINT) END"
+    )
+
+
+def int_rank(x: str, xmin: str, xmax: str, bits: int = 16) -> Column:
     """Scale an integer column into [0, 2^bits) — exact integer math.
 
     ``(x - xmin) * (2^bits - 1) div (xmax - xmin)``; a constant column
@@ -35,65 +46,28 @@ def int_rank(x: Column | str, xmin: Column | str, xmax: Column | str,
     exact while ``(xmax - xmin) * 2^bits < 2^53`` — holds for any
     bits=16 column with span < ~1.4e11 (every column here); pre-bucket
     wider domains (e.g. epoch-micros timestamps → minutes) first.
-
-    Column NAMES take a one-parsed-SQL-string fast path (round-11,
-    guide §7.3 — the hashing-kernel precedent): identical expression,
-    pinned by ``tests/test_zorder.py``'s differential test; Column
-    inputs keep the builder path.
     """
-    if _is_simple_name(x) and _is_simple_name(xmin) and _is_simple_name(xmax):
-        # simple identifiers only — dotted/odd names fall through to the
-        # builder, where F.col resolves them (same guard as quality_score)
-        top = (1 << bits) - 1
-        span = f"CAST((`{xmax}` - `{xmin}`) AS BIGINT)"
-        return F.expr(
-            f"CASE WHEN {span} = 0 THEN CAST(0 AS BIGINT) "
-            f"ELSE CAST(FLOOR((CAST(`{x}` AS BIGINT) - CAST(`{xmin}` AS BIGINT))"
-            f" * {top} / {span}) AS BIGINT) END"
-        )
-    x, xmin, xmax = F.col(x) if isinstance(x, str) else x, \
-        F.col(xmin) if isinstance(xmin, str) else xmin, \
-        F.col(xmax) if isinstance(xmax, str) else xmax
-    top = F.lit((1 << bits) - 1)
-    span = (xmax - xmin).cast("long")
-    return F.when(span == 0, F.lit(0).cast("long")).otherwise(
-        F.floor((x.cast("long") - xmin.cast("long")) * top / span).cast("long")
-    )
+    return F.expr(_int_rank_sql(
+        sql_operand(x), sql_operand(xmin), sql_operand(xmax), bits
+    ))
 
 
-def morton_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:
+def _morton_key_sql(x: str, y: str, bits: int) -> str:
+    return "(" + ") + (".join(
+        f"(CAST(FLOOR(({x} / {1 << i})) AS BIGINT) % 2) * {1 << (2 * i)}"
+        f" + (CAST(FLOOR(({y} / {1 << i})) AS BIGINT) % 2)"
+        f" * {1 << (2 * i + 1)}"
+        for i in range(bits)
+    ) + ")"
+
+
+def morton_key(x: str, y: str, bits: int = 16) -> Column:
     """Bit-interleave two ranks in [0, 2^bits) into one 2·bits-bit key.
 
     Bit i of x lands at position 2i, bit i of y at 2i+1 — one codegen
     expression of 2·bits div/mod terms, no UDF.
-
-    Column NAMES take the one-parsed-SQL fast path (the int_rank note);
-    the builder form costs ~2·bits·6 py4j round trips per call.
     """
-    if _is_simple_name(x) and _is_simple_name(y):
-        terms = []
-        for i in range(bits):
-            terms.append(
-                f"(CAST(FLOOR((`{x}` / {1 << i})) AS BIGINT) % 2) * {1 << (2 * i)}"
-                f" + (CAST(FLOOR((`{y}` / {1 << i})) AS BIGINT) % 2)"
-                f" * {1 << (2 * i + 1)}"
-            )
-        return F.expr("(" + ") + (".join(terms) + ")")
-    # mixed str/Column args land here: coerce names via F.col BEFORE the
-    # builder loop — a bare str would otherwise reach Column.__rtruediv__
-    # and be treated as a STRING LITERAL (silent NULL keys / ANSI cast
-    # failure), the round-11 advice item
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-    terms = []
-    for i in range(bits):
-        xbit = (F.floor(x / F.lit(1 << i)).cast("long") % 2) * F.lit(1 << (2 * i))
-        ybit = (F.floor(y / F.lit(1 << i)).cast("long") % 2) * F.lit(1 << (2 * i + 1))
-        terms.append(xbit + ybit)
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    return F.expr(_morton_key_sql(sql_operand(x), sql_operand(y), bits))
 
 
 def zorder_frame(
@@ -113,8 +87,8 @@ def zorder_frame(
         )
     )
     out = df.crossJoin(b)
-    xs = int_rank(F.col(x_col), F.col("_xmin"), F.col("_xmax"), bits)
-    ys = int_rank(F.col(y_col), F.col("_ymin"), F.col("_ymax"), bits)
+    xs = _int_rank_sql(sql_operand(x_col), "_xmin", "_xmax", bits)
+    ys = _int_rank_sql(sql_operand(y_col), "_ymin", "_ymax", bits)
     return out.withColumn(key_col, morton_key(xs, ys, bits)).drop(
         "_xmin", "_xmax", "_ymin", "_ymax"
     )

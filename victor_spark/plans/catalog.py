@@ -31,11 +31,12 @@ from victor_spark.functions import hashing as H
 from victor_spark.functions import text as T
 from victor_spark.functions.html import sql_normalize_ws
 from victor_spark.functions.vector import (
+    _dlit_sql,
     bind,
     dequantize,
     dot,
     euclidean,
-    lit_doubles,
+    lit_doubles_sql,
     norm,
     quantize,
     to_double_array,
@@ -967,7 +968,7 @@ def _ivf_assign_map_side(e, cents):
     construction is hundreds of py4j round trips per call); equality with
     the Column-builder fold is pinned by
     tests/test_ann.py::test_ivf_assign_sql_matches_builder_reference."""
-    from victor_spark.functions.vector import _dlit_sql
+    from victor_spark.functions.vector import _dot_sql, _norm_sql
 
     if not cents:
         # the crossJoin form yielded an EMPTY frame with no centroids
@@ -975,20 +976,14 @@ def _ivf_assign_map_side(e, cents):
             F.lit(False)
         )
     cents_sql = "array(" + ",".join(
-        "named_struct('cell', CAST({c} AS BIGINT), 'cv', array({cv}), "
-        "'cn', {cn})".format(
-            c=int(cell),
-            cv=",".join(_dlit_sql(float(x)) for x in cv),
-            cn=_dlit_sql(float(cn)),
-        )
+        f"named_struct('cell', CAST({int(cell)} AS BIGINT), "
+        f"'cv', {lit_doubles_sql(cv)}, 'cn', {_dlit_sql(float(cn))})"
         for cell, cv, cn in cents
     ) + ")"
     # per-element score replays dot(v, cv)/(vn·cn): v read as the outer
-    # column (the builder bound only norm(v)), vn bound once per row
-    dot_sql = ("aggregate(zip_with(`v`, _ac.cv, (_zx, _zy) -> _zx * _zy), "
-               "0.0D, (_zacc, _zx) -> _zacc + _zx)")
-    norm_sql = ("sqrt(aggregate(zip_with(`v`, `v`, (_zx, _zy) -> _zx * _zy), "
-                "0.0D, (_zacc, _zx) -> _zacc + _zx))")
+    # column, vn bound once per row
+    dot_sql = _dot_sql("`v`", "_ac.cv")
+    norm_sql = _norm_sql("`v`")
     assign_sql = (
         "get(transform(array({vn}), _avn -> aggregate({cents}, "
         "named_struct('cs', -2.0D, 'cell', CAST({init_cell} AS BIGINT)), "
@@ -1032,12 +1027,12 @@ def _ivf_topk(spark, sf_dir, qid: int, k: int) -> DataFrame:
         key=lambda t: (-t[1], t[0]),
     )[:2]
     probe_cells = [c for c, _ in probed]
-    qv_lit = lit_doubles(qv)
     cand = _ivf_assign_map_side(e, cents).filter(
         F.col("cell").isin(probe_cells) if probe_cells else F.lit(False)
     )
     out = cand.select(
-        "vec_id", (dot("v", qv_lit) / (norm("v") * F.lit(qn))).alias("_s")
+        "vec_id",
+        (dot("v", lit_doubles_sql(qv)) / (norm("v") * F.lit(qn))).alias("_s"),
     )
     return out.orderBy(F.desc("_s"), F.asc("vec_id")).limit(k)
 
@@ -1459,16 +1454,13 @@ def q_ann_recall(spark, sf_dir):
     }
     model = (centroids, [_residual(v, centroids) for v in cb], q7v)
 
-    def _lit(vec):
-        return lit_doubles(vec)
-
     def _coslit(q):
         qn = math.sqrt(sum(x * x for x in q))
-        return dot("v", _lit(q)) / (norm("v") * F.lit(qn))
+        return dot("v", lit_doubles_sql(q)) / (norm("v") * F.lit(qn))
 
     def _negl2(q):
         # negated so every leg ranks DESCENDING in the shared window
-        return -euclidean("v", _lit(q))
+        return -euclidean("v", lit_doubles_sql(q))
 
     # exact baselines: ONE corpus pass scores all four (method, query,
     # metric) pairs; per-method top-10 rides WindowGroupLimit (partial
@@ -1804,7 +1796,7 @@ ORDER BY n DESC, token LIMIT 100
 def q_vocab_topk(spark, sf_dir):
     d = fan_out(load_table(spark, sf_dir, "documents"))
     return (
-        d.select(F.explode(T.tokens(F.lower(F.col("text")))).alias("token"))
+        d.select(F.explode(T.tokens("lower(text)")).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("token"))
@@ -1870,7 +1862,7 @@ def q_search_text(spark, sf_dir):
     from victor_spark.functions.embedder import embed, embed_query
 
     qv = embed_query(_SEARCH_TEXT_QUERY, _EMBED_DIM)
-    qlit = lit_doubles(qv)
+    qlit = lit_doubles_sql(qv)
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
         "doc_id", to_double_array(embed("text", _EMBED_DIM)).alias("v")
     )
@@ -1904,12 +1896,11 @@ _MULTILINE_SQL = (
 )
 
 
-def _multiline_text():
-    return F.concat(
-        F.col("text"), F.lit("\n"),
-        F.substring("text", 1, 40), F.lit("\n"),
-        F.lit("All rights reserved. Contact us today!"),
-    )
+# the same synthesized text in Spark SQL, split into its lines
+_MULTILINE_LINES = (
+    "split(concat(`text`, '\\n', substring(`text`, 1, 40), '\\n', "
+    "'All rights reserved. Contact us today!'), '\\n')"
+)
 
 
 _C4_LINE_ORACLE = f"""
@@ -1948,12 +1939,11 @@ FROM f
 )
 def q_c4_line_filter(spark, sf_dir):
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    lines = F.split(_multiline_text(), "\n")
-    kept = T.c4_kept_lines(lines)
+    kept = T.c4_kept_lines(_MULTILINE_LINES)
     cleaned = F.array_join(kept, "\n")
     return d.select(
         "doc_id",
-        F.size(lines).alias("n_lines"),
+        F.size(F.expr(_MULTILINE_LINES)).alias("n_lines"),
         F.size(kept).alias("n_kept"),
         F.length(cleaned).alias("cleaned_chars"),
         F.sha2(cleaned, 256).alias("cleaned_hash"),
@@ -2016,7 +2006,7 @@ FROM d LEFT JOIN reassembled r ON d.doc_id = r.doc_id
 )
 def q_line_dedup_global(spark, sf_dir):
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", F.split(_multiline_text(), "\n").alias("lines")
+        "doc_id", F.expr(_MULTILINE_LINES).alias("lines")
     )
     l = d.select(
         "doc_id", F.posexplode("lines").alias("pos0", "line")
@@ -2100,7 +2090,7 @@ def q_unigram_logprob(spark, sf_dir):
     # (2.52s -> 3.69s). The occurrence-row form below is the measured
     # winner on this plan shape.
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    d = docs.select("doc_id", T.tokens(F.lower(F.col("text"))).alias("t"))
+    d = docs.select("doc_id", T.tokens("lower(text)").alias("t"))
     tok = d.select("doc_id", F.explode("t").alias("tok"))
     dist = tok.groupBy("tok").agg(F.count("*").alias("c"))
     # the corpus token total rides along as a broadcast 1-row cross join
@@ -2209,7 +2199,7 @@ def q_repetition_stats(spark, sf_dir):
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     base = docs.select(
         "doc_id",
-        T.tokens(F.lower(F.col("text"))).alias("t"),
+        T.tokens("lower(text)").alias("t"),
     ).select(
         "doc_id",
         "t",
@@ -2316,7 +2306,7 @@ FROM b
 def q_ccnet_buckets(spark, sf_dir):
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     d = docs.select(
-        "doc_id", "lang", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", "lang", T.tokens("lower(text)").alias("t")
     )
     tok = d.select("doc_id", F.explode("t").alias("tok"))
     # round-11 measurement note: a dist reuse barrier was tried and
@@ -2422,7 +2412,7 @@ def q_bpe_pairs(spark, sf_dir):
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    pairs = bind(T.tokens(F.lower(F.col("text"))), _pairs)
+    pairs = bind(T.tokens("lower(text)"), _pairs)
     return (
         d.select(F.explode(pairs).alias("pair"))
         .groupBy("pair")
@@ -2485,7 +2475,7 @@ def q_tfidf(spark, sf_dir):
     # exactly, both count every token occurrence). Two corpus-pair
     # exchanges disappear: the tot aggregation and the join re-shuffle.
     d = docs.select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", T.tokens("lower(text)").alias("t")
     ).select("doc_id", F.size("t").alias("s"), F.explode("t").alias("tok"))
     tc = d.groupBy("doc_id", "tok").agg(
         F.count("*").alias("c"), F.first("s").alias("s")
@@ -2954,7 +2944,7 @@ def q_quality_gopher(spark, sf_dir):
     # and the unchanged oracle. Zero shuffles beyond fan_out → at
     # 100 TB this is a pure map over the corpus.
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", T.tokens("lower(text)").alias("t")
     )
     t = F.col("t")
     # NULL text → NULL token array; the oracle's grouped form yields 0
@@ -6492,7 +6482,7 @@ FROM d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
 )
 def q_bigram_logprob(spark, sf_dir):
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    d = docs.select("doc_id", T.tokens(F.lower(F.col("text"))).alias("t"))
+    d = docs.select("doc_id", T.tokens("lower(text)").alias("t"))
     t = F.col("t")
     # Round-11 measurement note: a distinct-(doc, bigram) rewrite via
     # term_counts was tried and REVERTED — matched A/B wall-timing at
@@ -6588,7 +6578,7 @@ FROM d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
 )
 def q_dsir_weights(spark, sf_dir):
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    d = docs.select("doc_id", "lang", T.tokens(F.lower(F.col("text"))).alias("t"))
+    d = docs.select("doc_id", "lang", T.tokens("lower(text)").alias("t"))
     tok = d.select("doc_id", "lang", F.explode("t").alias("w")).select(
         "doc_id", "lang", (H._md5_32_expr(F.col("w")) % 64).alias("bkt")
     )
@@ -6695,7 +6685,7 @@ def _partial_dup_corpus(spark, sf_dir):
     partial = d.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         bind(
-            T.tokens(F.col("text")),
+            T.tokens("text"),
             lambda tt: F.array_join(
                 F.slice(tt, F.lit(1), F.ceil(F.lit(0.55) * F.size(tt)).cast("int")),
                 " ",
@@ -6728,17 +6718,11 @@ FROM lab GROUP BY tau
 """
 
 
-@_q(
-    "dedup_recall_audit",
-    _DEDUP_RECALL_ORACLE,
-    "MinHash-LSH banding recall vs exact Jaccard ground truth at τ ∈ "
-    "{0.5, 0.7} — the b/r tuning metric as a query (the dedup-family "
-    "twin of ann_recall). Truth comes from the lossless ppjoin, "
-    "candidates from the banding join; at 100 TB both are the production "
-    "paths, so the audit costs one extra equi-join. Partial (55%-prefix) "
-    "duplicates keep the metric non-vacuous",
-)
-def q_dedup_recall_audit(spark, sf_dir):
+def _recall_audit_sides(spark, sf_dir):
+    """(truth, cand) pair relations of dedup_recall_audit: exact Jaccard
+    >= 0.5 pairs and MinHash-LSH banding candidates, each keyed by
+    (id_a, id_b) with id_a < id_b. The audit's full-outer reshape counts
+    each key once, so both sides must be duplicate-free on that key."""
     from victor_spark.operators.dedup import (
         hashed_shingle_sets,
         minhash_candidate_pairs,
@@ -6758,6 +6742,21 @@ def q_dedup_recall_audit(spark, sf_dir):
         num_hashes=MINHASH_NUM, bands=MINHASH_BANDS, shingle_n=3, unit="word",
         hashed=hashed,
     )
+    return truth, cand
+
+
+@_q(
+    "dedup_recall_audit",
+    _DEDUP_RECALL_ORACLE,
+    "MinHash-LSH banding recall vs exact Jaccard ground truth at τ ∈ "
+    "{0.5, 0.7} — the b/r tuning metric as a query (the dedup-family "
+    "twin of ann_recall). Truth comes from the lossless ppjoin, "
+    "candidates from the banding join; at 100 TB both are the production "
+    "paths, so the audit costs one extra equi-join. Partial (55%-prefix) "
+    "duplicates keep the metric non-vacuous",
+)
+def q_dedup_recall_audit(spark, sf_dir):
+    truth, cand = _recall_audit_sides(spark, sf_dir)
     # Round-11 measurement note: a lazy-checkpoint reuse barrier on cand
     # (it feeds the n_candidates aggregate AND the label join) was tried
     # and REVERTED — qmetrics showed it does eliminate real recompute
@@ -7228,7 +7227,7 @@ def q_dedup_substring_global(spark, sf_dir):
     # the per-token window hashing (the dominant cost) ran on 2 of 32
     # cores (qmetrics: 11 tasks total). Guide §2.5 input skew.
     d = fan_out(_dup_corpus(spark, sf_dir)).select(
-        "doc_id", T.tokens(F.col("text")).alias("t")
+        "doc_id", T.tokens("text").alias("t")
     )
     occ = d.filter(F.size("t") >= W).select(
         "doc_id",
@@ -7338,7 +7337,7 @@ def q_bm25_top_terms(spark, sf_dir):
     # interpreted sorted-run HOF costs more locally than the codegen
     # explode + partial-agg exchanges it removed).
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    d = docs.select("doc_id", T.tokens(F.lower(F.col("text"))).alias("t"))
+    d = docs.select("doc_id", T.tokens("lower(text)").alias("t"))
     nd = F.broadcast(d.agg(F.count("*").cast("double").alias("nd")))
     # Round-11 optimization (the tfidf move): the per-doc length is
     # size(t), known before the explode, so it rides the (doc, tok)
@@ -7474,7 +7473,7 @@ def q_hll_distinct(spark, sf_dir):
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     g = d.select(
-        F.explode(H.word_shingles(F.lower(F.col("text")))).alias("g")
+        F.explode(H.word_shingles("lower(text)")).alias("g")
     )
     regs = hll_registers(hll_prepare(g, "g", p=10, salt="hll"), p=10)
     alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(1024.0))
@@ -7525,7 +7524,7 @@ SELECT source, n_tokens, round(sw / zsum, 6) AS weight FROM w, z
 def q_mix_weights(spark, sf_dir):
     d = fan_out(load_table(spark, sf_dir, "documents"))
     s = (
-        d.select("source", F.size(T.tokens(F.lower(F.col("text")))).alias("n"))
+        d.select("source", F.size(T.tokens("lower(text)")).alias("n"))
         .groupBy("source")
         .agg(F.sum("n").cast("long").alias("n_tokens"))
     )
@@ -7599,7 +7598,7 @@ def q_cms_heavy_hitters(spark, sf_dir):
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     tc = (
-        d.select(F.explode(T.tokens(F.lower(F.col("text")))).alias("tok"))
+        d.select(F.explode(T.tokens("lower(text)")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
     )
@@ -7755,7 +7754,7 @@ def q_bloom_screen(spark, sf_dir):
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     hs = d.select(
-        "doc_id", H.shingle_hashes(F.col("text"), n=3, unit="word").alias("h")
+        "doc_id", H.shingle_hashes("text", n=3, unit="word").alias("h")
     )
     bench = hs.filter(F.col("doc_id") < 20)
     bench_vals = bench.select(F.explode("h").alias("hv"))
@@ -8077,7 +8076,7 @@ def q_retrieve_rerank(spark, sf_dir):
     emb = d0.select(
         "doc_id", to_double_array(embed("text", _EMBED_DIM)).alias("v")
     )
-    toks_of = F.array_distinct(T.tokens(F.lower(F.col("text"))))
+    toks_of = F.array_distinct(T.tokens("lower(text)"))
     q = F.broadcast(
         emb.filter(F.col("doc_id") == _RERANK_QID)
         .select(F.col("v").alias("qv"))
@@ -8354,7 +8353,7 @@ def q_hybrid_search_rrf(spark, sf_dir):
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
         to_double_array(embed("text", _EMBED_DIM)).alias("v"),
-        F.array_distinct(T.tokens(F.lower(F.col("text")))).alias("toks"),
+        F.array_distinct(T.tokens("lower(text)")).alias("toks"),
     )
     q = F.broadcast(
         d.filter(F.col("doc_id") == _RERANK_QID).select(
@@ -8578,7 +8577,7 @@ def q_dedup_keep_longest(spark, sf_dir):
     )
     clusters = duplicate_clusters(pairs)
     qual = corpus.select(
-        "doc_id", F.size(T.tokens(F.col("text"))).alias("n")
+        "doc_id", F.size(T.tokens("text")).alias("n")
     )
     memb = clusters.join(
         qual.withColumnRenamed("doc_id", "doc"), "doc"
@@ -8595,7 +8594,7 @@ def q_dedup_keep_longest(spark, sf_dir):
     # (round-9 dedup perf refactor; output byte-identical, oracle re-gated)
     return corpus.join(F.broadcast(drops), "doc_id", "left_anti").select(
         "doc_id",
-        F.size(T.tokens(F.col("text"))).cast("int").alias("n_tokens"),
+        F.size(T.tokens("text")).cast("int").alias("n_tokens"),
         F.sha2("text", 256).alias("content_hash"),
     )
 
@@ -8699,7 +8698,7 @@ def q_embedding_outliers(spark, sf_dir):
         )
     )
     dist = e.join(carr, "label").select(
-        "vec_id", "label", euclidean("v", F.col("cv")).alias("d")
+        "vec_id", "label", euclidean("v", "cv").alias("d")
     )
     w = Window.orderBy(F.desc("d"), F.asc("vec_id"))
     return (

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from victor_spark.functions import text as T
 from victor_spark.plans.catalog import (
     SQL_TOKS,
     QuerySpec,
@@ -93,7 +94,7 @@ FROM d LEFT JOIN per_doc USING (doc_id)
 def q_kneser_ney_bigram(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), " "), lambda x: x != "").alias("t"),
+        T.tokens("lower(text)").alias("t"),
     )
     # Round-11 measurement note: a distinct-(doc, bigram) rewrite via
     # term_counts was tried and REVERTED — matched A/B wall-timing at
@@ -215,7 +216,7 @@ def q_phrase_search(spark, sf_dir):
         )
         .select(
             "doc_id",
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("t"),
+            T.tokens("text").alias("t"),
         )
     )
     post = (
@@ -337,7 +338,6 @@ GROUP BY pred_lang
     "signal and are excluded in both engines",
 )
 def q_tokenizer_fertility(spark, sf_dir):
-    from victor_spark.functions import text as T
     from victor_spark.operators.bpe import bpe_token_count, train_bpe_merges
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -442,47 +442,36 @@ SELECT doc_id, rank, maxsim FROM r WHERE rank <= 10
 def q_late_interaction_maxsim(spark, sf_dir):
     from pyspark.sql import Window
 
-    from victor_spark.functions import hashing as H
-    from victor_spark.functions.vector import bind, dot
+    from victor_spark.functions.vector import _dot_sql
     from victor_spark.sources.tables import fan_out
 
-    def tv(tok):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(_LI_DIM - 1)),
-            lambda j: (
-                H.md5_32(F.concat(tok, F.lit(":"), j.cast("string"))) % 1000
-            ).cast("double")
-            / 1000.0
-            - 0.5,
+    def tv(tok: str) -> str:
+        # md5_32(tok || ':' || j) in Spark SQL
+        h = (
+            f"CAST(conv(substring(md5(concat({tok}, ':', CAST(_j AS STRING))), "
+            f"1, 8), 16, 10) AS BIGINT)"
+        )
+        return (
+            f"transform(sequence(0, {_LI_DIM - 1}), _j -> "
+            f"CAST({h} % 1000 AS DOUBLE) / 1000.0D - 0.5D)"
         )
 
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-        ).alias("toks"),
+        "doc_id", F.array_distinct(T.tokens("text")).alias("toks")
     )
-
-    def qmax(vecs, qt):
-        qv = tv(F.lit(qt))
-        return F.coalesce(
-            F.array_max(F.transform(vecs, lambda v: dot(v, qv))),
-            F.lit(0.0),
-        )
-
-    def full_score(vs):
-        # all three per-query-token maxes inside ONE bound lambda: the
-        # doc's token-vector table evaluates once per row, and a single
-        # binding avoids the cross-bind lambda-variable collision that
-        # silently mis-scored when each term carried its own bind
-        total = None
-        for qt in _LI_QUERY:
-            term = qmax(vs, qt)
-            total = term if total is None else total + term
-        return total
-
+    # all three per-query-token maxes inside ONE bound lambda: the doc's
+    # token-vector table evaluates once per row
+    total = " + ".join(
+        f"coalesce(array_max(transform(_vs, _lv -> "
+        f"{_dot_sql('_lv', tv(repr(qt)))})), 0.0D)"
+        for qt in _LI_QUERY
+    )
     scored = d.select(
-        "doc_id", bind(F.transform("toks", tv), full_score).alias("_s")
+        "doc_id",
+        F.expr(
+            f"get(transform(array(transform(toks, _tok -> {tv('_tok')})), "
+            f"_vs -> {total}), 0)"
+        ).alias("_s"),
     )
     w = Window.orderBy(F.desc("_s"), F.asc("doc_id"))
     return (
@@ -785,12 +774,11 @@ FROM ew CROSS JOIN z CROSS JOIN k
     "driven mixing",
 )
 def q_domain_mix_doremi(spark, sf_dir):
-    from victor_spark.functions import text as T
     from victor_spark.sources.tables import fan_out
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select(
-        "source", F.explode(T.tokens(F.lower(F.col("text")))).alias("tok")
+        "source", F.explode(T.tokens("lower(text)")).alias("tok")
     )
     dist = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = F.broadcast(dist.agg(F.sum("c").cast("double").alias("t")))
@@ -945,7 +933,7 @@ def q_winnow_fingerprints(spark, sf_dir):
 
     d = _dup_corpus(spark, sf_dir).select(
         "doc_id",
-        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("tk"),
+        T.tokens("text").alias("tk"),
     )
     grams = F.when(
         F.size("tk") >= 3,

@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from victor_spark.functions import text as T
 from victor_spark.plans.catalog import SQL_TOKS, QuerySpec
 from victor_spark.sources import load_table
 
@@ -280,12 +281,7 @@ def q_unigram_tokenize(spark, sf_dir):
     # own None handling yields 0 — an unguarded split would leave
     # n_words NULL and silently break hash parity on a corpus with NULL
     # text; advice-caught round 10)
-    n_words = F.size(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), " "),
-            lambda x: x != "",
-        )
-    ).cast("long")
+    n_words = T.token_count("lower(coalesce(text, ''))").cast("long")
     # r11 optimization (guide §4.1, the bpe_token_count treatment §24):
     # n_words is a JVM-side statistic of text, so it is computed BELOW
     # the farm and rides through as a scalar; the farm itself returns
@@ -383,11 +379,10 @@ FROM s
 def q_zipf_fit(spark, sf_dir):
     from pyspark.sql import Window
 
-    from victor_spark.functions import text as T
 
     d = load_table(spark, sf_dir, "documents")
     wc = (
-        d.select(F.explode(T.tokens(F.lower(F.col("text")))).alias("word"))
+        d.select(F.explode(T.tokens("lower(text)")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -533,11 +528,9 @@ FROM s
     "free at any corpus size".format(k=_HEAPS_CKPTS),
 )
 def q_heaps_law_fit(spark, sf_dir):
-    from victor_spark.functions import text as T
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", T.tokens("lower(text)").alias("t")
     )
     n2 = F.size("t") - F.lit(2)
     gi = (
@@ -719,11 +712,9 @@ ORDER BY source
     ),
 )
 def q_domain_mix_temperature(spark, sf_dir):
-    from victor_spark.functions import text as T
-
     d = load_table(spark, sf_dir, "documents")
     n = d.groupBy("source").agg(
-        F.sum(F.size(T.tokens(F.lower(F.col("text")))))
+        F.sum(F.size(T.tokens("lower(text)")))
         .cast("long")
         .alias("n_tokens")
     )
@@ -823,14 +814,13 @@ FROM t
     ),
 )
 def q_vocab_drift_audit(spark, sf_dir):
-    from victor_spark.functions import text as T
     from victor_spark.streaming.drift_stream import drift_metrics, type_drift
 
     d = load_table(spark, sf_dir, "documents")
     vocab = [
         r["word"]
         for r in d.select(
-            F.explode(T.tokens(F.lower(F.col("text")))).alias("word")
+            F.explode(T.tokens("lower(text)")).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("n"))
@@ -1021,13 +1011,11 @@ ORDER BY s1, s2
     "n1+n2-common is integer-exact; one round-6 double division".format(),
 )
 def q_source_overlap_jaccard(spark, sf_dir):
-    from victor_spark.functions import text as T
-
     d = load_table(spark, sf_dir, "documents")
     sw = (
         d.select(
             "source",
-            F.explode(T.tokens(F.lower(F.col("text")))).alias("word"),
+            F.explode(T.tokens("lower(text)")).alias("word"),
         )
         .distinct()
     )
@@ -1135,10 +1123,8 @@ FROM s
     "is never pair-joined; all aggregates are 1-row",
 )
 def q_corpus_entropy(spark, sf_dir):
-    from victor_spark.functions import text as T
-
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", T.tokens("lower(text)").alias("t")
     )
     # round-11 measurement note: lazy reuse barriers on uc/bc were tried
     # and REVERTED (min-of-5 matched A/B 0.89s -> 1.18s) — the initial

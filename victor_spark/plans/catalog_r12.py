@@ -108,9 +108,7 @@ def _conv_df(spark, sf_dir):
     )
     t = d.select(
         F.col("doc_id").alias("conv_id"),
-        T.tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))).alias(
-            "toks"
-        ),
+        T.tokens("lower(coalesce(text, ''))").alias("toks"),
     ).withColumn("n", F.size("toks"))
     for i in range(4):
         t = t.withColumn(
@@ -339,9 +337,7 @@ def q_sft_contamination_screen(spark, sf_dir):
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _BENCH_STRIDE == 0)
         .select(
-            T.tokens(
-                F.lower(F.coalesce(F.col("text"), F.lit("")))
-            ).alias("toks")
+            T.tokens("lower(coalesce(text, ''))").alias("toks")
         )
         .select(
             F.array_join(
@@ -428,12 +424,12 @@ def _dpo_oracle_sql() -> str:
     "a zero-token ANSI guard. At 100 TB: one scan, the render shape",
 )
 def q_dpo_pair_assembly(spark, sf_dir):
-    from victor_spark.functions.text import STOPWORDS
+    from victor_spark.functions.text import STOPWORDS, tokens
 
     c = _conv_df(spark, sf_dir)
 
     def ratio(col):
-        t = F.filter(F.split(F.col(col), " "), lambda x: x != "")
+        t = tokens(col)
         n = F.size(t)
         s = F.size(F.filter(t, lambda x: x.isin(*[F.lit(w) for w in STOPWORDS])))
         return F.when(n == 0, F.lit(0.0)).otherwise(
@@ -524,9 +520,9 @@ def q_sft_pack_conversations(spark, sf_dir):
     c = _conv_df(spark, sf_dir)
     counted = c.select(
         "conv_id",
-        F.size(T.tokens(F.col("rendered"))).cast("int").alias("n_toks"),
+        T.token_count("rendered").cast("int").alias("n_toks"),
         (
-            F.size(T.tokens(F.col("c1"))) + F.size(T.tokens(F.col("c3")))
+            T.token_count("c1") + T.token_count("c3")
         ).cast("long").alias("n_asst"),
     )
     packed = pack_sequences(

@@ -22,7 +22,13 @@ from pyspark.sql import functions as F
 
 from victor_spark.functions.html import sql_normalize_ws
 from victor_spark.functions.text import STOPWORDS as _T_STOPWORDS
-from victor_spark.functions.vector import bind, dot, norm, to_double_array
+from victor_spark.functions.vector import (
+    _dot_sql,
+    _norm_sql,
+    dot,
+    norm,
+    to_double_array,
+)
 from victor_spark.plans.catalog import (
     SQL_TOKS,
     QuerySpec,
@@ -1210,15 +1216,15 @@ def q_ann_matryoshka_rescore(spark, sf_dir):
         e.filter(F.col("vec_id") == 2).select(
             F.col("v").alias("qv"),
             F.slice("v", 1, 16).alias("qv16"),
-            norm(F.slice("v", 1, 16)).alias("qn16"),
+            norm("slice(v, 1, 16)").alias("qn16"),
         )
     )
+    s16 = (
+        f"get(transform(array(slice(v, 1, 16)), _v16 -> "
+        f"{_dot_sql('_v16', '`qv16`')} / ({_norm_sql('_v16')} * `qn16`)), 0)"
+    )
     coarse = e.crossJoin(q).select(
-        "vec_id", "v", "qv",
-        bind(
-            F.slice("v", 1, 16),
-            lambda v16: dot(v16, F.col("qv16")) / (norm(v16) * F.col("qn16")),
-        ).alias("s16"),
+        "vec_id", "v", "qv", F.expr(s16).alias("s16")
     )
     short = coarse.orderBy(F.desc("s16"), F.asc("vec_id")).limit(50)
     rescored = short.select(
@@ -1512,8 +1518,7 @@ def q_crawl_pipeline(spark, sf_dir):
         .alias("doc_id"),
         html_to_text(F.decode("payload", "UTF-8")).alias("_t"),
     )
-    lines = F.split(F.col("_t"), "\n")
-    kept = T.c4_kept_lines(lines)
+    kept = T.c4_kept_lines("split(_t, '\\n')")
     c4 = ex.select(
         "doc_id",
         "url_key",

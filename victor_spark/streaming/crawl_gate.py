@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from victor_spark.functions.url import (
     canonical_url,
     robots_best_match,
-    robots_rule,
+    robots_rule_of,
 )
 
 
@@ -66,7 +66,7 @@ def rules_by_host(rules: DataFrame) -> DataFrame:
         .groupBy(F.lower(F.col("host")).alias("host"))
         .agg(
             F.collect_list(
-                robots_rule(F.col("prefix"), F.col("allow"))
+                robots_rule_of("prefix", "allow")
             ).alias("rules")
         )
     )

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from victor_spark.functions import text as T
-from victor_spark.functions.vector import bind
+from victor_spark.functions.vector import sql_operand
 
 
 def curate_documents(
@@ -50,17 +50,15 @@ def curate_documents(
             "the curation output columns — rename them upstream (the same "
             "contract as gate_urls/sitemap_entries)"
         )
-    lines = F.split(F.col(text_col), "\n")
-    kept = T.c4_kept_lines(lines)
+    lines = f"split({sql_operand(text_col)}, '\\n')"
+    kept = T._c4_kept_lines_sql(lines)
     passthrough = [c for c in docs.columns if c != text_col]
-    curated = bind(
-        F.array_join(kept, "\n"),
-        lambda cleaned: F.struct(
-            cleaned.alias("text"),
-            F.size(lines).alias("n_lines"),
-            F.size(kept).alias("n_kept"),
-            F.round(T.quality_score(cleaned), 6).alias("quality"),
-        ),
+    # the cleaned text binds once per row (_cl) and feeds the quality score
+    curated = F.expr(
+        f"get(transform(array(array_join({kept}, '\\n')), _cl -> "
+        f"named_struct('text', _cl, 'n_lines', size({lines}), "
+        f"'n_kept', size({kept}), "
+        f"'quality', round({T._quality_score_sql('_cl')}, 6))), 0)"
     )
     return (
         docs.select(*passthrough, curated.alias("_c"))

@@ -60,6 +60,7 @@ def type_drift(
             "without a frozen reference is a configuration bug"
         )
     from victor_spark.functions import text as T
+    from victor_spark.functions.vector import sql_operand
 
     spark = docs.sparkSession
     vdf = spark.createDataFrame([(w,) for w in vs], "word string").select(
@@ -67,7 +68,7 @@ def type_drift(
     )
     types = (
         docs.select(
-            F.explode(T.tokens(F.lower(F.col(text_col)))).alias("word")
+            F.explode(T.tokens(f"lower({sql_operand(text_col)})")).alias("word")
         )
         .groupBy("word")
         .agg(F.count("*").alias("n"))
