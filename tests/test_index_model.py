@@ -1,0 +1,250 @@
+"""Model-based test of VectorIndex: random operation sequences checked
+against a plain-Python model of victor's semantics (PAPER.md §1) — add
+with a tag-set, top-k cosine under a tag-superset filter, delete, clear,
+always-on 8-bit quantization.
+
+The model is a dict ``content -> (id, dequantized vector, tag-set)``. The
+dequantized vector replays the stored codec (packed_vector.rs semantics:
+float32 range, HALF_UP bins of 255), so search scores are compared to the
+model's cosine at 1e-9, and each replayed vector is checked to lie within
+half a quantization bin of its input (the bound behind BASELINE.md's
+max-abs-err < 0.0005). After every step the stored rows equal the model
+(no row lost or duplicated) and ``stats()`` counts match it."""
+
+from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+import pytest
+from hypothesis import HealthCheck, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    invariant,
+    precondition,
+    rule,
+)
+
+from victor_spark.index import VectorIndex
+
+DIM = 4
+TAGS = ["a", "b", "c"]
+
+component = st.integers(min_value=-8, max_value=8).map(lambda x: x / 4.0)
+vector = st.lists(component, min_size=DIM, max_size=DIM).filter(
+    lambda v: any(x != 0.0 for x in v)
+)
+tag_set = st.sets(st.sampled_from(TAGS), max_size=2).map(sorted)
+query_tags = st.one_of(st.none(), st.sets(st.sampled_from(TAGS), min_size=1,
+                                          max_size=1).map(sorted))
+
+
+def dequantized(v: list[float]) -> list[float]:
+    """Python replay of quantize + dequantize (functions/vector.py)."""
+    lo, hi = min(v), max(v)
+    span = 1.0 if hi - lo == 0.0 else hi - lo
+    bins = []
+    for x in v:
+        b = Decimal(repr((x - lo) / span * 255.0)).quantize(
+            Decimal(1), rounding=ROUND_HALF_UP
+        )
+        bins.append(min(255.0, max(0.0, float(b))))
+    qmin, qmax = float(np.float32(lo)), float(np.float32(hi))
+    return [qmin + b / 255.0 * (qmax - qmin) for b in bins]
+
+
+def cosine(a: list[float], b: list[float]) -> float:
+    dot = sum(x * y for x, y in zip(a, b))
+    return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+
+
+class _CrashingFS:
+    """Delegates to the index's fs, failing the first rename of a staged
+    part file after ``allow`` of them succeeded — a crash between staging
+    and publish."""
+
+    def __init__(self, inner, allow: int):
+        self._inner, self._allow = inner, allow
+
+    def rename(self, src, dst):
+        if "__staging" in src:
+            if self._allow == 0:
+                raise OSError("simulated crash mid-publish")
+            self._allow -= 1
+        return self._inner.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+
+class IndexMachine(RuleBasedStateMachine):
+    spark = None
+    root = None
+    runs = 0
+
+    @initialize()
+    def fresh_index(self):
+        type(self).runs += 1
+        self.idx = VectorIndex(self.spark, f"{self.root}/run{self.runs}")
+        self.model: dict[str, tuple[str | None, list[float], list[str]]] = {}
+        self.n_docs = 0
+
+    # -- helpers ------------------------------------------------------------
+
+    def _rows(self, batch):
+        rows = []
+        for v, ts in batch:
+            content = f"doc{self.n_docs}"
+            self.n_docs += 1
+            rows.append((content, v, ts))
+        return rows
+
+    def _admit(self, rows):
+        for content, v, ts in rows:
+            deq = dequantized(v)
+            half_bin = (max(v) - min(v)) / 255.0 / 2.0
+            assert max(abs(x - y) for x, y in zip(v, deq)) <= half_bin + 1e-6
+            self.model[content] = (None, deq, ts)
+
+    def _in_scope(self, tags):
+        want = set(tags or [])
+        return {c: e for c, e in self.model.items() if want.issubset(e[2])}
+
+    def _check_topk(self, rows, q, k, tags):
+        scope = self._in_scope(tags)
+        want = sorted((cosine(e[1], q) for e in scope.values()), reverse=True)[:k]
+        got = [r["score"] for r in rows]
+        assert len(got) == len(want)
+        assert got == sorted(got, reverse=True)
+        for g, w in zip(got, want):
+            assert abs(g - w) < 1e-9
+        for r in rows:
+            assert r["content"] in scope
+            assert abs(r["score"] - cosine(scope[r["content"]][1], q)) < 1e-9
+
+    def _learn_ids(self):
+        if any(e[0] is None for e in self.model.values()):
+            for r in self.idx.scan().select("id", "content").collect():
+                _, deq, ts = self.model[r["content"]]
+                self.model[r["content"]] = (r["id"], deq, ts)
+
+    # -- rules --------------------------------------------------------------
+
+    @rule(batch=st.lists(st.tuples(vector, tag_set), min_size=1, max_size=4))
+    def insert(self, batch):
+        rows = self._rows(batch)
+        self.idx.insert(rows)
+        self._admit(rows)
+
+    @rule(batch=st.lists(st.tuples(vector, tag_set), min_size=1, max_size=4))
+    def insert_df(self, batch):
+        rows = self._rows(batch)
+        df = self.spark.createDataFrame(
+            rows, "content string, embedding array<double>, tags array<string>"
+        )
+        self.idx.insert_df(df)
+        self._admit(rows)
+
+    @rule(batch=st.lists(st.tuples(vector, tag_set), min_size=2, max_size=4),
+          allow=st.integers(min_value=0, max_value=1))
+    def crash_then_recover(self, batch, allow):
+        rows = self._rows(batch)
+        real = self.idx.fs
+        self.idx.fs = _CrashingFS(real, allow)
+        try:
+            with pytest.raises(OSError, match="simulated crash"):
+                self.idx.insert(rows)
+        finally:
+            self.idx.fs = real
+        assert len(self.idx.recover_staged()) == 1
+        self._admit(rows)
+
+    @rule(q=vector, k=st.integers(min_value=1, max_value=6), tags=query_tags)
+    def search(self, q, k, tags):
+        rows = self.idx.search(q, k=k, tags=tags).collect()
+        self._check_topk(rows, q, k, tags)
+
+    @rule(qs=st.lists(vector, min_size=1, max_size=3),
+          k=st.integers(min_value=1, max_value=4), tags=query_tags)
+    def search_batch(self, qs, k, tags):
+        queries = {f"q{i}": q for i, q in enumerate(qs)}
+        rows = self.idx.search_batch(queries, k=k, tags=tags).collect()
+        for qid, q in queries.items():
+            mine = sorted((r for r in rows if r["query_id"] == qid),
+                          key=lambda r: r["rank"])
+            assert [r["rank"] for r in mine] == list(range(1, len(mine) + 1))
+            self._check_topk(mine, q, k, tags)
+
+    @precondition(lambda self: self.model)
+    @rule(tags=st.sets(st.sampled_from(TAGS), min_size=1, max_size=2).map(sorted))
+    def delete(self, tags):
+        doomed = self._in_scope(tags)
+        assert self.idx.delete(tags) == len(doomed)
+        for c in doomed:
+            del self.model[c]
+
+    @precondition(lambda self: self.model)
+    @rule(data=st.data())
+    def delete_ids(self, data):
+        self._learn_ids()
+        contents = sorted(self.model)
+        doomed = data.draw(st.lists(st.sampled_from(contents), min_size=1,
+                                    max_size=3, unique=True))
+        ids = [self.model[c][0] for c in doomed] + ["no-such-id"]
+        assert self.idx.delete_ids(ids) == len(doomed)
+        for c in doomed:
+            del self.model[c]
+
+    @rule()
+    def compact(self):
+        out = self.idx.compact(target_rows_per_file=3)
+        assert out["rows"] == len(self.model)
+
+    @rule()
+    def clear(self):
+        self.idx.clear()
+        self.model.clear()
+
+    # -- invariants ---------------------------------------------------------
+
+    @invariant()
+    def stored_rows_match_model(self):
+        if not self.model:
+            assert self.idx.is_empty() or self.idx.scan().count() == 0
+            assert self.idx.stats() == []
+            return
+        stored = sorted(
+            (r["content"], list(r["tags"]))
+            for r in self.idx.scan().select("content", "tags").collect()
+        )
+        assert stored == sorted((c, e[2]) for c, e in self.model.items())
+
+    @invariant()
+    def stats_match_model(self):
+        if self.idx.is_empty():
+            assert not self.model
+            return
+        per_set: dict[tuple[str, ...], int] = {}
+        for _id, _deq, ts in self.model.values():
+            per_set[tuple(ts)] = per_set.get(tuple(ts), 0) + 1
+        got = {tuple(s["tags"]): s["rows"] for s in self.idx.stats()}
+        assert got == per_set
+
+
+def test_index_state_machine(spark, tmp_path):
+    IndexMachine.spark = spark
+    IndexMachine.root = str(tmp_path)
+    IndexMachine.runs = 0
+    run = IndexMachine.TestCase
+    run.settings = settings(
+        max_examples=8,
+        stateful_step_count=10,
+        deadline=None,
+        database=None,
+        derandomize=True,
+        suppress_health_check=list(HealthCheck),
+    )
+    run().runTest()
