@@ -5,6 +5,8 @@ from __future__ import annotations
 import math
 import random
 
+import pytest
+
 from victor_spark.operators import ann
 
 
@@ -81,6 +83,19 @@ def test_pq_encode_shape_and_range(spark):
     rows = enc.select("pq_code").collect()
     assert all(len(r["pq_code"]) == 4 for r in rows)
     assert all(1 <= c <= 4 for r in rows for c in r["pq_code"])
+
+
+def test_pq_rejects_dimension_not_divisible_by_m(spark):
+    """m must divide d: a remainder would silently drop the tail
+    dimensions, and d < m would leave empty subvectors."""
+    df = _clustered(spark)
+    cb = pq.codebook_vectors(df, "vec_id", "v", k=4)  # d = 16
+    for m in (3, 32, 0):
+        with pytest.raises(ValueError, match="not divisible"):
+            pq.encode(df, "v", cb, m=m)
+        with pytest.raises(ValueError, match="not divisible"):
+            pq.adc_lut(cb[0], cb, m=m)
+    assert len(pq.adc_lut(cb[0], cb, m=16)) == 16
 
 
 def test_pq_codebook_row_encodes_to_itself(spark):

@@ -171,7 +171,7 @@ def test_lost_update_reconciles(hidx, monkeypatch):
     replace landed, so writer 2's replace DROPS writer 1's new tag-set
     entry. The documented contract (index.py, tag-set listing section):
     the data partition is intact, and the next listing consult runs
-    _reconcile_tag_sets, which restores the entry from the partition
+    the listing resolver (_tag_sets), which restores the entry from the partition
     directory — queries never silently lose the tag-set for good."""
     hidx.insert([("a", [1.0, 0.0], ["x"])])
     hidx.insert([("b", [0.0, 1.0], ["y"])])

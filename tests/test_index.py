@@ -57,6 +57,39 @@ def test_dimension_mismatch_rejected(idx):
         idx.insert([("a", [1.0, 2.0], []), ("b", [1.0, 2.0, 3.0], [])])
 
 
+def test_wrong_dimension_query_fails(idx):
+    """A query of the wrong dimension must fail, not return k rows scored
+    NULL (the vector kernels pad a length mismatch with NULL, and
+    isnan(NULL) is false, so the NaN guard alone let such rows through)."""
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    idx.insert([(f"doc{i}", [1.0, float(i), 0.5, 0.0], []) for i in range(4)])
+    for strict in (True, False):
+        with pytest.raises(SparkRuntimeException,
+                           match="query dimension 3 vs index dimension 4"):
+            idx.search([1.0, 0.0, 0.0], k=3, strict_nan=strict).collect()
+        with pytest.raises(SparkRuntimeException,
+                           match="query dimension 3 vs index dimension 4"):
+            idx.search_batch({"q": [1.0, 0.0, 0.0]}, k=3,
+                             strict_nan=strict).collect()
+    # unequal query lengths within one batch fail on the driver
+    with pytest.raises(DimensionMismatchError):
+        idx.search_batch({"a": [1.0, 0.0, 0.0, 0.0], "b": [1.0, 0.0, 0.0]})
+    # the right dimension still serves
+    assert len(idx.search([1.0, 0.0, 0.5, 0.0], k=3).collect()) == 3
+
+
+def test_wrong_dimension_query_fails_in_projected_mode(idx):
+    idx.insert([(f"doc{i}", [1.0, float(i), 0.5, float(i % 2)], [])
+                for i in range(6)])
+    idx.project(k=2)
+    with pytest.raises(DimensionMismatchError):
+        idx.search([1.0, 0.0, 0.0], k=3)
+    with pytest.raises(DimensionMismatchError):
+        idx.search_batch({"q": [1.0, 0.0, 0.0]}, k=3)
+    assert len(idx.search([1.0, 0.0, 0.5, 1.0], k=3).collect()) == 3
+
+
 def test_nan_score_policy(spark, tmp_path):
     # reference panics when comparing NaN similarities (db.rs:742-748); a
     # zero-norm stored vector scores 0/0 = NaN under cosine. strict mode
@@ -195,6 +228,27 @@ def test_pq_build_and_search(idx):
     assert all(hits[i]["adc_dist"] <= hits[i + 1]["adc_dist"] for i in range(3))
     assert all(int(h["content"][3:]) % 2 == 0 for h in hits)
     assert not math.isnan(hits[0]["adc_dist"])
+
+
+def test_build_ivfpq_sample_is_reproducible_across_reingests(spark, tmp_path):
+    """seed_col="content" promises identical artifacts for an identical
+    corpus, although ids are minted per insert: centroids and codebook
+    rows come back ordered by the seed column, not by id."""
+    import json
+
+    rows = [(f"doc{i:02d}", [float((i * 7) % 5) - 2.0, float(i % 3), 1.0,
+                             float((i * 3) % 4)], [["x"], ["y"]][i % 2])
+            for i in range(24)]
+
+    def meta(name):
+        ix = VectorIndex(spark, str(tmp_path / name))
+        ix.insert(rows)
+        ix.build_ivfpq(m=2, n_codes=4, n_cells=3, trainer="sample",
+                       seed_col="content")
+        with open(ix.ivfpq_meta_path) as f:
+            return json.load(f)
+
+    assert meta("a") == meta("b")
 
 
 def test_pq_guards(idx):
@@ -364,12 +418,23 @@ def test_tagged_scan_resolves_from_metadata_not_data(idx, monkeypatch):
     at 100 TB a full-corpus distinct before every tagged query is a
     scan-the-world prologue (the round-2 scale-killer)."""
     idx.insert([("a", [1.0, 0.0], ["x"]), ("b", [0.0, 1.0], ["y"])])
-    monkeypatch.setattr(
-        idx, "_derive_tag_sets",
-        lambda: (_ for _ in ()).throw(AssertionError("data scan on hot path")),
-    )
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **k):
+        # the listing heal reads a partition directory; the scan itself
+        # reads only the table root
+        assert not any("tag_set_id=" in p for p in paths), (
+            f"data read while resolving tags: {paths}"
+        )
+        return real(self, *paths, **k)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
     got = [r["content"] for r in idx.scan(["x"]).collect()]
     assert got == ["a"]
+    monkeypatch.undo()
     # the pruned read itself only lists the matching partition directory
     assert idx.search([1.0, 0.0], k=5, tags=["y"]).first()["content"] == "b"
 
@@ -731,8 +796,9 @@ def test_legacy_heal_reads_partitions_not_corpus(idx, monkeypatch):
         return real(self, *paths, **k)
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    listing = idx._derive_tag_sets()
+    listing = idx._tag_sets()
     assert sorted(ts for _tsid, ts in listing) == [["x"], ["y"]]
+    assert idx._read_tag_sets() == listing  # healed for next time
 
 
 def test_merge_from_combines_shards(spark, tmp_path):

@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from victor_spark.operators.kmeans import fit_kmeans, seed_rows
+from victor_spark.operators.kmeans import fit_kmeans
+from victor_spark.operators.pq import codebook_vectors
 
 SF_SMALL = "/root/testdata/sf0.01"
 
@@ -38,7 +39,7 @@ def test_kmeans_is_deterministic(spark):
     b = fit_kmeans(d, "id", "v", k=3, max_iter=5, metric="cosine")
     assert a == b
     # and the init is the documented salted-md5 rule
-    assert seed_rows(d, "id", "v", 3, "kmeans") == seed_rows(d, "id", "v", 3, "kmeans")
+    assert codebook_vectors(d, "id", "v", 3, "kmeans") == codebook_vectors(d, "id", "v", 3, "kmeans")
 
 
 def test_cosine_kmeans_returns_unit_centroids(spark):
@@ -60,7 +61,7 @@ def test_kmeans_beats_sampled_centroids_on_recall(spark):
         F.col("embedding").cast("array<double>").alias("v"),
     )
     k, nprobe = 16, 4
-    sample = np.asarray(seed_rows(e, "id", "v", k, "ivf"))
+    sample = np.asarray(codebook_vectors(e, "id", "v", k, "ivf"))
     trained = np.asarray(
         fit_kmeans(e, "id", "v", k=k, max_iter=10, metric="cosine", salt="ivf")
     )

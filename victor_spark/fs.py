@@ -31,8 +31,8 @@ S3-like object stores rename itself is copy+delete. Writers therefore
 always stage to a temp path first (the data stays complete at all
 times), and READERS of replace-maintained artifacts must tolerate a
 missing destination by re-deriving from the data — which
-``VectorIndex._read_tag_sets`` does (``None`` → ``_derive_tag_sets``
-self-heal) and the JSON/npz artifact readers do by erroring with
+``VectorIndex._tag_sets`` does (a missing listing is rebuilt from the
+partition directories) and the JSON/npz artifact readers do by erroring with
 "call build_*() first" semantics.
 """
 

@@ -106,11 +106,7 @@ def shingle_hashes(s: ColumnOrName, n: int = 3, unit: str = "char") -> Column:
     n-grams tokenize through :func:`text.tokens`, so ``s`` is then a
     name or SQL expression."""
     grams = char_shingles(s, n) if unit == "char" else word_shingles(s, n)
-    return F.array_distinct(F.transform(grams, lambda g: _md5_32_expr(g)))
-
-
-def _md5_32_expr(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+    return F.array_distinct(F.transform(grams, md5_32))
 
 
 def _minhash_signature_sql(ref: str, num_hashes: int, seed: int) -> str:

@@ -104,19 +104,18 @@ def lit_doubles(vals) -> Column:
     return F.expr(lit_doubles_sql(vals))
 
 
+def lit_doubles_2d_sql(rows) -> str:
+    """SQL source of an array<array<double>> literal (see
+    :func:`lit_doubles_2d`)."""
+    if len(rows) == 0:  # len(), not truthiness: numpy arrays reject bool()
+        return "CAST(array() AS array<array<double>>)"
+    return "array(" + ",".join(lit_doubles_sql(r) for r in rows) + ")"
+
+
 def lit_doubles_2d(rows) -> Column:
     """array<array<double>> literal via one parsed SQL expression (see
     :func:`lit_doubles`) — the nested-LUT / pre-sliced-codebook shape."""
-    if len(rows) == 0:  # len(), not truthiness: numpy arrays reject bool()
-        return F.expr("CAST(array() AS array<array<double>>)")
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(_dlit_sql(float(x)) for x in r) + ")"
-            for r in rows
-        )
-        + ")"
-    )
+    return F.expr(lit_doubles_2d_sql(rows))
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,7 @@ import io
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -47,17 +47,19 @@ from pyspark.sql.types import (
 from victor_spark.fs import fs_for
 from victor_spark.fs import join as fsjoin
 
+from victor_spark.functions.hashing import md5_32
 from victor_spark.functions.vector import (
     cosine,
     cosine_to_literal,
     dequantize,
     euclidean,
     euclidean_to_literal,
-    lit_doubles_2d,
     quantize,
 )
 from victor_spark.operators.pca import PCAModel, fit_pca, project_column
 from victor_spark.operators.topk import topk
+
+_PART = "tag_set_id="
 
 INSERT_SCHEMA = StructType(
     [
@@ -115,6 +117,83 @@ def tag_set_id(tags: list[str]) -> str:
 class DimensionMismatchError(ValueError):
     """Insert batch contains vectors of a different dimension than the
     index (reference panics on record-size mismatch, db.rs:516-539)."""
+
+
+def _check_dim(got: int, want: int, what: str) -> None:
+    if got != want:
+        raise DimensionMismatchError(
+            f"query dimension {got} vs {what} dimension {want}"
+        )
+
+
+# -- the stored codec -----------------------------------------------------
+#
+# Vectors are stored quantized (packed_vector.rs semantics) with the 0..255
+# bins shifted to signed [-128,127], so parquet keeps a true 1-byte column —
+# the reference's exact u8/dim + 2×f32 layout (packed_vector.rs:3-9).
+# _encode is the only writer of that layout and _decode its only reader.
+
+
+def _encode(df: DataFrame, vec_col: str) -> DataFrame:
+    """(id, content, tags, ``vec_col``, tag_set_id) → the stored columns
+    (id, content, tags, qmin, qmax, quant, tag_set_id)."""
+    return df.select(
+        "id", "content", "tags", quantize(vec_col).alias("q"), "tag_set_id"
+    ).select(
+        "id", "content", "tags",
+        F.col("q.qmin").alias("qmin"),
+        F.col("q.qmax").alias("qmax"),
+        F.transform(F.col("q.quant"), lambda b: (b - 128).cast("tinyint")).alias("quant"),
+        "tag_set_id",
+    )
+
+
+def _decode(df: DataFrame) -> DataFrame:
+    """Stored rows plus the dequantized ``embedding`` column."""
+    bins = F.transform(F.col("quant"), lambda b: b.cast("int") + 128)
+    return df.withColumn("embedding", dequantize(bins, "qmin", "qmax"))
+
+
+def _guard_score(df: DataFrame, score: Column, qdim: int,
+                 strict_nan: bool) -> tuple[DataFrame, Column]:
+    """The score as search serves it. A NaN score (a zero-norm vector
+    under cosine, or NaN inputs) fails the query with ``strict_nan`` —
+    the distributed mirror of the reference's panic in
+    NearestNeighborsResult::cmp (db.rs:742-748) — and is dropped
+    otherwise. A stored vector whose dimension is not the query's fails
+    the query in-plan in both modes: the vector kernels pad a length
+    mismatch with NULL, so its score is NULL, never NaN.
+
+    The NaN test stays the CASE's first branch, as before the dimension
+    test existed: Spark's common-subexpression elimination treats only
+    a CASE's first condition as always evaluated, so a test placed ahead
+    of it could change how often the score expression runs per row."""
+    wrong_dim = F.size("embedding") != qdim
+    dim_error = F.raise_error(F.concat(
+        F.lit(f"query dimension {qdim} vs index dimension "),
+        F.size("embedding").cast("string"),
+    ))
+    if strict_nan:
+        nan_error = F.raise_error(F.lit("NaN similarity score (strict NaN mode)"))
+        return df, (F.when(F.isnan(score), nan_error)
+                    .when(wrong_dim, dim_error).otherwise(score))
+    return (df.filter(~F.isnan(score)),
+            F.when(wrong_dim, dim_error).otherwise(score))
+
+
+def _lexical_jaccard(text: str) -> Column:
+    """Token-set Jaccard of the stored ``content`` against ``text`` (0.0
+    when both are empty) — the lexical evidence of search_rerank and
+    hybrid_search."""
+    from victor_spark.functions.text import tokens
+    from victor_spark.functions.url import _sql_str
+
+    qt = F.array_distinct(tokens(_sql_str(text.lower())))
+    ct = F.array_distinct(tokens("lower(content)"))
+    denom = F.size(F.array_union(ct, qt))
+    return F.when(denom == 0, F.lit(0.0)).otherwise(
+        F.size(F.array_intersect(ct, qt)) / denom
+    )
 
 
 class VectorIndex:
@@ -240,19 +319,10 @@ class VectorIndex:
         is independent of the retrieval metric."""
         from pyspark.sql import Window
 
-        from victor_spark.functions.text import tokens as _tokens
-        from victor_spark.functions.url import _sql_str
-
         cand = self.search_text(text, k=fetch_k, tags=tags)
-        qt = F.array_distinct(_tokens(_sql_str(text.lower())))
-        ct = F.array_distinct(_tokens("lower(content)"))
-        denom = F.size(F.array_union(ct, qt))
-        jac = F.when(denom == 0, F.lit(0.0)).otherwise(
-            F.size(F.array_intersect(ct, qt)) / denom
-        )
         w = Window.orderBy(F.desc("rerank_score"), F.asc("id"))
         return (
-            cand.withColumn("rerank_score", jac)
+            cand.withColumn("rerank_score", _lexical_jaccard(text))
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("id", "content", "tags", "score", "rerank_score", "rank")
@@ -275,9 +345,6 @@ class VectorIndex:
         O(fetch_k) at any corpus size."""
         from pyspark.sql import Window
 
-        from victor_spark.functions.text import tokens as _tokens
-        from victor_spark.functions.url import _sql_str
-
         ascending = self._load_model() is not None  # euclidean in projected mode
         vec = self.search_text(text, k=fetch_k, tags=tags)
         vw = Window.orderBy(
@@ -287,16 +354,10 @@ class VectorIndex:
             "id", "content", "tags", "vec_rank"
         )
 
-        qt = F.array_distinct(_tokens(_sql_str(text.lower())))
-        ct = F.array_distinct(_tokens("lower(content)"))
-        denom = F.size(F.array_union(ct, qt))
-        jac = F.when(denom == 0, F.lit(0.0)).otherwise(
-            F.size(F.array_intersect(ct, qt)) / denom
-        )
         lw = Window.orderBy(F.desc("_j"), F.asc("id"))
         ltop = (
             self.scan(tags)
-            .select("id", "content", "tags", jac.alias("_j"))
+            .select("id", "content", "tags", _lexical_jaccard(text).alias("_j"))
             .orderBy(F.desc("_j"), F.asc("id"))
             .limit(fetch_k)
             .withColumn("lex_rank", F.row_number().over(lw))
@@ -362,23 +423,13 @@ class VectorIndex:
                 "_tags",
             )
 
-        out = staged.select(
+        out = _encode(staged.select(
             F.expr("uuid()").alias("id"),
             F.col("content"),
             F.col("_tags").alias("tags"),
-            quantize("_vec").alias("q"),
-        ).select(
-            "id",
-            "content",
-            "tags",
-            F.col("q.qmin").alias("qmin"),
-            F.col("q.qmax").alias("qmax"),
-            # bins shifted to signed [-128,127] so parquet stores a true
-            # 1-byte column — the reference's exact u8/dim + 2×f32 layout
-            # (packed_vector.rs:3-9); scan() shifts back before dequantize
-            F.transform(F.col("q.quant"), lambda b: (b - 128).cast("tinyint")).alias("quant"),
-            F.sha2(F.array_join(F.col("tags"), ","), 256).alias("tag_set_id"),
-        )
+            "_vec",
+            F.sha2(F.array_join(F.col("_tags"), ","), 256).alias("tag_set_id"),
+        ), "_vec")
         self._staged_append(out)
         # data first, then metadata: the listing must never name a tag-set
         # whose partition directory doesn't exist yet
@@ -426,12 +477,10 @@ class VectorIndex:
         copy half completed) — drop the source instead of re-moving. On
         failure the staging dir is left in place (see _staged_append's
         failure contract)."""
-        for d in self.fs.listdir(staging):
-            if not d.startswith("tag_set_id="):
-                continue
-            live = fsjoin(self.data_path, d)
+        for tsid in self._partition_ids(staging):
+            live = self._part_dir(tsid)
             self.fs.mkdirs(live)
-            src_dir = fsjoin(staging, d)
+            src_dir = self._part_dir(tsid, staging)
             for fname in self.fs.listdir(src_dir):
                 if fname.endswith(".parquet"):
                     src, dst = fsjoin(src_dir, fname), fsjoin(live, fname)
@@ -462,9 +511,7 @@ class VectorIndex:
                 self._complete_staged_moves(staging)
                 recovered.append(staging)
         if recovered:
-            listing = self._read_tag_sets()
-            if listing is not None:
-                self._reconcile_tag_sets(listing)
+            self._tag_sets()
         return recovered
 
     # -- tag-set metadata listing ------------------------------------------
@@ -480,19 +527,26 @@ class VectorIndex:
     # through self.fs, so the listing lives wherever the data lives
     # (local disk, HDFS, object store).
     #
+    # ONE RESOLVER: every consult of the listing — insert's registration,
+    # tagged scans and delete, stats, recover_staged, merge_from — goes
+    # through _tag_sets, which diffs the listing against the partition
+    # directories (one directory listing) and heals what it lacks. Only
+    # delete's epilogue (_after_drop) writes the listing without it.
+    #
     # CONCURRENT-WRITER CONTRACT: the listing is maintained by
     # read-modify-write + replace, which assumes a SINGLE WRITER per
     # index (the reference has the same contract — one process owns
     # index.bin). Two concurrent insert_df calls can interleave so the
     # second replace drops the first's new tag-set entry. That lost
     # update is NOT data loss: the data partition exists, and the next
-    # read that consults the listing runs _reconcile_tag_sets, which
-    # diffs the listing against the partition directories and restores
-    # any unlisted entry (tests/test_fs.py::test_lost_update_reconciles).
-    # Queries between the lost update and the next reconcile can miss
-    # the affected tag-set — callers needing multi-writer ingest should
-    # serialize insert_df calls (the inserts themselves are append-only
-    # parquet writes and commute; only the listing flip needs the lock).
+    # consult of the listing (any read, or the next insert) restores the
+    # unlisted entry from its partition directory
+    # (tests/test_fs.py::test_lost_update_reconciles). Queries between
+    # the lost update and that consult can miss the affected tag-set —
+    # callers needing multi-writer ingest should serialize insert_df
+    # calls or opt into listing_lock (the inserts themselves are
+    # append-only parquet writes and commute; only the listing flip
+    # needs the lock).
 
     def _read_tag_sets(self) -> list[tuple[str, list[str]]] | None:
         """The (tag_set_id, tags) listing, or None if no metadata exists
@@ -616,109 +670,74 @@ class VectorIndex:
     def _register_tag_sets_unlocked(
         self, batch_sets: set[tuple[str, ...]]
     ) -> None:
-        existing = self._read_tag_sets() or self._derive_tag_sets()
-        known = {tsid for tsid, _ in existing}
-        new = [
-            (tag_set_id(list(ts)), list(ts))
-            for ts in sorted(batch_sets)
-            if tag_set_id(list(ts)) not in known
-        ]
-        if not new and self.fs.exists(self.tagsets_path):
-            return
-        # merge-on-write: the data write above can take minutes, so
-        # re-read the listing immediately before the replace and union —
-        # a concurrent writer that landed in the meantime keeps its
-        # entry. This SHRINKS the lost-update window to the read→replace
-        # gap; the contract is still single-writer (see section note),
-        # with _reconcile_tag_sets healing whatever slips through.
-        latest = {
-            (tsid, tuple(ts)) for tsid, ts in (self._read_tag_sets() or [])
-        }
-        merged = latest | {(tsid, tuple(ts)) for tsid, ts in existing + new}
-        self._write_tag_sets(
-            sorted((tsid, list(ts)) for tsid, ts in merged)
+        self._tag_sets(
+            known=[(tag_set_id(list(ts)), list(ts)) for ts in sorted(batch_sets)]
         )
 
-    def _derive_tag_sets(self) -> list[tuple[str, list[str]]]:
-        """Rebuild the listing from the DATA LAYOUT (self-heal for indexes
-        created before the metadata file existed): one directory listing,
-        then ONE pruned single-row read per partition to recover its tags
-        — O(partitions) tiny jobs, never a full-corpus distinct. (The
-        round-3 posture nit: the old distinct+collect was paid at most
-        once, but at 100 TB "once" is still a scan-the-world job; the
-        partition directory names already carry the tag_set_ids, and each
-        partition's tags are constant by construction, so a limit-1 read
-        per directory is the whole recovery.)"""
-        if self.is_empty():
-            return []
-        out = []
-        for d in sorted(self.fs.listdir(self.data_path)):
-            if not d.startswith("tag_set_id="):
+    def _part_dir(self, tsid: str, root: str | None = None) -> str:
+        return fsjoin(root or self.data_path, _PART + tsid)
+
+    def _partition_ids(self, root: str | None = None) -> list[str]:
+        """tag_set_ids of the partition directories under ``root`` (the
+        live data by default) — one directory listing."""
+        return sorted(
+            d[len(_PART):]
+            for d in self.fs.listdir(root or self.data_path)
+            if d.startswith(_PART)
+        )
+
+    def _tag_sets(
+        self, known: list[tuple[str, list[str]]] = ()
+    ) -> list[tuple[str, list[str]]]:
+        """The (tag_set_id, tags) listing, healed against the data layout
+        and extended by ``known`` entries (an insert's batch tag-sets).
+
+        The check is ONE directory listing: a partition the listing does
+        not name — an index written before the listing existed, a crash
+        between the data write and the listing update, or the lost update
+        of the single-writer contract above — pays one pruned read of its
+        own directory to recover its tags (each partition's tags are
+        constant by construction), never a corpus scan; ``known`` entries
+        need no read. When anything changed, the listing is re-read right
+        before the replace and unioned (merge-on-write: the data write can
+        take minutes, so this shrinks the lost-update window to the
+        read→replace gap)."""
+        listing = self._read_tag_sets()
+        have = {tsid for tsid, _ in listing or []}
+        add = [(tsid, ts) for tsid, ts in known if tsid not in have]
+        have |= {tsid for tsid, _ in known}
+        for tsid in [] if self.is_empty() else self._partition_ids():
+            if tsid in have:
                 continue
-            tsid = d[len("tag_set_id="):]
-            row = (
-                self.spark.read.parquet(fsjoin(self.data_path, d))
-                .select("tags")
-                .first()
-            )
+            # explicit schema: a directory a concurrent writer has created
+            # but not yet filled reads as empty instead of failing inference
+            row = self.spark.read.schema("tags array<string>").parquet(
+                self._part_dir(tsid)
+            ).first()
             if row is not None:
-                out.append((tsid, list(row["tags"])))
-        return out
+                add.append((tsid, list(row["tags"])))
+        if listing is not None and not add:
+            return listing
+        latest = self._read_tag_sets() or []
+        merged = sorted(
+            {(tsid, tuple(ts)) for tsid, ts in latest + (listing or []) + add}
+        )
+        listing = [(tsid, list(ts)) for tsid, ts in merged]
+        self._write_tag_sets(listing)
+        return listing
 
     def _matching_tag_set_ids(self, tags: list[str]) -> list[str]:
         """tag_set_ids whose stored tag-set ⊇ ``tags`` (reference
         get_matching_db_files, db.rs:687-706), resolved from the metadata
         listing — no data scan on the common path."""
-        listing = self._read_tag_sets()
-        if listing is None:
-            listing = self._derive_tag_sets()
-            self._write_tag_sets(sorted(listing))  # heal for next time
-        else:
-            listing = self._reconcile_tag_sets(listing)
         want = set(tags)
-        return [tsid for tsid, ts in listing if want.issubset(ts)]
-
-    def _reconcile_tag_sets(
-        self, listing: list[tuple[str, list[str]]]
-    ) -> list[tuple[str, list[str]]]:
-        """Repair a listing that lags the data directories — a crash between
-        the data write and _register_tag_sets leaves a partition the listing
-        never names, and the no-metadata heal can't fire because the file
-        exists. The check is one directory listing (already the cost model
-        of delete()); only UNLISTED partitions pay a pruned one-partition
-        read to recover their tags. The same pass heals the lost-update
-        window of the single-writer contract above."""
-        if self.is_empty():
-            return listing
-        on_disk = {
-            d[len("tag_set_id="):]
-            for d in self.fs.listdir(self.data_path)
-            if d.startswith("tag_set_id=")
-        }
-        missing = on_disk - {tsid for tsid, _ in listing}
-        if not missing:
-            return listing
-        recovered = []
-        for tsid in sorted(missing):
-            row = (
-                self.spark.read.parquet(
-                    fsjoin(self.data_path, f"tag_set_id={tsid}")
-                )
-                .select("tags")
-                .first()
-            )
-            if row is not None:
-                recovered.append((tsid, list(row["tags"])))
-        listing = sorted(listing + recovered)
-        self._write_tag_sets(listing)
-        return listing
+        return [tsid for tsid, ts in self._tag_sets() if want.issubset(ts)]
 
     def clear(self) -> None:
         """Drop everything (reference clear_db, db.rs:608-625)."""
-        for p in (self.data_path, self.tagsets_path, self.model_path, self.pq_path,
-                  self.pq_meta_path, self.ivf_path, self.ivf_meta_path,
-                  self.ivfpq_path, self.ivfpq_meta_path):
+        for p in (self.data_path, self.tagsets_path, self.model_path):
             self.fs.delete(p)
+        self._drop_ann_artifacts()
 
     def delete(self, tags: list[str]) -> int:
         """Delete every row whose tag-set ⊇ ``tags`` (the same superset
@@ -744,30 +763,30 @@ class VectorIndex:
         # returns the count from its in-memory index, db.rs:629-643)
         n = 0
         for tsid in ids:
-            part_dir = fsjoin(self.data_path, f"tag_set_id={tsid}")
+            part_dir = self._part_dir(tsid)
             if not self.fs.is_dir(part_dir):
                 continue
             n += self.fs.parquet_row_count(part_dir)
             self.fs.delete(part_dir)
-        doomed = set(ids)
-        survivors = [
-            (tsid, ts)
-            for tsid, ts in (self._read_tag_sets() or [])
-            if tsid not in doomed
-        ]
-        self._write_tag_sets(survivors)
-        remaining = [
-            d for d in self.fs.listdir(self.data_path)
-            if d.startswith("tag_set_id=")
-        ]
-        if not remaining:
-            self.clear()
-        # deletion changes MEMBERSHIP: a PQ/IVF serving table built earlier
-        # would keep answering with the deleted rows — worse than the
-        # acceptable "stale-missing" of post-build inserts. Drop the
-        # artifacts; callers rebuild when they next need the ANN path.
-        self._drop_ann_artifacts()
+        self._after_drop(set(ids))
         return n
+
+    def _after_drop(self, dropped: set[str]) -> None:
+        """The epilogue of delete and delete_ids: unlist the ``dropped``
+        tag-sets, clear() an index left without partitions, and otherwise
+        drop the ANN serving artifacts. Deletion changes MEMBERSHIP: a
+        PQ/IVF table built earlier would keep answering with the deleted
+        rows — worse than the acceptable "stale-missing" of post-build
+        inserts; callers rebuild when they next need the ANN path."""
+        if dropped:
+            self._write_tag_sets([
+                (tsid, ts) for tsid, ts in self._read_tag_sets() or []
+                if tsid not in dropped
+            ])
+        if self._partition_ids():
+            self._drop_ann_artifacts()
+        else:
+            self.clear()
 
     def delete_ids(self, ids: list[str]) -> int:
         """Row-level delete by id. Returns the number of rows deleted.
@@ -818,7 +837,7 @@ class VectorIndex:
         for r in affected:
             tsid, n_vic = r["tag_set_id"], r["n"]
             n_victims += n_vic
-            part_dir = fsjoin(self.data_path, f"tag_set_id={tsid}")
+            part_dir = self._part_dir(tsid)
             if self.fs.parquet_row_count(part_dir) == n_vic:
                 # every row is a victim: drop the directory, no rewrite
                 self.fs.delete(part_dir)
@@ -833,21 +852,7 @@ class VectorIndex:
             self.fs.rename(part_dir, old)
             self.fs.rename(tmp, part_dir)
             self.fs.delete(old)
-        if emptied:
-            survivors = [
-                (tsid, ts)
-                for tsid, ts in (self._read_tag_sets() or [])
-                if tsid not in emptied
-            ]
-            self._write_tag_sets(survivors)
-        remaining = [
-            d for d in self.fs.listdir(self.data_path)
-            if d.startswith("tag_set_id=")
-        ]
-        if not remaining:
-            self.clear()
-        else:
-            self._drop_ann_artifacts()
+        self._after_drop(emptied)
         return n_victims
 
     # -- scan --------------------------------------------------------------
@@ -873,8 +878,7 @@ class VectorIndex:
                 df = df.filter(F.lit(False))
             else:
                 df = df.filter(F.col("tag_set_id").isin(listing))
-        bins = F.transform(F.col("quant"), lambda b: b.cast("int") + 128)
-        return df.withColumn("embedding", dequantize(bins, "qmin", "qmax"))
+        return _decode(df)
 
     def dimension(self) -> int | None:
         if self.is_empty():
@@ -899,10 +903,13 @@ class VectorIndex:
         a fresh DB yields an empty vec — db.rs:229-231 loads an empty index
         and selects no files), not a scan error on the missing path.
 
-        NaN policy (reference NearestNeighborsResult::cmp panics on NaN
-        similarity, db.rs:742-748): with ``strict_nan`` a NaN score (a
-        zero-norm vector under cosine, or NaN inputs) fails the job —
-        the distributed mirror of the panic. ``strict_nan=False`` drops
+        A query whose dimension differs from the stored vectors' fails
+        (DimensionMismatchError on the driver in projected mode, an
+        in-plan error otherwise). NaN policy (reference
+        NearestNeighborsResult::cmp panics on NaN similarity,
+        db.rs:742-748): with ``strict_nan`` a NaN score (a zero-norm
+        vector under cosine, or NaN inputs) fails the job — the
+        distributed mirror of the panic. ``strict_nan=False`` drops
         NaN-scored rows instead, for callers that prefer skip-and-serve."""
         if self.is_empty():
             return self.spark.createDataFrame(
@@ -910,19 +917,12 @@ class VectorIndex:
             )
         model = self._load_model()
         df = self.scan(tags)
-        q = [float(x) for x in query]
+        q = self._query_vector(query, model)
         if model is not None:
-            q = model.project_vector(q)
             score = euclidean_to_literal("embedding", q)
         else:
             score = cosine_to_literal("embedding", q)
-        if strict_nan:
-            score = F.when(
-                F.isnan(score),
-                F.raise_error(F.lit("NaN similarity score (strict NaN mode)")),
-            ).otherwise(score)
-        else:
-            df = df.filter(~F.isnan(score))
+        df, score = _guard_score(df, score, len(q), strict_nan)
         scored = topk(df, score, k, ascending=model is not None)
         return scored.select("id", "content", "tags", "score")
 
@@ -939,7 +939,8 @@ class VectorIndex:
         corpus scan instead of N scans (same plan as the catalog's
         ann_ivf_batch/topk_batch, surfaced on the index API). Scores follow
         search(): cosine descending, or euclidean ascending in projected
-        mode (queries are projected first).
+        mode (queries are projected first), with the same dimension and
+        NaN guards; queries of unequal length raise DimensionMismatchError.
         """
         from victor_spark.operators.topk import topk_per_group
 
@@ -951,33 +952,51 @@ class VectorIndex:
                     "tags array<string>, score double, rank int"
             )
         model = self._load_model()
-        qrows = [(qid, [float(x) for x in (model.project_vector(v)
-                                           if model is not None else v)])
+        qrows = [(qid, self._query_vector(v, model))
                  for qid, v in sorted(queries.items())]
+        qdim = len(qrows[0][1])
+        for _qid, q in qrows:
+            _check_dim(len(q), qdim, "first query")
         qdf = F.broadcast(self.spark.createDataFrame(
             qrows, "query_id string, _qv array<double>"
         ))
-        df = self.scan(tags).crossJoin(qdf)
         score = (euclidean("embedding", "_qv") if model is not None
                  else cosine("embedding", "_qv"))
-        df = df.withColumn("score", score)
-        if strict_nan:
-            df = df.withColumn(
-                "score",
-                F.when(
-                    F.isnan("score"),
-                    F.raise_error(F.lit("NaN similarity score (strict NaN mode)")),
-                ).otherwise(F.col("score")),
-            )
-        else:
-            df = df.filter(~F.isnan("score"))
+        df = self.scan(tags).crossJoin(qdf).withColumn("score", score)
+        df, score = _guard_score(df, F.col("score"), qdim, strict_nan)
         ranked = topk_per_group(
-            df, ["query_id"], "score", k,
+            df.withColumn("score", score), ["query_id"], "score", k,
             ascending=model is not None, tie_cols=["id"],
         )
         return ranked.select(
             "query_id", "id", "content", "tags", "score", "rank"
         )
+
+    def _query_vector(self, query: list[float], model: PCAModel | None,
+                      stored_dim: int | None = None,
+                      stored: str = "index") -> list[float]:
+        """The query as the stored vectors live: floats, projected in
+        projected mode (the stored vectors and every ANN artifact were
+        built over the projected space). Raises DimensionMismatchError
+        against the model's input dimension and, when given, against
+        ``stored_dim`` (the ANN artifact's dimension)."""
+        q = [float(x) for x in query]
+        if model is not None:
+            _check_dim(len(q), model.components.shape[0], "model input")
+            q = [float(x) for x in model.project_vector(q)]
+        if stored_dim is not None:
+            _check_dim(len(q), stored_dim, stored)
+        return q
+
+    def _with_content(self, hits: DataFrame) -> DataFrame:
+        """Join ANN hits (id, adc_dist) back to the content store,
+        broadcast-wise like the exact path's P7 content lookup."""
+        content = self.spark.read.parquet(self.data_path).select(
+            "id", "content", "tags"
+        )
+        return F.broadcast(hits).join(content, "id").select(
+            "id", "content", "tags", "adc_dist"
+        ).orderBy(F.asc("adc_dist"), F.asc("id"))
 
     # -- PQ serving path (extension; see operators/pq.py) -------------------
 
@@ -1004,49 +1023,57 @@ class VectorIndex:
         index lifetime but ids are minted per insert, so REBUILDING an
         identical corpus draws a different init; pass ``"content"`` (or
         any column stable across re-inserts and unique per row) for
-        cross-run reproducible codebooks.
+        cross-run reproducible codebooks. A dimension that m does not
+        divide raises ValueError (``pq.encode``).
         """
         from victor_spark.operators import pq
 
-        if seed_col == "embedding":
+        if self.is_empty():
+            raise ValueError("cannot build PQ over an empty index")
+        full = self.scan()
+        cb = self._train_codebook(full, n_codes, trainer, train_iters,
+                                  metric="l2", salt="pq", seed_col=seed_col)
+        enc = pq.encode(full.select("id", "embedding"), "embedding", cb,
+                        m=m).select("id", "pq_code")
+        self._write_artifact(enc, self.pq_path)
+        self._write_json(self.pq_meta_path, {"m": m, "codebook": cb})
+
+    def _train_codebook(self, df: DataFrame, k: int, trainer: str,
+                        train_iters: int, metric: str, salt: str,
+                        seed_col: str = "id",
+                        vec_col: str = "embedding") -> list[list[float]]:
+        """Model rows for an ANN artifact: the deterministic salted-md5
+        sample (oracle-replayable) or Lloyd-refined centroids from that
+        same init (better recall at equal serving cost; operators/kmeans).
+        ``seed_col`` picks the column the init hashes (see build_pq); the
+        rows come back ordered by it, so an artifact seeded by a column
+        that is stable across re-ingests is identical across them."""
+        from victor_spark.operators import kmeans, pq
+
+        if seed_col in ("embedding", vec_col):
             raise ValueError(
                 "seed_col must name a scalar identity column (e.g. 'id' "
                 "or 'content'), not the vector column"
             )
-        if self.is_empty():
-            raise ValueError("cannot build PQ over an empty index")
-        dim = self.dimension()
-        if dim % m != 0:
-            raise ValueError(f"dimension {dim} not divisible by m={m}")
-        cols = ["id", "embedding"] + ([seed_col] if seed_col != "id" else [])
-        full = self.scan().select(*cols)
-        cb = self._train_codebook(full, n_codes, trainer, train_iters,
-                                  metric="l2", salt="pq", seed_col=seed_col)
-        full = full.select("id", "embedding")
-        enc = pq.encode(full, "embedding", cb, m=m).select("id", "pq_code")
-        tmp = self.pq_path + "__building"
-        self.fs.delete(tmp)
-        enc.write.mode("overwrite").parquet(tmp)
-        self.fs.replace(tmp, self.pq_path)
-        self._write_json(self.pq_meta_path, {"m": m, "codebook": cb})
-
-    def _train_codebook(self, df, k: int, trainer: str, train_iters: int,
-                        metric: str, salt: str,
-                        seed_col: str = "id") -> list[list[float]]:
-        """Model rows for an ANN artifact: the deterministic salted-md5
-        sample (oracle-replayable) or Lloyd-refined centroids from that
-        same init (better recall at equal serving cost; operators/kmeans).
-        ``seed_col`` picks the column the init hashes (see build_pq)."""
-        from victor_spark.operators import kmeans, pq
-
         if trainer == "sample":
-            return pq.codebook_vectors(df, seed_col, "embedding", k=k,
-                                       salt=salt)
+            return pq.codebook_vectors(df, seed_col, vec_col, k=k, salt=salt)
         if trainer == "kmeans":
-            return kmeans.fit_kmeans(df, seed_col, "embedding", k=k,
+            return kmeans.fit_kmeans(df, seed_col, vec_col, k=k,
                                      max_iter=train_iters, metric=metric,
                                      salt=salt)
         raise ValueError(f"trainer must be sample|kmeans, got {trainer!r}")
+
+    def _write_artifact(self, df: DataFrame, path: str,
+                        partition_by: str | None = None) -> None:
+        """Write an ANN serving table via a ``__building`` staging dir and
+        swap it in, so readers never see a half-written table."""
+        tmp = path + "__building"
+        self.fs.delete(tmp)
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(tmp)
+        self.fs.replace(tmp, path)
 
     def search_pq(self, query: list[float], k: int = 10,
                   tags: list[str] | None = None) -> DataFrame:
@@ -1064,35 +1091,62 @@ class VectorIndex:
         from victor_spark.operators import pq
 
         meta = self._read_json(self.pq_meta_path)
-        q = [float(x) for x in query]
-        model = self._load_model()
-        if model is not None:
-            # codes were built over the PROJECTED space (build_pq reads
-            # scan()); the query must travel the same path as search()
-            if len(q) != model.components.shape[0]:
-                raise DimensionMismatchError(
-                    f"query dimension {len(q)} vs model input "
-                    f"dimension {model.components.shape[0]}"
-                )
-            q = model.project_vector(q)
-        if len(q) != len(meta["codebook"][0]):
-            raise DimensionMismatchError(
-                f"query dimension {len(q)} vs PQ codebook "
-                f"dimension {len(meta['codebook'][0])}"
-            )
-        codes = self.spark.read.parquet(self.pq_path)
-        if tags:
-            allowed = self.scan(tags).select("id")
-            codes = codes.join(allowed, "id", "leftsemi")
+        q = self._query_vector(query, self._load_model(),
+                               len(meta["codebook"][0]), "PQ codebook")
+        codes = self._scoped_codes(self.pq_path, tags)
         hits = pq.adc_topk(
             codes, q, meta["codebook"], k=k, m=meta["m"], id_col="id",
         )
-        content = self.spark.read.parquet(self.data_path).select(
-            "id", "content", "tags"
+        return self._with_content(hits)
+
+    def _scoped_codes(self, path: str, tags: list[str] | None,
+                      cells: list[int] | None = None) -> DataFrame:
+        """An ANN code table, cut to the probed ``cells`` (partition
+        pruning) and to the rows whose tag-set ⊇ ``tags`` — a semi-join
+        against the tag-pruned data ids BEFORE scoring, so the top-k is
+        exact within the tag scope."""
+        codes = self.spark.read.parquet(path)
+        if cells is not None:
+            codes = codes.filter(F.col("cell").isin(cells))
+        if tags:
+            codes = codes.join(self.scan(tags).select("id"), "id", "leftsemi")
+        return codes
+
+    def _assign_cells(self, df: DataFrame, cents: list[list[float]],
+                      carry: tuple[str, ...] = ()) -> DataFrame:
+        """(id, *carry, cell, _r): each row's nearest-centroid cell by
+        cosine (ties → lowest cell) and its residual ``embedding − cv``.
+        ``carry`` names extra ``df`` columns to keep.
+
+        Argmax as a max_by aggregation carrying the winning (cell, cv)
+        struct: partial aggregation combines map-side, one shuffled row
+        per id — cheaper than a window's full sort of every (row,
+        centroid) pair."""
+        cent_df = F.broadcast(self.spark.createDataFrame(
+            [(i, c) for i, c in enumerate(cents)], "cell int, cv array<double>"
+        ))
+        scored = df.crossJoin(cent_df).withColumn(
+            "_cs", cosine("embedding", "cv")
         )
-        return F.broadcast(hits).join(content, "id").select(
-            "id", "content", "tags", "adc_dist"
-        ).orderBy(F.asc("adc_dist"), F.asc("id"))
+        kept = dict.fromkeys(("embedding",) + carry)  # ordered, no repeats
+        best = scored.groupBy("id").agg(
+            *[F.first(c).alias(c) for c in kept],
+            F.max_by(
+                F.struct("cell", "cv"), F.struct(F.col("_cs"), -F.col("cell"))
+            ).alias("_best"),
+        )
+        return best.select(
+            "id", *carry, F.col("_best.cell").alias("cell"),
+            F.zip_with(
+                "embedding", F.col("_best.cv"), lambda x, y: x - y
+            ).alias("_r"),
+        )
+
+    def _probe(self, q: list[float], cents: list[list[float]],
+               nprobe: int) -> list[int]:
+        from victor_spark.operators.ivfpq import probe_cells
+
+        return probe_cells(q, dict(enumerate(cents)), max(1, nprobe))
 
     def build_ivf(self, n_cells: int = 64,
                   trainer: str = "sample", train_iters: int = 10,
@@ -1105,49 +1159,22 @@ class VectorIndex:
         storage idiom (same trick as the tag_set_id layout, §1.3/P4).
 
         ``trainer="sample"`` (default): the n_cells stored rows with the
-        smallest salted md5 of id (deterministic, oracle-replayable).
-        ``trainer="kmeans"``: spherical Lloyd from that same init — cells
-        follow the corpus density, worth ~+0.1 recall@10 at equal nprobe
-        (tests/test_kmeans.py measures it). A maintenance artifact —
-        rebuild after batch loads.
+        smallest salted md5 of ``seed_col`` (deterministic,
+        oracle-replayable). ``trainer="kmeans"``: spherical Lloyd from
+        that same init — cells follow the corpus density, worth ~+0.1
+        recall@10 at equal nprobe (tests/test_kmeans.py measures it). A
+        maintenance artifact — rebuild after batch loads.
         """
-        if seed_col == "embedding":
-            raise ValueError(
-                "seed_col must name a scalar identity column (e.g. 'id' "
-                "or 'content'), not the vector column"
-            )
         if self.is_empty():
             raise ValueError("cannot build IVF over an empty index")
-        full = self.scan().select("id", "content", "tags", "embedding")
-        seed_cols = ["id", "embedding"] + (
-            [seed_col] if seed_col != "id" else []
-        )
-        cents = self._train_codebook(full.select(*seed_cols), n_cells,
-                                     trainer, train_iters,
+        full = self.scan()
+        cents = self._train_codebook(full, n_cells, trainer, train_iters,
                                      metric="cosine", salt="ivf",
                                      seed_col=seed_col)
-        cent_df = F.broadcast(
-            self.spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cents)],
-                "cell int, cv array<double>",
-            )
-        )
-        scored = full.crossJoin(cent_df).withColumn(
-            "_cs", cosine("embedding", "cv")
-        )
-        # argmax cell as a max_by aggregation (tie → lowest cell): partial
-        # aggregation combines map-side, one shuffled row per id — cheaper
-        # than a window's full sort of every (row, centroid) pair
-        assigned = scored.groupBy("id").agg(
-            F.first("content").alias("content"),
-            F.first("tags").alias("tags"),
-            F.first("embedding").alias("embedding"),
-            F.max_by("cell", F.struct(F.col("_cs"), -F.col("cell"))).alias("cell"),
+        assigned = self._assign_cells(
+            full, cents, carry=("content", "tags", "embedding")
         ).select("id", "content", "tags", "embedding", "cell")
-        tmp = self.ivf_path + "__building"
-        self.fs.delete(tmp)
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-        self.fs.replace(tmp, self.ivf_path)
+        self._write_artifact(assigned, self.ivf_path, partition_by="cell")
         self._write_json(self.ivf_meta_path, {"centroids": cents})
 
     def search_ivf(self, query: list[float], k: int = 10,
@@ -1164,38 +1191,13 @@ class VectorIndex:
         scores are cosine even where search() reports euclidean ascending;
         a consistent metric within the ANN path beats mirroring the
         reference's metric switch halfway through an index."""
-        import math
-
         if not self.fs.exists(self.ivf_meta_path):
             raise ValueError("no IVF table built; call build_ivf() first")
         cents = self._read_json(self.ivf_meta_path)["centroids"]
-        q = [float(x) for x in query]
-        model = self._load_model()
-        if model is not None:
-            # cells were assigned over the projected space; project the
-            # query exactly as search() does
-            if len(q) != model.components.shape[0]:
-                raise DimensionMismatchError(
-                    f"query dimension {len(q)} vs model input "
-                    f"dimension {model.components.shape[0]}"
-                )
-            q = model.project_vector(q)
-        if len(q) != len(cents[0]):
-            raise DimensionMismatchError(
-                f"query dimension {len(q)} vs IVF centroid dimension {len(cents[0])}"
-            )
-        qn = math.sqrt(sum(x * x for x in q)) or float("nan")
-
-        def cos(c):
-            cn = math.sqrt(sum(x * x for x in c))
-            if cn == 0 or qn != qn:
-                return float("-inf")
-            return sum(a * b for a, b in zip(c, q)) / (cn * qn)
-
-        cells = sorted(range(len(cents)), key=lambda i: (-cos(cents[i]), i))
-        probe = cells[:max(1, nprobe)]
+        q = self._query_vector(query, self._load_model(), len(cents[0]),
+                               "IVF centroid")
         df = self.spark.read.parquet(self.ivf_path).filter(
-            F.col("cell").isin(probe)
+            F.col("cell").isin(self._probe(q, cents, nprobe))
         )
         if tags:
             # the IVF table carries the tags column, so the tag-superset
@@ -1222,150 +1224,43 @@ class VectorIndex:
         ``(id, cell, pq_code)`` table written partitionBy(cell) so a probe
         is directory pruning over an m-bytes/vector code column.
 
-        ``trainer="sample"`` (default): deterministic centroids
-        ('ivfpq-cent' salt rule: smallest salted md5 of id) and residual
-        codebook ('ivfpq-cb'), standing in for k-means like
-        build_pq/build_ivf. ``trainer="kmeans"``: spherical Lloyd for the
-        cells, then L2 Lloyd over the RESIDUALS for the codebook — the
-        FAISS training recipe. A maintenance artifact — rebuild after
-        batch loads. ``seed_col`` picks the column the deterministic
-        inits hash (build_pq's reproducibility contract: ids are minted
-        per insert, so pass a stable unique column like ``"content"``
-        for identical codebooks across re-ingests of the same corpus)."""
-        import math
+        One training sequence for both trainers (the FAISS recipe):
+        train the cells over the vectors (salt 'ivfpq-cent'; spherical
+        Lloyd under ``trainer="kmeans"``), assign every row its cell and
+        residual once, train the codebook over the RESIDUALS (salt
+        'ivfpq-cb'; L2 Lloyd under kmeans), then encode and write. The
+        ``"sample"`` default picks rows by smallest salted md5 of
+        ``seed_col`` as build_pq/build_ivf do. A maintenance artifact —
+        rebuild after batch loads. ``seed_col`` follows build_pq's
+        reproducibility contract: ids are minted per insert, so pass a
+        stable unique column like ``"content"`` for identical artifacts
+        across re-ingests of the same corpus. A dimension that m does
+        not divide raises ValueError (``pq.encode``)."""
+        from victor_spark.operators import pq
 
-        from victor_spark.operators import pq as PQ
-
-        if seed_col == "embedding":
-            raise ValueError(
-                "seed_col must name a scalar identity column (e.g. 'id' "
-                "or 'content'), not the vector column"
-            )
         if self.is_empty():
             raise ValueError("cannot build IVF-PQ over an empty index")
-        dim = self.dimension()
-        if dim % m != 0:
-            raise ValueError(f"dimension {dim} not divisible by m={m}")
-        seed_cols = ["id", "embedding"] + (
-            [seed_col] if seed_col != "id" else []
-        )
-        full = self.scan().select(*seed_cols)
-        if trainer == "kmeans":
-            self._build_ivfpq_kmeans(full, m, n_codes, n_cells, train_iters,
+        full = self.scan()
+        cents = self._train_codebook(full, n_cells, trainer, train_iters,
+                                     metric="cosine", salt="ivfpq-cent",
                                      seed_col=seed_col)
-            return
-        # one collect for both model artifacts: centroid rows + codebook rows
-        tagged = full.select(
-            "id", "embedding",
-            F.conv(F.substring(F.md5(F.concat(F.lit("ivfpq-cent:"), F.col(seed_col).cast("string"))), 1, 8),
-                   16, 10).cast("long").alias("_hc"),
-            F.conv(F.substring(F.md5(F.concat(F.lit("ivfpq-cb:"), F.col(seed_col).cast("string"))), 1, 8),
-                   16, 10).cast("long").alias("_hb"),
+        # the assignment job is the corpus-sized part of the build; compute
+        # it once and feed both the codebook trainer and the encode/write,
+        # carrying the seed column for the residual codebook's init
+        carry = (seed_col,) if seed_col != "id" else ()
+        residuals = self._assign_cells(full, cents, carry=carry).localCheckpoint()
+        codebook = self._train_codebook(residuals, n_codes, trainer,
+                                        train_iters, metric="l2",
+                                        salt="ivfpq-cb", seed_col=seed_col,
+                                        vec_col="_r")
+        enc = pq.encode(residuals, "_r", codebook, m=m).select(
+            "id", "cell", "pq_code"
         )
-        cent_part = tagged.orderBy("_hc", "id").limit(n_cells).select(
-            "id", "embedding", F.lit("cent").alias("_part")
-        )
-        cb_part = tagged.orderBy("_hb", "id").limit(n_codes).select(
-            "id", "embedding", F.lit("cb").alias("_part")
-        )
-        rows = cent_part.unionAll(cb_part).collect()
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in sorted((r for r in rows if r["_part"] == "cent"),
-                            key=lambda r: r["id"])
-        ]
-        cb_vecs = [
-            [float(x) for x in r["embedding"]]
-            for r in sorted((r for r in rows if r["_part"] == "cb"),
-                            key=lambda r: r["id"])
-        ]
-
-        def _cos(a, b):
-            na = math.sqrt(sum(x * x for x in a))
-            nb = math.sqrt(sum(x * x for x in b))
-            if na == 0 or nb == 0:
-                return float("-inf")
-            return sum(x * y for x, y in zip(a, b)) / (na * nb)
-
-        def _cell_of(v):
-            return min(range(len(cents)), key=lambda i: (-_cos(v, cents[i]), i))
-
-        codebook = [
-            [x - c for x, c in zip(v, cents[_cell_of(v)])] for v in cb_vecs
-        ]
-        self._write_ivfpq(full, cents, codebook, m)
-
-    def _assign_cells_with_residuals(self, full: DataFrame,
-                                     cents: list[list[float]],
-                                     carry: tuple[str, ...] = ()) -> DataFrame:
-        """(id, cell, _r [, carry...]): nearest-centroid cell by cosine
-        (ties → lowest cell) and the residual vector — the shared IVF-PQ
-        assignment job. ``carry`` names extra ``full`` columns to keep
-        (e.g. the reproducible-seed column the residual-codebook trainer
-        hashes).
-
-        Argmax as a max_by aggregation carrying the winning (cell, cv)
-        struct (tie → lowest cell): map-side partial aggregation, one
-        shuffled row per id, residual computed after the pick."""
-        cent_df = F.broadcast(self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cell int, cv array<double>"
-        ))
-        scored = full.crossJoin(cent_df).withColumn(
-            "_cs", cosine("embedding", "cv")
-        )
-        best = scored.groupBy("id").agg(
-            F.first("embedding").alias("embedding"),
-            *[F.first(c).alias(c) for c in carry],
-            F.max_by(
-                F.struct("cell", "cv"), F.struct(F.col("_cs"), -F.col("cell"))
-            ).alias("_best"),
-        )
-        return best.select(
-            "id", *carry, F.col("_best.cell").alias("cell"),
-            F.zip_with(
-                "embedding", F.col("_best.cv"), lambda x, y: x - y
-            ).alias("_r"),
-        )
-
-    def _write_ivfpq(self, full: DataFrame, cents: list[list[float]],
-                     codebook: list[list[float]], m: int,
-                     assigned: DataFrame | None = None) -> None:
-        from victor_spark.operators import pq as PQ
-
-        if assigned is None:
-            assigned = self._assign_cells_with_residuals(full, cents)
-        enc = PQ.encode(assigned, "_r", codebook, m=m).select("id", "cell", "pq_code")
-        tmp = self.ivfpq_path + "__building"
-        self.fs.delete(tmp)
-        enc.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-        self.fs.replace(tmp, self.ivfpq_path)
+        self._write_artifact(enc, self.ivfpq_path, partition_by="cell")
         self._write_json(
             self.ivfpq_meta_path,
             {"m": m, "centroids": cents, "codebook": codebook},
         )
-
-    def _build_ivfpq_kmeans(self, full: DataFrame, m: int, n_codes: int,
-                            n_cells: int, train_iters: int,
-                            seed_col: str = "id") -> None:
-        """FAISS-recipe training: spherical k-means for the coarse cells,
-        then L2 k-means over the residuals for the shared codebook."""
-        from victor_spark.operators import kmeans
-
-        cents = kmeans.fit_kmeans(full, seed_col, "embedding", k=n_cells,
-                                  max_iter=train_iters, metric="cosine",
-                                  salt="ivfpq-cent")
-        # the assignment job is the corpus-sized part of the build; compute
-        # it once and feed both the codebook trainer and the encode/write,
-        # carrying the seed column so the residual-codebook init follows
-        # the same reproducibility contract as the coarse cells
-        carry = (seed_col,) if seed_col != "id" else ()
-        residuals = self._assign_cells_with_residuals(
-            full, cents, carry=carry
-        ).localCheckpoint()
-        codebook = kmeans.fit_kmeans(residuals, seed_col, "_r", k=n_codes,
-                                     max_iter=train_iters, metric="l2",
-                                     salt="ivfpq-cb")
-        self._write_ivfpq(full, cents, codebook, m, assigned=residuals)
 
     def search_ivfpq(self, query: list[float], k: int = 10,
                      nprobe: int = 2,
@@ -1376,83 +1271,24 @@ class VectorIndex:
         (id, content, tags, adc_dist ascending). Requires
         :meth:`build_ivfpq`. ``tags`` scopes to tag-superset rows via a
         pre-scoring semi-join (exact within scope)."""
-        import math
-
-        from victor_spark.functions.vector import bind
-        from victor_spark.operators import pq as PQ
+        from victor_spark.operators.ivfpq import cell_adc_sql
 
         if not self.fs.exists(self.ivfpq_meta_path):
             raise ValueError("no IVF-PQ table built; call build_ivfpq() first")
         meta = self._read_json(self.ivfpq_meta_path)
-        cents, codebook, m = meta["centroids"], meta["codebook"], meta["m"]
-        q = [float(x) for x in query]
-        model = self._load_model()
-        if model is not None:
-            if len(q) != model.components.shape[0]:
-                raise DimensionMismatchError(
-                    f"query dimension {len(q)} vs model input "
-                    f"dimension {model.components.shape[0]}"
-                )
-            q = model.project_vector(q)
-        if len(q) != len(cents[0]):
-            raise DimensionMismatchError(
-                f"query dimension {len(q)} vs IVF-PQ centroid dimension {len(cents[0])}"
-            )
-        qn = math.sqrt(sum(x * x for x in q)) or float("nan")
-
-        def _cos(c):
-            cn = math.sqrt(sum(x * x for x in c))
-            if cn == 0 or qn != qn:
-                return float("-inf")
-            return sum(a * b for a, b in zip(c, q)) / (cn * qn)
-
-        probe = sorted(range(len(cents)), key=lambda i: (-_cos(cents[i]), i))[
-            : max(1, nprobe)
-        ]
-        codes = self.spark.read.parquet(self.ivfpq_path).filter(
-            F.col("cell").isin(probe)
-        )
-        if tags:
-            # semi-join against the tag-pruned data ids BEFORE scoring
-            # (same exact-within-scope contract as search_pq)
-            allowed = self.scan(tags).select("id")
-            codes = codes.join(allowed, "id", "leftsemi")
-
-        def _score_for(lut):
-            lut_lit = lit_doubles_2d(lut)
-
-            def _s(lut_b):
-                score = None
-                for j in range(m):
-                    term = F.element_at(
-                        F.element_at(lut_b, j + 1),
-                        F.element_at(F.col("pq_code"), j + 1),
-                    )
-                    score = term if score is None else score + term
-                return score
-
-            return bind(lut_lit, _s)
-
-        score = None
-        for c in probe:
-            lut = PQ.adc_lut(
-                [qx - cx for qx, cx in zip(q, cents[c])], codebook, m
-            )
-            s = _score_for(lut)
-            cond = F.col("cell") == c
-            score = F.when(cond, s) if score is None else score.when(cond, s)
-
+        cents = meta["centroids"]
+        q = self._query_vector(query, self._load_model(), len(cents[0]),
+                               "IVF-PQ centroid")
+        probe = self._probe(q, cents, nprobe)
+        codes = self._scoped_codes(self.ivfpq_path, tags, cells=probe)
+        score = cell_adc_sql(q, dict(enumerate(cents)), probe,
+                             meta["codebook"], meta["m"])
         hits = (
-            codes.select("id", score.alias("adc_dist"))
+            codes.select("id", F.expr(score).alias("adc_dist"))
             .orderBy(F.asc("adc_dist"), F.asc("id"))
             .limit(k)
         )
-        content = self.spark.read.parquet(self.data_path).select(
-            "id", "content", "tags"
-        )
-        return F.broadcast(hits).join(content, "id").select(
-            "id", "content", "tags", "adc_dist"
-        ).orderBy(F.asc("adc_dist"), F.asc("id"))
+        return self._with_content(hits)
 
     # -- interchange --------------------------------------------------------
 
@@ -1535,14 +1371,12 @@ class VectorIndex:
         # row count from parquet FOOTERS of the shard's partitions — free
         # metadata, no scan job (same mechanism as delete/delete_ids)
         n = sum(
-            other.fs.parquet_row_count(fsjoin(other.data_path, d))
-            for d in other.fs.listdir(other.data_path)
-            if d.startswith("tag_set_id=")
+            other.fs.parquet_row_count(other._part_dir(tsid))
+            for tsid in other._partition_ids()
         )
         self._staged_append(other.spark.read.parquet(other.data_path))
         # data first, then metadata (same ordering contract as insert_df)
-        theirs = other._read_tag_sets() or other._derive_tag_sets()
-        self._register_tag_sets({tuple(ts) for _tsid, ts in theirs})
+        self._register_tag_sets({tuple(ts) for _tsid, ts in other._tag_sets()})
         self._drop_ann_artifacts()
         return n
 
@@ -1604,15 +1438,9 @@ class VectorIndex:
         a 100 TB table can afford); rows sorted by tag_set_id."""
         if self.is_empty():
             return []
-        listing = self._read_tag_sets()
-        if listing is None:
-            listing = self._derive_tag_sets()
-            self._write_tag_sets(sorted(listing))
-        else:
-            listing = self._reconcile_tag_sets(listing)
         out = []
-        for tsid, tags in sorted(listing):
-            part_dir = fsjoin(self.data_path, f"tag_set_id={tsid}")
+        for tsid, tags in sorted(self._tag_sets()):
+            part_dir = self._part_dir(tsid)
             n_rows = n_files = n_bytes = 0
             if self.fs.is_dir(part_dir):
                 for fname in self.fs.listdir(part_dir):
@@ -1689,7 +1517,7 @@ class VectorIndex:
                 .withColumn(
                     "__grp",
                     F.pmod(
-                        F.conv(F.substring(F.md5(F.col("id")), 1, 8), 16, 10).cast("long"),
+                        md5_32("id"),
                         n_groups,
                     ),
                 )
@@ -1734,7 +1562,7 @@ class VectorIndex:
         full = self.scan()
         dim = self.dimension()
         model = fit_pca(full, "embedding", min(k, dim))
-        projected = full.select(
+        projected = _encode(full.select(
             "id",
             "content",
             "tags",
@@ -1742,20 +1570,7 @@ class VectorIndex:
             # can't project inside quantize's lambdas)
             project_column("embedding", model).alias("_pv"),
             "tag_set_id",
-        ).select(
-            "id",
-            "content",
-            "tags",
-            quantize("_pv").alias("q"),
-            "tag_set_id",
-        ).select(
-            "id", "content", "tags",
-            F.col("q.qmin").alias("qmin"),
-            F.col("q.qmax").alias("qmax"),
-            # same signed-byte storage shift as insert_df
-            F.transform(F.col("q.quant"), lambda b: (b - 128).cast("tinyint")).alias("quant"),
-            "tag_set_id",
-        )
+        ), "_pv")
         tmp = self.data_path + ".projected"
         projected.write.mode("overwrite").partitionBy("tag_set_id").parquet(tmp)
         self.fs.replace(tmp, self.data_path)

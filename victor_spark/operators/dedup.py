@@ -98,7 +98,7 @@ def _hashed_shingles(df: DataFrame, id_col: str, content_col: str,
         release_shingle_caches()
     out = fan_out(df).select(
         F.col(id_col).alias("doc"),
-        F.array_distinct(F.transform(grams, H._md5_32_expr)).alias("h"),
+        F.array_distinct(F.transform(grams, H.md5_32)).alias("h"),
     ).cache()
     _SHINGLE_CACHE.append(out)
     return out
@@ -327,7 +327,7 @@ def simhash_fingerprints(df: DataFrame, id_col: str, content_col: str) -> DataFr
     exploded = fan_out(df).select(
         F.col(id_col).alias("doc"),
         F.explode_outer(tokens(content_col)).alias("tok"),
-    ).select("doc", H._md5_32_expr(F.col("tok")).alias("h"))
+    ).select("doc", H.md5_32(F.col("tok")).alias("h"))
     # the 32 bit-counter aggregates and the majority fold parse as SQL
     # strings (round-11: the builder forms cost ~5k py4j round trips per
     # build — guide §7.3; identical expressions, pinned by the operator's

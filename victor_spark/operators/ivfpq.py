@@ -25,10 +25,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from victor_spark.functions import hashing as H
 from victor_spark.functions.vector import _cosine_sql, lit_doubles_sql
 from victor_spark.operators import pq as PQ
 
@@ -41,11 +40,7 @@ def collect_ivfpq_model(df: DataFrame, id_col: str, vec_col: str,
 
     Returns (centroids: {cell: vec}, codebook: list[residual vec] ordered
     by source id, query: vec)."""
-    tagged = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).withColumn(
-        "_h", H.md5_32(F.concat(F.lit(salt + ":"), F.col("_id").cast("string")))
-    )
+    tagged = PQ.salted(df, id_col, vec_col, salt)
     cent = tagged.filter(F.col("_id") % centroid_mod == 0).select(
         "_id", "_v", F.lit("cent").alias("_part")
     )
@@ -74,8 +69,8 @@ def collect_ivfpq_model(df: DataFrame, id_col: str, vec_col: str,
 
 
 def _cosine(a: list[float], b: list[float]) -> float:
-    # zero-norm guard matches index.py's _cos: a zero vector sorts last
-    # instead of raising ZeroDivisionError during model collection
+    # the one driver-side cosine of the cell model; zero-norm guard: a
+    # zero vector sorts last instead of raising ZeroDivisionError
     na = math.sqrt(sum(x * x for x in a))
     nb = math.sqrt(sum(x * x for x in b))
     if na == 0.0 or nb == 0.0:
@@ -86,6 +81,30 @@ def _cosine(a: list[float], b: list[float]) -> float:
 def _nearest_cell(v: list[float], centroids: dict) -> int:
     # (cosine desc, cell asc) — the same tie-break the executors use
     return min(centroids.items(), key=lambda kv: (-_cosine(v, kv[1]), kv[0]))[0]
+
+
+def probe_cells(query: list[float], centroids: dict, nprobe: int) -> list:
+    """The ``nprobe`` cells whose centroids are nearest the query by
+    cosine (ties → lowest cell) — the driver-side probe ranking."""
+    return sorted(
+        centroids, key=lambda c: (-_cosine(query, centroids[c]), c)
+    )[:nprobe]
+
+
+def cell_adc_sql(query: list[float], centroids: dict, cells: list,
+                 codebook: list[list[float]], m: int) -> str:
+    """Per-row ADC score over probed ``cells``: a CASE on ``cell`` picks
+    the LUT of the query's residual against that cell's centroid
+    (``PQ.adc_score_sql``). No ELSE: a row outside ``cells`` scores NULL."""
+    return "CASE {whens} END".format(whens=" ".join(
+        "WHEN `cell` = {c} THEN {score}".format(
+            c=int(c),
+            score=PQ.adc_score_sql(PQ.adc_lut(
+                [qx - cx for qx, cx in zip(query, centroids[c])], codebook, m
+            )),
+        )
+        for c in cells
+    ))
 
 
 def _residual(v: list[float], centroids: dict) -> list[float]:
@@ -154,9 +173,7 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, query_id,
     centroids, codebook, query = model or collect_ivfpq_model(
         df, id_col, vec_col, query_id, k_cb, centroid_mod, salt
     )
-    probed = sorted(
-        centroids, key=lambda c: (-_cosine(query, centroids[c]), c)
-    )[:nprobe]
+    probed = probe_cells(query, centroids, nprobe)
 
     if assigned is None:
         assigned = assign_cells(df, id_col, vec_col, centroids)
@@ -183,32 +200,7 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, query_id,
     resid = cand.select(F.col(id_col), "cell", F.expr(resid_sql).alias("_r"))
     enc = PQ.encode(resid, "_r", codebook, m=m)
 
-    # per-cell ADC LUT over the query's residual against that cell; each
-    # cell's LUT binds once per row, terms sum left-to-right (the
-    # PQ.adc_topk expression, dispatched by the CASE on cell)
-    luts = {
-        c: PQ.adc_lut(
-            [qx - cx for qx, cx in zip(query, centroids[c])], codebook, m
-        )
-        for c in probed
-    }
-
-    def _lut_score_sql(lut):
-        return "get(transform(array({lut}), _pql -> {terms}), 0)".format(
-            lut="array(" + ",".join(lit_doubles_sql(row) for row in lut) + ")",
-            terms=" + ".join(
-                f"element_at(element_at(_pql, {j + 1}), "
-                f"element_at(`pq_code`, {j + 1}))"
-                for j in range(m)
-            ),
-        )
-
-    score_sql = "CASE {whens} END".format(
-        whens=" ".join(
-            f"WHEN `cell` = {int(c)} THEN {_lut_score_sql(luts[c])}"
-            for c in probed
-        )
-    )
+    score_sql = cell_adc_sql(query, centroids, probed, codebook, m)
     return (
         enc.select(F.col(id_col), "cell", F.expr(score_sql).alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc(id_col))

@@ -29,27 +29,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from victor_spark.functions import hashing as H
 from victor_spark.functions.vector import to_double_array
-
-
-def seed_rows(df: DataFrame, id_col: str, vec_col: str, k: int,
-              salt: str) -> list[list[float]]:
-    """The k rows with the smallest salted md5 of id, ordered by id — the
-    shared deterministic-init rule (same as pq.codebook_vectors)."""
-    rows = (
-        df.select(F.col(id_col).alias("_id"),
-                  to_double_array(vec_col).alias("_v"))
-        .withColumn("_h", H.md5_32(
-            F.concat(F.lit(salt + ":"), F.col("_id").cast("string"))))
-        .orderBy("_h", "_id")
-        .limit(k)
-        .orderBy("_id")
-        .collect()
-    )
-    return [[float(x) for x in r["_v"]] for r in rows]
 
 
 def seed_centroids(df: DataFrame, id_col: str, vec_col: str, k: int,
@@ -61,8 +42,8 @@ def seed_centroids(df: DataFrame, id_col: str, vec_col: str, k: int,
     pool's min-md5 row, then greedily add the candidate farthest from its
     nearest chosen centroid.
 
-    Why not ``seed_rows`` directly: k independent md5 picks can land two
-    seeds in one cluster and none in another, and Lloyd cannot split a
+    Why not ``pq.codebook_vectors`` directly: k independent md5 picks can
+    land two seeds in one cluster and none in another, and Lloyd cannot split a
     merged cell afterwards — with uuid row ids the picks differ per
     ingest, so IVF recall on clustered corpora varied run to run
     (observed: a 4-cell build on a 4-cluster corpus dropping to 0.76
@@ -70,10 +51,10 @@ def seed_centroids(df: DataFrame, id_col: str, vec_col: str, k: int,
     clusters for ANY draw the pool covers; ties break by pool order, so
     the init stays fully deterministic given ids. (The pool's membership
     is chosen by salted md5; its ORDER — and therefore the first seed
-    and tie-breaks — is id order, seed_rows' return contract.)"""
-    import numpy as np
+    and tie-breaks — is id order, codebook_vectors' return contract.)"""
+    from victor_spark.operators.pq import codebook_vectors
 
-    pool = seed_rows(df, id_col, vec_col, k * pool_mult, salt)
+    pool = codebook_vectors(df, id_col, vec_col, k * pool_mult, salt)
     if len(pool) <= k:
         return pool
     P = np.asarray(pool, dtype=np.float64)

@@ -30,7 +30,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from victor_spark.functions import hashing as H
-from victor_spark.functions.vector import _dlit_sql
+from victor_spark.functions.vector import lit_doubles_2d_sql
+
+
+def salted(df: DataFrame, id_col: str, vec_col: str, salt: str) -> DataFrame:
+    """(_id, _v, _h): every row with its salted md5 rank key — the one
+    deterministic sampling rule of the ANN model artifacts: the k rows
+    with the smallest ``_h`` (ties by ``_id``), returned in ``_id`` order."""
+    return df.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+    ).withColumn(
+        "_h", H.md5_32(F.concat(F.lit(salt + ":"), F.col("_id").cast("string")))
+    )
 
 
 def codebook_vectors(df: DataFrame, id_col: str, vec_col: str,
@@ -38,12 +49,11 @@ def codebook_vectors(df: DataFrame, id_col: str, vec_col: str,
     """Pick k codebook rows deterministically: smallest salted md5 of id.
 
     Returned ordered by id (stable). This is a driver-side collect of k
-    full vectors — k·d floats, tiny. A trained k-means model would replace
-    exactly this function.
+    full vectors — k·d floats, tiny. A trained k-means model starts from
+    exactly these rows (operators/kmeans).
     """
     rows = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .withColumn("_h", H.md5_32(F.concat(F.lit(salt + ":"), F.col("_id").cast("string"))))
+        salted(df, id_col, vec_col, salt)
         .orderBy("_h", "_id")
         .limit(k)
         .orderBy("_id")
@@ -62,10 +72,7 @@ def codebook_and_query(df: DataFrame, id_col: str, vec_col: str,
     job-launch latency of the PQ queries (each driver action costs a full
     scheduler round trip regardless of data size).
     """
-    tagged = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .withColumn("_h", H.md5_32(F.concat(F.lit(salt + ":"), F.col("_id").cast("string"))))
-    )
+    tagged = salted(df, id_col, vec_col, salt)
     cb_part = tagged.orderBy("_h", "_id").limit(k).select(
         "_id", "_v", F.lit("cb").alias("_part")
     )
@@ -84,11 +91,13 @@ def codebook_and_query(df: DataFrame, id_col: str, vec_col: str,
     return codebook, query
 
 
-def _cb_sub_sql(cb_sub_j: list[list[float]]) -> str:
-    return "array(" + ",".join(
-        "array(" + ",".join(_dlit_sql(float(x)) for x in c) + ")"
-        for c in cb_sub_j
-    ) + ")"
+def _subvector_dim(d: int, m: int) -> int:
+    """Length of each of the m contiguous subvectors of a d-dim vector;
+    ValueError unless m divides d (a remainder would silently drop the
+    tail dimensions, and d < m would leave empty subvectors)."""
+    if m < 1 or d < m or d % m:
+        raise ValueError(f"dimension {d} not divisible by m={m}")
+    return d // m
 
 
 def encode(df: DataFrame, vec_col: str, codebook: list[list[float]],
@@ -113,8 +122,7 @@ def encode(df: DataFrame, vec_col: str, codebook: list[list[float]],
     - 0.0D init + left-to-right (x-y)² folds — the order the oracle
       replays.
     """
-    d = len(codebook[0])
-    dsub = d // m
+    dsub = _subvector_dim(len(codebook[0]), m)
     cb_sub = [
         [c[j * dsub : (j + 1) * dsub] for c in codebook] for j in range(m)
     ]
@@ -127,7 +135,7 @@ def encode(df: DataFrame, vec_col: str, codebook: list[list[float]],
             "(_pqx, _pqy) -> (_pqx - _pqy) * (_pqx - _pqy)), 0.0D, "
             "(_pqs, _pqx) -> _pqs + _pqx), "
             "'code', _pqi + 1))).code), 0)"
-        ).format(s=j * dsub + 1, n=dsub, cbj=_cb_sub_sql(cb_sub[j]))
+        ).format(s=j * dsub + 1, n=dsub, cbj=lit_doubles_2d_sql(cb_sub[j]))
 
     codes_sql = "get(transform(array(`{v}`), _pqv -> array({body})), 0)".format(
         v=vec_col, body=",".join(argmin_sql(j) for j in range(m))
@@ -139,8 +147,7 @@ def adc_lut(query: list[float], codebook: list[list[float]], m: int = 8) -> list
     """Per-(subvector, code) squared distances from the query — the ADC
     lookup table, computed once per query with the same sequential fold
     as the executors' encode path."""
-    d = len(codebook[0])
-    dsub = d // m
+    dsub = _subvector_dim(len(codebook[0]), m)
     lut = []
     for j in range(m):
         row = []
@@ -163,20 +170,24 @@ def adc_topk(encoded: DataFrame, query: list[float], codebook: list[list[float]]
     a broadcast-literal LUT inside codegen — no floats read, no UDF, no
     shuffle beyond the bounded top-k merge.
     """
-    lut = adc_lut(query, codebook, m)
-    # one parsed SQL expression (the encode() rationale): the LUT literal
-    # binds once per row, terms sum left-to-right — identical tree to the
-    # builder form, pinned by the adc differential test
-    score_sql = "get(transform(array({lut}), _pql -> {terms}), 0)".format(
-        lut=_cb_sub_sql(lut),
-        terms=" + ".join(
-            f"element_at(element_at(_pql, {j + 1}), "
-            f"element_at(`{code_col}`, {j + 1}))"
-            for j in range(m)
-        ),
-    )
+    score_sql = adc_score_sql(adc_lut(query, codebook, m), code_col)
     return (
         encoded.select(F.col(id_col), F.expr(score_sql).alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(k)
+    )
+
+
+def adc_score_sql(lut: list[list[float]], code_col: str = "pq_code") -> str:
+    """The ADC score of one row, Σ_j LUT[j][code_j], as ONE parsed SQL
+    expression (the encode() rationale): the LUT literal binds once per
+    row and the m terms sum left-to-right — the fold the oracle replays,
+    pinned by the adc differential test."""
+    return "get(transform(array({lut}), _pql -> {terms}), 0)".format(
+        lut=lit_doubles_2d_sql(lut),
+        terms=" + ".join(
+            f"element_at(element_at(_pql, {j + 1}), "
+            f"element_at(`{code_col}`, {j + 1}))"
+            for j in range(len(lut))
+        ),
     )

@@ -6580,7 +6580,7 @@ def q_dsir_weights(spark, sf_dir):
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     d = docs.select("doc_id", "lang", T.tokens("lower(text)").alias("t"))
     tok = d.select("doc_id", "lang", F.explode("t").alias("w")).select(
-        "doc_id", "lang", (H._md5_32_expr(F.col("w")) % 64).alias("bkt")
+        "doc_id", "lang", (H.md5_32(F.col("w")) % 64).alias("bkt")
     )
     # ONE corpus pass builds BOTH bucket-count columns (round-11
     # optimization): the old raw/tgt split aggregated the token stream
@@ -6653,7 +6653,7 @@ def q_dsir_weights(spark, sf_dir):
     logw = F.aggregate(
         t,
         F.lit(0.0),
-        lambda a, w: a + F.element_at(F.col("_lr"), H._md5_32_expr(w) % 64),
+        lambda a, w: a + F.element_at(F.col("_lr"), H.md5_32(w) % 64),
     )
     return d.crossJoin(lr_map).select(
         "doc_id",
@@ -7238,7 +7238,7 @@ def q_dedup_substring_global(spark, sf_dir):
                     F.sequence(F.lit(1), F.size(tt) - (W - 1)),
                     lambda i: F.struct(
                         i.alias("pos"),
-                        H._md5_32_expr(
+                        H.md5_32(
                             F.array_join(F.slice(tt, i, W), " ")
                         ).alias("h"),
                     ),
