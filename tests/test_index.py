@@ -1189,3 +1189,208 @@ def test_shard_lifecycle_capstone(spark, tmp_path):
     d2 = [round(r["adc_dist"], 12)
           for r in target.search_ivfpq(q0, k=5, nprobe=2).collect()]
     assert d1 == d2
+
+
+# -- the insert write path: one Spark job, the dimension from the listing ---
+
+
+def _run_counting_jobs(spark, fn):
+    """``fn()`` under a fresh job group: (its result, the Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _staging_dirs(idx):
+    import os
+
+    if not os.path.exists(idx.path):
+        return []
+    return [n for n in os.listdir(idx.path) if n.endswith("__staging")]
+
+
+def test_insert_runs_one_spark_job(idx, monkeypatch):
+    """A 100-row insert into a non-empty, unprojected index is one Spark
+    job, the staging write: the batch is an Arrow-built local relation
+    (no Python worker re-reads its rows), the stored dimension comes from
+    the listing, and the batch's dimension and tag-sets are observed on
+    the write itself."""
+    import random
+
+    rng = random.Random(3)
+
+    def batch(name):
+        return [(f"{name}{i}", [rng.gauss(0, 1) for _ in range(8)],
+                 [f"t{i % 4}", "all"]) for i in range(100)]
+
+    idx.insert(batch("a"))
+    frames = []
+    real = VectorIndex.insert_df
+
+    def spy(self, df):
+        frames.append(df)
+        return real(self, df)
+
+    monkeypatch.setattr(VectorIndex, "insert_df", spy)
+    _, jobs = _run_counting_jobs(idx.spark, lambda: idx.insert(batch("b")))
+    assert jobs == 1
+    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert idx.scan().count() == 200
+    assert sorted(s["rows"] for s in idx.stats()) == [50, 50, 50, 50]
+
+
+def test_insert_leaves_the_session_serializable(spark, idx):
+    """The insert's observed metrics must not set the session's own
+    ObservationManager: Spark keeps it in a non-transient field, and a
+    session holding one fails every job whose closure captures the
+    session, such as a fitted LogisticRegressionModel's transform."""
+    idx.insert([("a", [1.0, 0.0], ["x"])])
+    spark._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)
+
+
+def test_insert_and_insert_df_store_identical_rows(spark, tmp_path):
+    """The list entry point and the DataFrame entry point store the same
+    bytes: identical multisets of (content, tags, qmin, qmax, quant)."""
+    from collections import Counter
+
+    from victor_spark.index import INSERT_SCHEMA
+
+    rows = [(f"doc{i}", [float((i * 7 + j) % 11) - 5.0 for j in range(6)],
+             [["b", "a", "b"], [], ["c"], ["a", "c"]][i % 4]) for i in range(40)]
+    a = VectorIndex(spark, str(tmp_path / "via_insert"))
+    b = VectorIndex(spark, str(tmp_path / "via_insert_df"))
+    a.insert(rows)
+    b.insert_df(spark.createDataFrame(rows, INSERT_SCHEMA))
+
+    def stored(ix):
+        return Counter(
+            (r["content"], tuple(r["tags"]), r["qmin"], r["qmax"], tuple(r["quant"]))
+            for r in spark.read.parquet(ix.data_path).collect()
+        )
+
+    assert stored(a) == stored(b)
+    assert len(stored(a)) == 40
+
+
+def test_rejected_batches_leave_nothing_behind(spark, idx):
+    """A wrong-dimension batch into a non-empty index and a mixed-dimension
+    batch into an empty one raise after the staging write, before any
+    file goes live: no new rows, no listing change, no staging directory."""
+    idx.insert([("ok", [1.0, 2.0, 3.0], ["x"])])
+    listing = idx._read_listing()
+    with pytest.raises(DimensionMismatchError,
+                       match=r"index dimension 3, batch dimensions \[4\]"):
+        idx.insert([("bad", [1.0, 2.0, 3.0, 4.0], ["y"])])
+    assert [r["content"] for r in idx.scan().collect()] == ["ok"]
+    assert idx._read_listing() == listing
+    assert _staging_dirs(idx) == []
+
+    empty = VectorIndex(spark, idx.path + "_empty")
+    with pytest.raises(DimensionMismatchError,
+                       match=r"index dimension None, batch dimensions \[2, 3\]"):
+        empty.insert([("a", [1.0, 2.0], []), ("b", [1.0, 2.0, 3.0], [])])
+    assert empty.is_empty()
+    assert empty._read_listing() is None
+    assert _staging_dirs(empty) == []
+
+
+def test_empty_batch_is_a_noop(spark, idx):
+    from victor_spark.index import INSERT_SCHEMA
+
+    idx.insert([])
+    assert idx.is_empty() and idx._read_listing() is None
+    idx.insert([("a", [1.0, 0.0], ["x"])])
+    listing = idx._read_listing()
+    idx.insert_df(spark.createDataFrame([], INSERT_SCHEMA))
+    assert idx._read_listing() == listing
+    assert idx.scan().count() == 1
+    assert _staging_dirs(idx) == []
+
+
+def test_listing_without_dimension_key_heals(spark, idx):
+    """A listing that lacks the dimension key, as one written before the
+    listing carried it: the index still rejects a wrong-dimension batch
+    (dimension() falls back to a scan), and the next listing write
+    records the key, after which dimension() runs no job."""
+    idx.insert([("a", [1.0, 0.0, 0.0], ["x"])])
+    rows, dim = idx._read_listing()
+    assert dim == 3
+    idx._write_tag_sets(rows)  # strip the key
+    assert idx._read_listing() == (rows, None)
+    with pytest.raises(DimensionMismatchError):
+        idx.insert([("bad", [1.0, 0.0], ["x"])])
+    assert idx.dimension() == 3
+    # the batch's tag-set is listed already: only the key is new
+    idx.insert([("b", [0.0, 1.0, 0.0], ["x"])])
+    assert idx._read_listing() == (rows, 3)
+    assert _run_counting_jobs(spark, idx.dimension) == (3, 0)
+
+
+def test_dimension_fallback_reads_unfilled_partition_as_empty(idx):
+    """A first insert creates its partition directory before moving its
+    files in. A second writer asking for the dimension in between (no
+    listing yet) sees an empty index dimension, not a schema-inference
+    failure on the empty directory."""
+    import os
+
+    os.makedirs(idx._part_dir("0" * 64))
+    assert idx.dimension() is None
+
+
+def test_projected_dimension_runs_no_job(spark, idx):
+    idx.insert([(f"doc{i}", [1.0, float(i), 0.5, float(i % 2)], [])
+                for i in range(6)])
+    idx.project(k=2)
+    assert _run_counting_jobs(spark, idx.dimension) == (2, 0)
+    assert idx._read_listing()[1] == 2
+
+
+def _python_row_frames(source: str) -> list[int]:
+    """Lines of ``source`` that build a DataFrame from Python rows: a
+    ``createDataFrame`` whose data argument is a non-empty list or tuple
+    literal or a comprehension, or any ``createDataFrame`` outside
+    ``_local_frame`` other than an empty-result frame (``[]``)."""
+    import ast
+
+    tree = ast.parse(source)
+    local = {id(n) for fn in ast.walk(tree)
+             if isinstance(fn, ast.FunctionDef) and fn.name == "_local_frame"
+             for n in ast.walk(fn)}
+    rows = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp)
+    bad = []
+    for call in ast.walk(tree):
+        if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "createDataFrame"):
+            continue
+        data = call.args[0] if call.args else next(
+            (k.value for k in call.keywords if k.arg == "data"), None)
+        empty = isinstance(data, ast.List) and not data.elts
+        if (isinstance(data, rows) and not empty) or (
+                id(call) not in local and not empty):
+            bad.append(call.lineno)
+    return bad
+
+
+def test_index_builds_local_frames_from_arrow():
+    """Every local frame index.py builds goes through _local_frame (an
+    Arrow table, held by Spark as a LocalRelation). A frame over Python
+    rows is a PipelinedRDD that Python workers unpickle again in every
+    job that reads it; only the empty-result frames may pass ``[]``."""
+    import inspect
+
+    import victor_spark.index as index_module
+
+    assert _python_row_frames(inspect.getsource(index_module)) == []
+    # the check itself catches each shape it forbids
+    for data in ("[(1,)]", "[(x,) for x in xs]", "((1,),)", "rows"):
+        assert _python_row_frames(
+            f"def f(spark, xs, rows):\n    spark.createDataFrame({data}, 'a int')\n"
+        ) == [2], data

@@ -9,11 +9,15 @@ float32 range, HALF_UP bins of 255), so search scores are compared to the
 model's cosine at 1e-9, and each replayed vector is checked to lie within
 half a quantization bin of its input (the bound behind BASELINE.md's
 max-abs-err < 0.0005). After every step the stored rows equal the model
-(no row lost or duplicated) and ``stats()`` counts match it."""
+(no row lost or duplicated) and ``stats()`` counts match it. Besides
+insert, search, delete, compact and clear, the rules cover merge_from, two
+writers interleaved on one path (listing_lock on and off), a crash between
+staging and publish, and batches the dimension check rejects."""
 
 from __future__ import annotations
 
 import math
+import os
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -28,15 +32,21 @@ from hypothesis.stateful import (
     rule,
 )
 
-from victor_spark.index import VectorIndex
+from victor_spark.index import DimensionMismatchError, VectorIndex
 
 DIM = 4
 TAGS = ["a", "b", "c"]
 
 component = st.integers(min_value=-8, max_value=8).map(lambda x: x / 4.0)
-vector = st.lists(component, min_size=DIM, max_size=DIM).filter(
-    lambda v: any(x != 0.0 for x in v)
-)
+
+
+def vectors(dim: int):
+    return st.lists(component, min_size=dim, max_size=dim).filter(
+        lambda v: any(x != 0.0 for x in v)
+    )
+
+
+vector = vectors(DIM)
 tag_set = st.sets(st.sampled_from(TAGS), max_size=2).map(sorted)
 query_tags = st.one_of(st.none(), st.sets(st.sampled_from(TAGS), min_size=1,
                                           max_size=1).map(sorted))
@@ -78,6 +88,33 @@ class _CrashingFS:
 
     def __getattr__(self, name):
         return getattr(self._inner, name)
+
+
+class _Interleave:
+    """Delegates to an index's fs; runs ``hook`` once, right before the
+    first ``method`` call whose path argument contains ``marker`` — another
+    writer's whole operation landing inside this writer's."""
+
+    def __init__(self, inner, method: str, marker: str, hook):
+        self._inner, self._method, self._marker = inner, method, marker
+        self.hook = hook
+
+    def run_pending(self):
+        hook, self.hook = self.hook, None
+        if hook is not None:
+            hook()
+
+    def __getattr__(self, name):
+        attr = getattr(self._inner, name)
+        if name != self._method:
+            return attr
+
+        def call(p, *args):
+            if self._marker in p:
+                self.run_pending()
+            return attr(p, *args)
+
+        return call
 
 
 class IndexMachine(RuleBasedStateMachine):
@@ -162,6 +199,54 @@ class IndexMachine(RuleBasedStateMachine):
         assert len(self.idx.recover_staged()) == 1
         self._admit(rows)
 
+    @rule(data=st.data())
+    def reject_wrong_dimension(self, data):
+        """A batch the dimension check refuses — another dimension than a
+        non-empty index's, or two dimensions into an empty one. Nothing
+        goes live and no staging directory is left behind."""
+        vecs = [data.draw(vectors(DIM + 1))]
+        if not self.model:
+            vecs.append(data.draw(vector))
+        rows = self._rows([(v, []) for v in vecs])
+        with pytest.raises(DimensionMismatchError):
+            self.idx.insert(rows)
+        if os.path.exists(self.idx.path):
+            assert not [n for n in os.listdir(self.idx.path)
+                        if n.endswith("__staging")]
+
+    @rule(batch=st.lists(st.tuples(vector, tag_set), min_size=1, max_size=4))
+    def merge_from(self, batch):
+        type(self).runs += 1
+        shard = VectorIndex(self.spark, f"{self.root}/shard{self.runs}")
+        rows = self._rows(batch)
+        shard.insert(rows)
+        assert self.idx.merge_from(shard) == len(rows)
+        self._admit(rows)
+
+    @precondition(lambda self: self.model)
+    @rule(a=st.lists(st.tuples(vector, tag_set), min_size=1, max_size=3),
+          b=st.lists(st.tuples(vector, tag_set), min_size=1, max_size=3),
+          lock=st.booleans())
+    def concurrent_writers(self, a, b, lock):
+        """Two VectorIndex objects on one path; the second's whole insert
+        lands inside the first's. With listing_lock on it lands while the
+        first publishes its staged files (outside the lock); with it off,
+        between the first's listing read and its replace — the lost-update
+        window, which the next consult of the listing heals. When the
+        first writes no listing, the second inserts after it."""
+        first = VectorIndex(self.spark, self.idx.path, listing_lock=lock)
+        second = VectorIndex(self.spark, self.idx.path, listing_lock=lock)
+        rows_a, rows_b = self._rows(a), self._rows(b)
+        first.fs = _Interleave(
+            first.fs, *(("rename", "__staging") if lock
+                        else ("write_bytes_atomic", first.tagsets_path)),
+            hook=lambda: second.insert(rows_b),
+        )
+        first.insert(rows_a)
+        first.fs.run_pending()
+        self._admit(rows_a + rows_b)
+        assert not os.path.exists(first.lock_path)
+
     @rule(q=vector, k=st.integers(min_value=1, max_value=6), tags=query_tags)
     def search(self, q, k, tags):
         rows = self.idx.search(q, k=k, tags=tags).collect()
@@ -241,7 +326,7 @@ def test_index_state_machine(spark, tmp_path):
     run = IndexMachine.TestCase
     run.settings = settings(
         max_examples=8,
-        stateful_step_count=10,
+        stateful_step_count=9,
         deadline=None,
         database=None,
         derandomize=True,

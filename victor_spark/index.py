@@ -33,6 +33,8 @@ import hashlib
 import io
 import json
 import os
+import weakref
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +70,54 @@ INSERT_SCHEMA = StructType(
         StructField("tags", ArrayType(StringType()), True),
     ]
 )
+
+# key of the stored dimension in the listing's parquet key-value metadata
+_DIM_KEY = b"victor_spark.dimension"
+
+
+def _local_frame(spark: SparkSession, columns: dict[str, list],
+                 schema: str | StructType) -> DataFrame:
+    """A frame of driver-side values, built as an Arrow table and cast to
+    ``schema``. Spark holds it as a LocalRelation, so no job that reads it
+    starts a Python worker; a Python list would go through a PipelinedRDD
+    whose rows Python workers unpickle again in every job that reads them."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
+# One ObservationManager per session, made here: DataFrame.observe with an
+# Observation would create the session's own, which Spark 4.1 keeps in a
+# non-transient field of the session. From then on the session does not
+# serialize, and every job whose closure captures it (a fitted
+# LogisticRegressionModel's training summary, say) fails.
+_OBSERVERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _observe(df: DataFrame, *metrics: Column) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with aggregate ``metrics`` observed, and a function that
+    returns them by alias once the first action on that frame has run."""
+    import uuid as _uuid
+
+    from pyspark.serializers import CPickleSerializer
+
+    spark = df.sparkSession
+    jvm = spark._jvm
+    manager = _OBSERVERS.get(spark)
+    if manager is None:
+        manager = jvm.org.apache.spark.sql.classic.ObservationManager(
+            spark._jsparkSession
+        )
+        _OBSERVERS[spark] = manager
+    name = f"observed_{_uuid.uuid4().hex}"
+    observation = jvm.org.apache.spark.sql.Observation(name)
+    manager.register(observation, df._jdf)
+    to_py_row = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.toPyRow
+
+    def get() -> dict:
+        return CPickleSerializer().loads(to_py_row(observation.getRow())).asDict()
+
+    return df.observe(name, *metrics), get
 
 
 def _canon_path(p: str) -> str:
@@ -236,14 +286,15 @@ class VectorIndex:
         """Batch insert of (content, embedding, tags) triples.
 
         Reference add_embeddings (db.rs:142-164): uuid per row, route to the
-        tag-set file, quantize via serde, append. Here: one DataFrame append
-        partitioned by tag_set_id; `uuid()` is a codegen'd expression.
+        tag-set file, quantize via serde, append. Here the batch becomes an
+        Arrow-built local frame (:func:`_local_frame`) and goes through
+        :meth:`insert_df`: one Spark job, no Python worker.
         """
-        df = self.spark.createDataFrame(
-            [(c, [float(x) for x in v], sorted(set(t))) for c, v, t in rows],
-            schema=INSERT_SCHEMA,
-        )
-        self.insert_df(df)
+        self.insert_df(_local_frame(self.spark, {
+            "content": [c for c, _v, _t in rows],
+            "embedding": [[float(x) for x in v] for _c, v, _t in rows],
+            "tags": [sorted(set(t)) for _c, _v, t in rows],
+        }, INSERT_SCHEMA))
 
     def add(self, texts: list[str], tags: list[str] | None = None,
             dim: int = 64) -> None:
@@ -253,8 +304,8 @@ class VectorIndex:
         job — one distributed pass, no driver materialization."""
         from victor_spark.functions.embedder import embed
 
-        df = self.spark.createDataFrame(
-            [(t,) for t in texts], "content string"
+        df = _local_frame(
+            self.spark, {"content": list(texts)}, "content string"
         ).select(
             "content",
             embed("content", dim).alias("embedding"),
@@ -297,9 +348,9 @@ class VectorIndex:
         query string driver-side with the same model, then vector search."""
         from victor_spark.functions.embedder import embed_query
 
-        dim = self.dimension()
         model = self._load_model()
-        query_dim = dim if model is None else model.components.shape[0]
+        query_dim = (self._listed_dimension() if model is None
+                     else model.components.shape[0])
         return self.search(embed_query(text, query_dim or 64), k=k, tags=tags)
 
     def search_rerank(self, text: str, k: int = 5, fetch_k: int = 20,
@@ -385,41 +436,51 @@ class VectorIndex:
         )
 
     def insert_df(self, df: DataFrame) -> None:
-        """Insert from a DataFrame with (content, embedding, tags) columns."""
+        """Insert from a DataFrame with (content, embedding, tags) columns.
+
+        One Spark job: the staging write (:meth:`_stage`). Metrics
+        observed on the staged rows (:func:`_observe`) collect the batch's
+        smallest and largest vector size and its distinct tag-sets while
+        that job runs.
+        They are checked after the write and before any file goes live: a
+        batch of another dimension than the index's (the model's input
+        dimension in projected mode), or one that mixes dimensions, has
+        its staging directory deleted and raises DimensionMismatchError.
+        The stored dimension comes from the listing (:meth:`dimension`),
+        not from the data. Tags are deduplicated and sorted; an empty
+        batch stores nothing."""
         model = self._load_model()
         # In projected mode incoming vectors carry the ORIGINAL dimension
         # (the model's input side) and are projected before write
         # (db.rs:480-499); otherwise they must match the stored dimension.
-        dim = model.components.shape[0] if model is not None else self.dimension()
+        dim = (model.components.shape[0] if model is not None
+               else self._listed_dimension())
         tags_norm = F.array_sort(F.array_distinct(F.coalesce(F.col("tags"), F.array())))
-        # one validation pass over the batch yields BOTH the dimension check
-        # and the batch's distinct tag-sets (the rows for the tag-set
-        # metadata listing) — distinct (dim, tag-set) combos are few by
-        # construction, so the collect is bounded
-        combos = (
-            df.select(F.size("embedding").alias("d"), tags_norm.alias("tags"))
-            .distinct()
-            .collect()
-        )
-        batch_dims = sorted({r["d"] for r in combos})
-        if len(batch_dims) > 1 or (dim is not None and batch_dims and batch_dims[0] != dim):
-            raise DimensionMismatchError(
-                f"index dimension {dim}, batch dimensions {batch_dims}"
-            )
-        batch_sets = {tuple(r["tags"]) for r in combos}
-        staged = df.select(
-            F.col("content"),
-            F.col("embedding").cast("array<double>").alias("_vec"),
-            tags_norm.alias("_tags"),
+        # a NULL embedding counts as size -1, so it fails the check
+        size = F.coalesce(F.size("_vec"), F.lit(-1))
+        staged, observed = _observe(
+            df.select(
+                F.col("content"),
+                F.col("embedding").cast("array<double>").alias("_vec"),
+                tags_norm.alias("_tags"),
+            ),
+            F.min(size).alias("lo"),
+            F.max(size).alias("hi"),
+            F.collect_set("_tags").alias("tag_sets"),
         )
         if model is not None:
             # projected-insert path (db.rs:480-499); the projection gets its
             # own select so the large-model pandas_udf path is a standalone
             # projection stage (a UDF can't appear inside quantize's
-            # transform() lambdas)
+            # transform() lambdas). A vector of the wrong size projects as
+            # zeros, so the write completes and the check rejects the batch.
+            d_in = model.components.shape[0]
+            fit = F.when(F.size("_vec") == d_in, F.col("_vec")).otherwise(
+                F.array_repeat(F.lit(0.0), d_in)
+            )
             staged = staged.select(
                 "content",
-                project_column("_vec", model).cast("array<double>").alias("_vec"),
+                project_column(fit, model).cast("array<double>").alias("_vec"),
                 "_tags",
             )
 
@@ -430,14 +491,28 @@ class VectorIndex:
             "_vec",
             F.sha2(F.array_join(F.col("_tags"), ","), 256).alias("tag_set_id"),
         ), "_vec")
-        self._staged_append(out)
-        # data first, then metadata: the listing must never name a tag-set
-        # whose partition directory doesn't exist yet
-        self._register_tag_sets(batch_sets)
 
-    def _staged_append(self, out: DataFrame) -> None:
-        """Append partitioned rows via a PRIVATE staging directory plus
-        per-file moves into the live partition dirs.
+        staging = self._stage(out)
+        got = observed()
+        batch_dims = sorted({got["lo"], got["hi"]} - {None})
+        if len(batch_dims) > 1 or (dim is not None and batch_dims
+                                   and batch_dims[0] != dim):
+            self.fs.delete(staging)
+            raise DimensionMismatchError(
+                f"index dimension {dim}, batch dimensions {batch_dims}"
+            )
+        self._publish(staging)
+        if got["tag_sets"]:
+            # data first, then metadata: the listing must never name a
+            # tag-set whose partition directory doesn't exist yet
+            self._register_tag_sets(
+                {tuple(ts) for ts in got["tag_sets"]},
+                model.components.shape[1] if model is not None else got["hi"],
+            )
+
+    def _stage(self, out: DataFrame) -> str:
+        """Write partitioned rows to a PRIVATE staging directory and
+        return its path; :meth:`_publish` then moves them live per file.
 
         A direct ``write.mode("append").parquet(data_path)`` is NOT safe
         under concurrent writers: Hadoop's FileOutputCommitter stages
@@ -449,7 +524,13 @@ class VectorIndex:
         whose names are globally unique, into the live partition
         directories. File moves never collide, so concurrent insert_df /
         merge_from calls are safe on the DATA side; the listing side
-        remains merge-on-write + reconciler (contract above).
+        remains merge-on-write + reconciler (contract below).
+
+        The write leaves out Spark's ``_SUCCESS`` marker: _publish writes
+        it once the caller's checks have passed, so a staging directory
+        with the marker holds a complete batch that was cleared to go live,
+        and one without it (an interrupted write, or a batch being checked)
+        is never published by :meth:`recover_staged`.
 
         FAILURE CONTRACT: the staging directory is deleted only after
         EVERY part file has moved. If the move loop fails partway (crash,
@@ -466,7 +547,14 @@ class VectorIndex:
         import uuid as _uuid
 
         staging = f"{self.data_path}__insert_{_uuid.uuid4().hex[:12]}__staging"
-        out.write.mode("overwrite").partitionBy("tag_set_id").parquet(staging)
+        out.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        ).partitionBy("tag_set_id").parquet(staging)
+        return staging
+
+    def _publish(self, staging: str) -> None:
+        """Mark a checked staging directory complete, then move it live."""
+        self.fs.write_bytes(fsjoin(staging, "_SUCCESS"), b"")
         self._complete_staged_moves(staging)
 
     def _complete_staged_moves(self, staging: str) -> None:
@@ -475,7 +563,7 @@ class VectorIndex:
         that already exists means an earlier attempt moved this file
         (rename is atomic locally and on HDFS; on object stores the
         copy half completed) — drop the source instead of re-moving. On
-        failure the staging dir is left in place (see _staged_append's
+        failure the staging dir is left in place (see _stage's
         failure contract)."""
         for tsid in self._partition_ids(staging):
             live = self._part_dir(tsid)
@@ -493,8 +581,9 @@ class VectorIndex:
     def recover_staged(self) -> list[str]:
         """Complete any insert/merge interrupted during its move phase.
 
-        A ``__staging`` directory containing Spark's ``_SUCCESS`` marker
-        holds a COMPLETELY written batch whose per-file moves did not all
+        A ``__staging`` directory containing the ``_SUCCESS`` marker
+        (written by _publish once the batch passed its checks) holds a
+        COMPLETELY written batch whose per-file moves did not all
         finish — resume them (exactly-once, see _complete_staged_moves)
         and reconcile the tag listing so the recovered partitions are
         queryable. A staging dir WITHOUT ``_SUCCESS`` is an interrupted
@@ -527,6 +616,17 @@ class VectorIndex:
     # through self.fs, so the listing lives wherever the data lives
     # (local disk, HDFS, object store).
     #
+    # THE DIMENSION: the listing also carries the stored vectors'
+    # dimension, as key-value metadata (_DIM_KEY) of its parquet file —
+    # the analog of the record size in the reference's vector-file header
+    # (db.rs:516-539). insert's dimension check, dimension(), search_text
+    # and merge_from read it there instead of from the data. _tag_sets
+    # writes it when it registers a batch (and project() when the stored
+    # space changes), _after_drop carries it over, and clear() removes it
+    # with the listing. A listing without the key (one written before the
+    # listing carried it) makes dimension() fall back to a one-row scan;
+    # the next listing write records the key.
+    #
     # ONE RESOLVER: every consult of the listing — insert's registration,
     # tagged scans and delete, stats, recover_staged, merge_from — goes
     # through _tag_sets, which diffs the listing against the partition
@@ -548,8 +648,11 @@ class VectorIndex:
     # append-only parquet writes and commute; only the listing flip
     # needs the lock).
 
-    def _read_tag_sets(self) -> list[tuple[str, list[str]]] | None:
-        """The (tag_set_id, tags) listing, or None if no metadata exists
+    def _read_listing(
+        self,
+    ) -> tuple[list[tuple[str, list[str]]], int | None] | None:
+        """The (tag_set_id, tags) rows and the stored dimension the listing
+        carries (None when it lacks the key), or None if no listing exists
         (an index written before this listing existed)."""
         if not self.fs.exists(self.tagsets_path):
             return None
@@ -557,12 +660,19 @@ class VectorIndex:
         import pyarrow.parquet as papq
 
         t = papq.read_table(pa.BufferReader(self.fs.read_bytes(self.tagsets_path)))
+        dim = (t.schema.metadata or {}).get(_DIM_KEY)
         return list(zip(
             (str(x) for x in t.column("tag_set_id").to_pylist()),
             ([list(v) for v in t.column("tags").to_pylist()]),
-        ))
+        )), None if dim is None else int(dim)
 
-    def _write_tag_sets(self, rows: list[tuple[str, list[str]]]) -> None:
+    def _read_tag_sets(self) -> list[tuple[str, list[str]]] | None:
+        """The listing's (tag_set_id, tags) rows, or None (_read_listing)."""
+        listing = self._read_listing()
+        return None if listing is None else listing[0]
+
+    def _write_tag_sets(self, rows: list[tuple[str, list[str]]],
+                        dim: int | None = None) -> None:
         import pyarrow as pa
         import pyarrow.parquet as papq
 
@@ -570,6 +680,8 @@ class VectorIndex:
             "tag_set_id": pa.array([r[0] for r in rows], pa.string()),
             "tags": pa.array([r[1] for r in rows], pa.list_(pa.string())),
         })
+        if dim is not None:
+            t = t.replace_schema_metadata({_DIM_KEY: str(dim).encode()})
         sink = pa.BufferOutputStream()
         papq.write_table(t, sink)
         self.fs.write_bytes_atomic(self.tagsets_path, sink.getvalue().to_pybytes())
@@ -657,22 +769,18 @@ class VectorIndex:
     def _release_listing_lock(self) -> None:
         self.fs.delete(self.lock_path)
 
-    def _register_tag_sets(self, batch_sets: set[tuple[str, ...]]) -> None:
-        if self.listing_lock:
-            self._acquire_listing_lock()
-            try:
-                self._register_tag_sets_unlocked(batch_sets)
-            finally:
-                self._release_listing_lock()
+    def _register_tag_sets(self, batch_sets: set[tuple[str, ...]],
+                           dim: int | None = None) -> None:
+        """List a written batch's tag-sets and the stored dimension."""
+        known = [(tag_set_id(list(ts)), list(ts)) for ts in sorted(batch_sets)]
+        if not self.listing_lock:
+            self._tag_sets(known, dim)
             return
-        self._register_tag_sets_unlocked(batch_sets)
-
-    def _register_tag_sets_unlocked(
-        self, batch_sets: set[tuple[str, ...]]
-    ) -> None:
-        self._tag_sets(
-            known=[(tag_set_id(list(ts)), list(ts)) for ts in sorted(batch_sets)]
-        )
+        self._acquire_listing_lock()
+        try:
+            self._tag_sets(known, dim)
+        finally:
+            self._release_listing_lock()
 
     def _part_dir(self, tsid: str, root: str | None = None) -> str:
         return fsjoin(root or self.data_path, _PART + tsid)
@@ -687,10 +795,12 @@ class VectorIndex:
         )
 
     def _tag_sets(
-        self, known: list[tuple[str, list[str]]] = ()
+        self, known: list[tuple[str, list[str]]] = (), dim: int | None = None
     ) -> list[tuple[str, list[str]]]:
         """The (tag_set_id, tags) listing, healed against the data layout
         and extended by ``known`` entries (an insert's batch tag-sets).
+        A ``dim`` the listing does not carry yet is written with it;
+        otherwise a rewrite keeps the listed dimension.
 
         The check is ONE directory listing: a partition the listing does
         not name — an index written before the listing existed, a crash
@@ -702,7 +812,7 @@ class VectorIndex:
         before the replace and unioned (merge-on-write: the data write can
         take minutes, so this shrinks the lost-update window to the
         read→replace gap)."""
-        listing = self._read_tag_sets()
+        listing, listed_dim = self._read_listing() or (None, None)
         have = {tsid for tsid, _ in listing or []}
         add = [(tsid, ts) for tsid, ts in known if tsid not in have]
         have |= {tsid for tsid, _ in known}
@@ -716,14 +826,14 @@ class VectorIndex:
             ).first()
             if row is not None:
                 add.append((tsid, list(row["tags"])))
-        if listing is not None and not add:
+        if listing is not None and not add and dim in (None, listed_dim):
             return listing
-        latest = self._read_tag_sets() or []
+        latest, latest_dim = self._read_listing() or ([], None)
         merged = sorted(
             {(tsid, tuple(ts)) for tsid, ts in latest + (listing or []) + add}
         )
         listing = [(tsid, list(ts)) for tsid, ts in merged]
-        self._write_tag_sets(listing)
+        self._write_tag_sets(listing, latest_dim if dim is None else dim)
         return listing
 
     def _matching_tag_set_ids(self, tags: list[str]) -> list[str]:
@@ -779,10 +889,10 @@ class VectorIndex:
         rows — worse than the acceptable "stale-missing" of post-build
         inserts; callers rebuild when they next need the ANN path."""
         if dropped:
-            self._write_tag_sets([
-                (tsid, ts) for tsid, ts in self._read_tag_sets() or []
-                if tsid not in dropped
-            ])
+            rows, dim = self._read_listing() or ([], None)
+            self._write_tag_sets(
+                [(tsid, ts) for tsid, ts in rows if tsid not in dropped], dim
+            )
         if self._partition_ids():
             self._drop_ann_artifacts()
         else:
@@ -881,9 +991,30 @@ class VectorIndex:
         return _decode(df)
 
     def dimension(self) -> int | None:
+        """The stored vectors' dimension (None for an empty index): the
+        model's output side in projected mode, otherwise the dimension
+        the listing carries — no Spark job either way, unless the listing
+        lacks it (see the listing contract)."""
         if self.is_empty():
             return None
-        row = self.spark.read.parquet(self.data_path).select(F.size("quant").alias("d")).first()
+        model = self._load_model()
+        if model is not None:
+            return model.components.shape[1]
+        return self._listed_dimension()
+
+    def _listed_dimension(self) -> int | None:
+        """The dimension the listing carries; one stored row's when the
+        listing lacks it; None for an empty index."""
+        if self.is_empty():
+            return None
+        listing = self._read_listing()
+        if listing is not None and listing[1] is not None:
+            return listing[1]
+        # explicit schema: a partition directory a concurrent first insert
+        # has created but not yet filled reads as empty
+        row = self.spark.read.schema("quant array<tinyint>").parquet(
+            self.data_path
+        ).select(F.size("quant").alias("d")).first()
         return row["d"] if row else None
 
     # -- search ------------------------------------------------------------
@@ -957,9 +1088,10 @@ class VectorIndex:
         qdim = len(qrows[0][1])
         for _qid, q in qrows:
             _check_dim(len(q), qdim, "first query")
-        qdf = F.broadcast(self.spark.createDataFrame(
-            qrows, "query_id string, _qv array<double>"
-        ))
+        qdf = F.broadcast(_local_frame(self.spark, {
+            "query_id": [qid for qid, _q in qrows],
+            "_qv": [q for _qid, q in qrows],
+        }, "query_id string, _qv array<double>"))
         score = (euclidean("embedding", "_qv") if model is not None
                  else cosine("embedding", "_qv"))
         df = self.scan(tags).crossJoin(qdf).withColumn("score", score)
@@ -1122,8 +1254,9 @@ class VectorIndex:
         struct: partial aggregation combines map-side, one shuffled row
         per id — cheaper than a window's full sort of every (row,
         centroid) pair."""
-        cent_df = F.broadcast(self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cell int, cv array<double>"
+        cent_df = F.broadcast(_local_frame(
+            self.spark, {"cell": list(range(len(cents))), "cv": cents},
+            "cell int, cv array<double>",
         ))
         scored = df.crossJoin(cent_df).withColumn(
             "_cs", cosine("embedding", "cv")
@@ -1345,8 +1478,9 @@ class VectorIndex:
             raise ValueError("cannot merge an index into itself")
         if other.is_empty():
             return 0
+        d_other = other.dimension()
         if not self.is_empty():
-            d_self, d_other = self.dimension(), other.dimension()
+            d_self = self.dimension()
             if d_self != d_other:
                 raise DimensionMismatchError(
                     f"cannot merge dimension {d_other} into {d_self}"
@@ -1374,9 +1508,11 @@ class VectorIndex:
             other.fs.parquet_row_count(other._part_dir(tsid))
             for tsid in other._partition_ids()
         )
-        self._staged_append(other.spark.read.parquet(other.data_path))
+        self._publish(self._stage(other.spark.read.parquet(other.data_path)))
         # data first, then metadata (same ordering contract as insert_df)
-        self._register_tag_sets({tuple(ts) for _tsid, ts in other._tag_sets()})
+        self._register_tag_sets(
+            {tuple(ts) for _tsid, ts in other._tag_sets()}, d_other
+        )
         self._drop_ann_artifacts()
         return n
 
@@ -1574,6 +1710,7 @@ class VectorIndex:
         tmp = self.data_path + ".projected"
         projected.write.mode("overwrite").partitionBy("tag_set_id").parquet(tmp)
         self.fs.replace(tmp, self.data_path)
+        self._tag_sets(dim=model.components.shape[1])
         buf = io.BytesIO()
         model.save(buf)
         self.fs.write_bytes_atomic(self.model_path, buf.getvalue())
