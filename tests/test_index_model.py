@@ -12,12 +12,14 @@ max-abs-err < 0.0005). After every step the stored rows equal the model
 (no row lost or duplicated) and ``stats()`` counts match it. Besides
 insert, search, delete, compact and clear, the rules cover merge_from, two
 writers interleaved on one path (listing_lock on and off), a crash between
-staging and publish, and batches the dimension check rejects."""
+staging and publish, batches the dimension check rejects, and a vacuum of
+crash debris beside the live table."""
 
 from __future__ import annotations
 
 import math
 import os
+import time
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -287,6 +289,22 @@ class IndexMachine(RuleBasedStateMachine):
     def compact(self):
         out = self.idx.compact(target_rows_per_file=3)
         assert out["rows"] == len(self.model)
+
+    @rule(aged=st.booleans())
+    def vacuum(self, aged):
+        """An interrupted ANN build's staging directory beside the live
+        table: vacuum leaves it while fresh (a live writer may own it),
+        reclaims it once aged, and never touches a live row — the
+        invariants compare the stored rows with the model afterwards."""
+        debris = os.path.join(self.idx.path, "ivf_data__building")
+        os.makedirs(debris, exist_ok=True)
+        with open(os.path.join(debris, "part-00000.parquet"), "wb"):
+            pass
+        if aged:
+            past = time.time() - 7200
+            os.utime(debris, (past, past))
+        assert self.idx.vacuum() == ([debris] if aged else [])
+        assert os.path.exists(debris) != aged
 
     @rule()
     def clear(self):
