@@ -156,15 +156,16 @@ def test_ivfpq_topk_shape_and_determinism(spark):
 
 
 def test_assign_cells_fold_matches_crossjoin_reference(spark):
-    """The round-11 map-side assign_cells fold must reproduce the old
-    broadcast-crossJoin + max_by(cell, struct(cs, -cell)) argmax exactly —
+    """The map-side assign_cells fold must reproduce the broadcast-
+    crossJoin + max_by(cell, struct(cs, -cell)) argmax exactly —
     including tie-breaks (duplicate centroids → lowest cell) and zero-norm
     rows (NaN cosine against every centroid → first/lowest cell under
-    Spark's NaN-greatest ordering, same as max_by)."""
+    Spark's NaN-greatest ordering, same as max_by) — and residual_sql
+    must give the residual against the winning centroid bit for bit."""
     from pyspark.sql import functions as F
 
     from victor_spark.functions.vector import cosine
-    from victor_spark.operators.ivfpq import assign_cells
+    from victor_spark.operators.ivfpq import assign_cells, residual_sql
 
     df = _clustered(spark)
     # adversarial rows: a zero-norm vector and an exact duplicate of a
@@ -180,24 +181,41 @@ def test_assign_cells_fold_matches_crossjoin_reference(spark):
         7: [1.0] + [0.0] * 15,  # duplicate of cell 0 → ties break to 0
     }
     got = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells(df, "vec_id", "v", centroids).collect()
+        r["vec_id"]: (r["cell"], r["_r"])
+        for r in assign_cells(df, "vec_id", "v", centroids).select(
+            "vec_id", "cell",
+            F.expr(residual_sql("v", centroids, centroids)).alias("_r"),
+        ).collect()
     }
-    # reference: the pre-round-11 crossJoin + max_by shape, inlined
+    # reference: the crossJoin + max_by shape, inlined; the residual is
+    # zip_with(v, winning cv)
     cent_df = F.broadcast(spark.createDataFrame(
         [(c, v) for c, v in sorted(centroids.items())],
         "cell long, _cv array<double>",
     ))
     ref = {
-        r["vec_id"]: r["cell"]
+        r["vec_id"]: (r["best"]["cell"], r["_r"])
         for r in df.crossJoin(cent_df)
-        .select("vec_id", "cell", cosine("v", "_cv").alias("_cs"))
+        .select("vec_id", "v", "cell", "_cv", cosine("v", "_cv").alias("_cs"))
         .groupBy("vec_id")
-        .agg(F.max_by("cell", F.struct(F.col("_cs"), -F.col("cell"))).alias("cell"))
+        .agg(
+            F.first("v").alias("v"),
+            F.max_by(
+                F.struct("cell", "_cv"), F.struct(F.col("_cs"), -F.col("cell"))
+            ).alias("best"),
+        )
+        .select(
+            "vec_id", "best",
+            F.zip_with("v", "best._cv", lambda x, y: x - y).alias("_r"),
+        )
         .collect()
     }
-    assert got == ref
-    assert got[901] == 0  # duplicate-centroid tie broke to the lowest cell
+    # repr is bit-exact for doubles (and tells -0.0 from 0.0)
+    assert {i: repr(g) for i, g in got.items()} == {
+        i: repr(g) for i, g in ref.items()
+    }
+    assert got[901][0] == 0  # duplicate-centroid tie broke to the lowest cell
+    assert got[900][0] == 0  # a zero-norm row scores NaN: the lowest cell
 
 
 def _pq_encode_builder_reference(df, vec_col, codebook, m=8, out_col="pq_code"):
@@ -308,37 +326,32 @@ def test_pq_adc_sql_matches_builder_reference(spark):
 
 
 def test_ivf_assign_sql_matches_builder_reference(spark):
-    """The catalog's one-SQL-string IVF assignment must reproduce the
-    Column-builder fold exactly: dot(v, cv)/(vn·cn) per element with vn
-    bound once per row, max_by-style (strictly-greater | equal-and-
-    lower-cell) updates."""
-    import math
+    """The one-SQL-string nearest-cell fold (ivfpq.assign_cells) must
+    reproduce the Column-builder fold exactly: dot(v, cv)/(vn·cn) per
+    element with vn bound once per row, max_by-style (strictly-greater |
+    equal-and-lower-cell) updates."""
     import random
 
     from pyspark.sql import functions as F
 
-    from victor_spark.functions.vector import bind, lit_doubles, norm
-    from victor_spark.plans.catalog import _ivf_assign_map_side
+    from victor_spark.functions.vector import bind, lit_doubles, norm, py_norm
+    from victor_spark.operators.ivfpq import assign_cells
 
     rng = random.Random(17)
     rows = [(i, [rng.uniform(-2, 2) for _ in range(16)]) for i in range(80)]
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
 
-    def _pynorm(vs):
-        acc = 0.0
-        for x in vs:
-            acc += x * x
-        return math.sqrt(acc)
-
     cents = []
     for cell in (0, 5, 7):
         cv = list(rows[cell][1])
-        cents.append((cell, cv, _pynorm(cv)))
+        cents.append((cell, cv, py_norm(cv)))
     cents[2] = (7, list(cents[0][1]), cents[0][2])  # duplicate → ties
 
     got = {
         r["vec_id"]: r["cell"]
-        for r in _ivf_assign_map_side(e, cents).collect()
+        for r in assign_cells(
+            e, "vec_id", "v", {cell: cv for cell, cv, _ in cents}
+        ).collect()
     }
 
     cent_arr = F.array(*[
@@ -381,3 +394,40 @@ def test_ivf_assign_sql_matches_builder_reference(spark):
     assert got == ref
     # the duplicated centroid's ties all broke to the lower cell id
     assert 7 not in set(got.values())
+
+
+def test_catalog_ivf_queries_survive_zero_norm_rows(spark, tmp_path):
+    """A zero-norm embedding scores NaN against every centroid (cosine's
+    zero guard) and lands in the lowest cell, so the catalog's IVF
+    queries run instead of failing on 0/0 (ANSI DIVIDE_BY_ZERO)."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    from pyspark.sql import functions as F
+
+    from tests.conftest import SF_SMOKE
+    from victor_spark.operators.ivfpq import assign_cells
+    from victor_spark.plans import QUERIES
+    from victor_spark.plans.catalog import _emb, _ivf_collect_model
+
+    zero = {5, 12}
+    t = papq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    emb = [
+        [0.0] * len(v) if i in zero else v
+        for i, v in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+    ]
+    col = t.schema.get_field_index("embedding")
+    t = t.set_column(col, t.schema.field(col),
+                     pa.array(emb, type=t.schema.field(col).type))
+    papq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    sf = str(tmp_path)
+
+    for name in ("ann_ivf_topk", "ann_ivf_batch", "ann_recall"):
+        assert QUERIES[name].build(spark, sf).collect(), name
+    e = _emb(spark, sf).select("vec_id", "v")
+    centroids, _ = _ivf_collect_model(e, e.filter(F.col("vec_id") == 7))
+    cells = {
+        r["vec_id"]: r["cell"]
+        for r in assign_cells(e, "vec_id", "v", centroids)
+        .filter(F.col("vec_id").isin(sorted(zero))).collect()
+    }
+    assert cells == {i: min(centroids) for i in zero}

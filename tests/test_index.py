@@ -1394,3 +1394,21 @@ def test_index_builds_local_frames_from_arrow():
         assert _python_row_frames(
             f"def f(spark, xs, rows):\n    spark.createDataFrame({data}, 'a int')\n"
         ) == [2], data
+
+
+def test_ivf_builds_put_a_zero_vector_in_the_lowest_cell(idx):
+    """A zero-norm row scores NaN against every centroid (cosine's zero
+    guard) and lands in the lowest cell, as max_by orders NaN; both IVF
+    builds succeed with it in the index."""
+    idx.insert([("zero", [0.0, 0.0], []), ("a", [1.0, 0.0], []),
+                ("b", [0.0, 1.0], []), ("c", [1.0, 1.0], [])])
+    spark = idx.spark
+    idx.build_ivf(n_cells=2)
+    ivf = {r["content"]: r["cell"]
+           for r in spark.read.parquet(idx.ivf_path).collect()}
+    assert ivf["zero"] == 0
+    idx.build_ivfpq(m=2, n_codes=2, n_cells=2)
+    zero_id = idx.scan().filter("content = 'zero'").first()["id"]
+    codes = {r["id"]: r["cell"]
+             for r in spark.read.parquet(idx.ivfpq_path).collect()}
+    assert codes[zero_id] == 0

@@ -281,7 +281,12 @@ def edge_vectors(spark):
 
 
 def test_vector_kernels_on_edge_vectors(edge_vectors):
-    from victor_spark.functions.vector import l2_normalize
+    from victor_spark.functions.vector import (
+        l2_normalize,
+        py_cosine,
+        py_dot,
+        py_norm,
+    )
 
     rows = edge_vectors.select(
         "a", "b",
@@ -299,16 +304,22 @@ def test_vector_kernels_on_edge_vectors(edge_vectors):
         assert _same(r["cos"], _py_cosine(a, b)), r
         assert _same(r["l2"], _py_euclidean(a, b)), r
         assert _same(r["unit"], _py_l2_normalize(a)), r
+        if a is not None and len(a) == len(b):
+            # the driver-side twins equal the JVM kernels bit for bit
+            assert _same(py_dot(a, b), r["dot"]), r
+            assert _same(py_norm(a), r["norm"]), r
+            assert _same(py_cosine(a, b), r["cos"]), r
 
 
 def test_literal_kernels_on_edge_vectors(edge_vectors):
     from victor_spark.functions.vector import (
         cosine_to_literal,
         euclidean_to_literal,
+        py_norm,
     )
 
     for q in ([3.0, -4.0], [0.0, 0.0], [SUB, -0.0], [float("nan"), 1.0], []):
-        qnorm = sum(x * x for x in q) ** 0.5
+        qnorm = py_norm(q)
         rows = edge_vectors.select(
             "a",
             cosine_to_literal("a", q).alias("cos"),
@@ -322,6 +333,35 @@ def test_literal_kernels_on_edge_vectors(edge_vectors):
             )
             assert _same(r["cos"], want_cos), (q, r)
             assert _same(r["l2"], _py_euclidean(a, q)), (q, r)
+
+
+def test_cosine_to_literal_query_norm_is_the_kernels_sqrt(spark):
+    """cosine_to_literal folds the query's norm driver-side. It must be
+    the kernel's own IEEE sqrt of the fold, so each score equals cosine
+    over the same literal bit for bit — also for a query whose norm
+    ``** 0.5`` rounds an ulp away from ``math.sqrt``."""
+    import random
+
+    from victor_spark.functions.vector import cosine_to_literal, lit_doubles_sql
+
+    rng = random.Random(1)
+    while True:
+        q = [rng.gauss(0, 1) for _ in range(4)]
+        sq = 0.0
+        for x in q:
+            sq += x * x
+        if sq ** 0.5 != math.sqrt(sq):
+            break
+    df = spark.createDataFrame(
+        [([rng.gauss(0, 1) for _ in range(4)],) for _ in range(50)],
+        "v array<double>",
+    )
+    rows = df.select(
+        cosine_to_literal("v", q).alias("lit"),
+        cosine("v", lit_doubles_sql(q)).alias("ref"),
+    ).collect()
+    assert len(rows) == 50
+    assert [repr(r["lit"]) for r in rows] == [repr(r["ref"]) for r in rows]
 
 
 def test_dotted_operand_resolves_struct_field(spark):

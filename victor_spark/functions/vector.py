@@ -14,6 +14,8 @@ common case).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -119,6 +121,36 @@ def lit_doubles_2d(rows) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# Driver-side twins of dot, norm and cosine
+# ---------------------------------------------------------------------------
+#
+# For model-sized vectors the driver already holds (centroids, queries).
+# Each is the kernel's own left-to-right fold from 0.0 and IEEE sqrt —
+# ``math.sqrt``, not ``** 0.5``, which is off by an ulp for some inputs —
+# so a value computed here is bit-identical to the JVM's and can stand in
+# for it as a literal.
+
+
+def py_dot(a, b) -> float:
+    """Σ aᵢ·bᵢ, bit-identical to :func:`dot`."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def py_norm(a) -> float:
+    """√Σ aᵢ², bit-identical to :func:`norm`."""
+    return math.sqrt(py_dot(a, a))
+
+
+def py_cosine(a, b) -> float:
+    """Cosine, bit-identical to :func:`cosine`: a zero norm scores NaN."""
+    d = py_norm(a) * py_norm(b)
+    return math.nan if d == 0.0 else py_dot(a, b) / d
+
+
+# ---------------------------------------------------------------------------
 # Similarity kernels: one SQL template each, over pre-rendered operand SQL
 # ---------------------------------------------------------------------------
 #
@@ -154,22 +186,25 @@ def _l2_normalize_sql(a: str) -> str:
     )
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    na, nb = _norm_sql(a), _norm_sql(b)
+def _cosine_normed_sql(a: str, b: str, na: str, nb: str) -> str:
+    """dot(a, b)/(na·nb) given the operands' norms ``na`` and ``nb``; a
+    zero product scores NaN — under Spark 4's ANSI mode the bare 0/0
+    would be a DIVIDE_BY_ZERO job failure."""
     return (
         f"CASE WHEN ({na} * {nb}) = 0.0D THEN {_NAN} "
         f"ELSE {_dot_sql(a, b)} / ({na} * {nb}) END"
     )
 
 
+def _cosine_sql(a: str, b: str) -> str:
+    return _cosine_normed_sql(a, b, _norm_sql(a), _norm_sql(b))
+
+
 def _cosine_to_literal_sql(v: str, q: list[float]) -> str:
-    """The query's norm folds to a Python-side constant, so the per-row
-    work is one dot plus one norm fold."""
-    qnorm = sum(x * x for x in q) ** 0.5
-    denom = f"({_norm_sql(v)} * {_dlit_sql(float(qnorm))})"
-    return (
-        f"CASE WHEN {denom} = 0.0D THEN {_NAN} "
-        f"ELSE {_dot_sql(v, lit_doubles_sql(q))} / {denom} END"
+    """The query's norm folds to a driver-side constant (:func:`py_norm`),
+    so the per-row work is one dot plus one norm fold."""
+    return _cosine_normed_sql(
+        v, lit_doubles_sql(q), _norm_sql(v), _dlit_sql(py_norm(q))
     )
 
 

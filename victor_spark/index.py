@@ -1244,43 +1244,6 @@ class VectorIndex:
             codes = codes.join(self.scan(tags).select("id"), "id", "leftsemi")
         return codes
 
-    def _assign_cells(self, df: DataFrame, cents: list[list[float]],
-                      carry: tuple[str, ...] = ()) -> DataFrame:
-        """(id, *carry, cell, _r): each row's nearest-centroid cell by
-        cosine (ties → lowest cell) and its residual ``embedding − cv``.
-        ``carry`` names extra ``df`` columns to keep.
-
-        Argmax as a max_by aggregation carrying the winning (cell, cv)
-        struct: partial aggregation combines map-side, one shuffled row
-        per id — cheaper than a window's full sort of every (row,
-        centroid) pair."""
-        cent_df = F.broadcast(_local_frame(
-            self.spark, {"cell": list(range(len(cents))), "cv": cents},
-            "cell int, cv array<double>",
-        ))
-        scored = df.crossJoin(cent_df).withColumn(
-            "_cs", cosine("embedding", "cv")
-        )
-        kept = dict.fromkeys(("embedding",) + carry)  # ordered, no repeats
-        best = scored.groupBy("id").agg(
-            *[F.first(c).alias(c) for c in kept],
-            F.max_by(
-                F.struct("cell", "cv"), F.struct(F.col("_cs"), -F.col("cell"))
-            ).alias("_best"),
-        )
-        return best.select(
-            "id", *carry, F.col("_best.cell").alias("cell"),
-            F.zip_with(
-                "embedding", F.col("_best.cv"), lambda x, y: x - y
-            ).alias("_r"),
-        )
-
-    def _probe(self, q: list[float], cents: list[list[float]],
-               nprobe: int) -> list[int]:
-        from victor_spark.operators.ivfpq import probe_cells
-
-        return probe_cells(q, dict(enumerate(cents)), max(1, nprobe))
-
     def build_ivf(self, n_cells: int = 64,
                   trainer: str = "sample", train_iters: int = 10,
                   seed_col: str = "id") -> None:
@@ -1297,16 +1260,23 @@ class VectorIndex:
         that same init — cells follow the corpus density, worth ~+0.1
         recall@10 at equal nprobe (tests/test_kmeans.py measures it). A
         maintenance artifact — rebuild after batch loads.
+
+        Each row's cell is ``ivfpq.cell_sql``: nearest centroid by cosine,
+        ties and zero-norm rows (NaN) to the lowest cell, as a map-side
+        fold over the centroid literals — no shuffle.
         """
+        from victor_spark.operators.ivfpq import cell_sql
+
         if self.is_empty():
             raise ValueError("cannot build IVF over an empty index")
         full = self.scan()
         cents = self._train_codebook(full, n_cells, trainer, train_iters,
                                      metric="cosine", salt="ivf",
                                      seed_col=seed_col)
-        assigned = self._assign_cells(
-            full, cents, carry=("content", "tags", "embedding")
-        ).select("id", "content", "tags", "embedding", "cell")
+        assigned = full.select(
+            "id", "content", "tags", "embedding",
+            F.expr(cell_sql("embedding", dict(enumerate(cents)))).alias("cell"),
+        )
         self._write_artifact(assigned, self.ivf_path, partition_by="cell")
         self._write_json(self.ivf_meta_path, {"centroids": cents})
 
@@ -1324,13 +1294,17 @@ class VectorIndex:
         scores are cosine even where search() reports euclidean ascending;
         a consistent metric within the ANN path beats mirroring the
         reference's metric switch halfway through an index."""
+        from victor_spark.operators.ivfpq import probe_cells
+
         if not self.fs.exists(self.ivf_meta_path):
             raise ValueError("no IVF table built; call build_ivf() first")
         cents = self._read_json(self.ivf_meta_path)["centroids"]
         q = self._query_vector(query, self._load_model(), len(cents[0]),
                                "IVF centroid")
         df = self.spark.read.parquet(self.ivf_path).filter(
-            F.col("cell").isin(self._probe(q, cents, nprobe))
+            F.col("cell").isin(
+                probe_cells(q, dict(enumerate(cents)), max(1, nprobe))
+            )
         )
         if tags:
             # the IVF table carries the tags column, so the tag-superset
@@ -1360,8 +1334,10 @@ class VectorIndex:
         One training sequence for both trainers (the FAISS recipe):
         train the cells over the vectors (salt 'ivfpq-cent'; spherical
         Lloyd under ``trainer="kmeans"``), assign every row its cell and
-        residual once, train the codebook over the RESIDUALS (salt
-        'ivfpq-cb'; L2 Lloyd under kmeans), then encode and write. The
+        residual once (``ivfpq.cell_sql`` and ``ivfpq.residual_sql``, one
+        map-side pass checkpointed for its two consumers), train the
+        codebook over the RESIDUALS (salt 'ivfpq-cb'; L2 Lloyd under
+        kmeans), then encode and write. The
         ``"sample"`` default picks rows by smallest salted md5 of
         ``seed_col`` as build_pq/build_ivf do. A maintenance artifact —
         rebuild after batch loads. ``seed_col`` follows build_pq's
@@ -1370,6 +1346,7 @@ class VectorIndex:
         across re-ingests of the same corpus. A dimension that m does
         not divide raises ValueError (``pq.encode``)."""
         from victor_spark.operators import pq
+        from victor_spark.operators.ivfpq import cell_sql, residual_sql
 
         if self.is_empty():
             raise ValueError("cannot build IVF-PQ over an empty index")
@@ -1380,8 +1357,16 @@ class VectorIndex:
         # the assignment job is the corpus-sized part of the build; compute
         # it once and feed both the codebook trainer and the encode/write,
         # carrying the seed column for the residual codebook's init
+        centroids = dict(enumerate(cents))
         carry = (seed_col,) if seed_col != "id" else ()
-        residuals = self._assign_cells(full, cents, carry=carry).localCheckpoint()
+        residuals = full.select(
+            "id", *carry, "embedding",
+            F.expr(cell_sql("embedding", centroids)).alias("cell"),
+        ).select(
+            "id", *carry, "cell",
+            F.expr(residual_sql("embedding", centroids, centroids))
+            .alias("_r"),
+        ).localCheckpoint()
         codebook = self._train_codebook(residuals, n_codes, trainer,
                                         train_iters, metric="l2",
                                         salt="ivfpq-cb", seed_col=seed_col,
@@ -1404,7 +1389,7 @@ class VectorIndex:
         (id, content, tags, adc_dist ascending). Requires
         :meth:`build_ivfpq`. ``tags`` scopes to tag-superset rows via a
         pre-scoring semi-join (exact within scope)."""
-        from victor_spark.operators.ivfpq import cell_adc_sql
+        from victor_spark.operators.ivfpq import cell_adc_sql, probe_cells
 
         if not self.fs.exists(self.ivfpq_meta_path):
             raise ValueError("no IVF-PQ table built; call build_ivfpq() first")
@@ -1412,10 +1397,10 @@ class VectorIndex:
         cents = meta["centroids"]
         q = self._query_vector(query, self._load_model(), len(cents[0]),
                                "IVF-PQ centroid")
-        probe = self._probe(q, cents, nprobe)
+        centroids = dict(enumerate(cents))
+        probe = probe_cells(q, centroids, max(1, nprobe))
         codes = self._scoped_codes(self.ivfpq_path, tags, cells=probe)
-        score = cell_adc_sql(q, dict(enumerate(cents)), probe,
-                             meta["codebook"], meta["m"])
+        score = cell_adc_sql(q, centroids, probe, meta["codebook"], meta["m"])
         hits = (
             codes.select("id", F.expr(score).alias("adc_dist"))
             .orderBy(F.asc("adc_dist"), F.asc("id"))

@@ -435,16 +435,15 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     within-cluster compare are plain dots — one fold per pair instead of
     dot + two norms (measured 3× on the pair stage).
     """
-    import math
-
     from victor_spark.functions.vector import (
-        _dlit_sql,
         _dot_sql,
         dot,
         l2_normalize,
         lit_doubles_sql,
         norm,
+        py_norm,
     )
+    from victor_spark.operators.ivfpq import argmax_cell_sql
     from victor_spark.sources.tables import fan_out
 
     v_all = fan_out(df).select(
@@ -473,26 +472,20 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     # caller-error cases — zero-norm cells, and an EMPTY table, which
     # would otherwise silently drop every non-sentinel row from the
     # report — and it brings the vectors driver-side so cell assignment
-    # runs MAP-SIDE as a per-row fold over the literal centroid array
-    # (round-11 optimization). The old shape (broadcast crossJoin +
-    # max_by groupBy) inflated the corpus k-fold through a shuffle
-    # purely to pick each row's argmax — the fold computes the same k
-    # dots per row with zero exchanges.
+    # runs MAP-SIDE as a per-row fold over the literal centroid array:
+    # the k dots per row with zero exchanges, where a broadcast crossJoin
+    # + max_by groupBy inflated the corpus k-fold through a shuffle.
     #
-    # The normalization below replays l2_normalize's exact arithmetic
-    # (left-to-right double fold of x*x from 0.0, IEEE sqrt, then x/n
-    # per element), so the literal values are bit-identical to what the
-    # broadcast plan computed — assignment ties break identically.
+    # The normalization replays l2_normalize's exact arithmetic
+    # (py_norm, then x/n per element), so the literal values are
+    # bit-identical to what the JVM computes — ties break identically.
     rows = cdf.collect()
     if not rows:
         raise ValueError("semantic_dedup: centroids table is empty")
     ncents = []
     for r in rows:
         cv = r["_cv"]
-        acc = 0.0
-        for x in cv:
-            acc += x * x
-        n = math.sqrt(acc)
+        n = py_norm(cv)
         if n == 0.0:
             raise ValueError(
                 f"semantic_dedup: centroid cell {r['cell']} has zero norm"
@@ -503,22 +496,11 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
         f"'ncv', {lit_doubles_sql(ncv)})"
         for cell, ncv in ncents
     ) + ")"
-    # fold semantics == max_by(cell, struct(cs, -cell)): strictly-higher
-    # cosine wins; an exactly-equal cosine wins only with a lower cell
-    # id. The init sentinel (-2.0) sits below any unit-vector cosine, so
-    # the first centroid always replaces it — no NULL three-valued logic.
-    # The row's vector and each centroid's cosine bind to lambda
-    # variables, so every reference is a slot read.
-    init = (
-        f"named_struct('cs', {_dlit_sql(-2.0)}, "
-        f"'cell', CAST({-(2 ** 62)} AS BIGINT))"
-    )
+    # the nearest-cell rule of ivfpq.assign_cells, scored by the dot of
+    # the unit vectors (the row's vector bound once per row)
     fold = (
-        f"get(transform(array(`nv`), _snv -> aggregate({cent_arr}, {init}, "
-        f"(_sacc, _sc) -> get(transform(array({_dot_sql('_snv', '_sc.ncv')}), "
-        "_scs -> CASE WHEN (_scs > _sacc.cs) OR ((_scs = _sacc.cs) AND "
-        "(_sc.cell < _sacc.cell)) THEN named_struct('cs', _scs, 'cell', "
-        "_sc.cell) ELSE _sacc END), 0), _sa -> _sa.cell)), 0)"
+        "get(transform(array(`nv`), _snv -> "
+        f"{argmax_cell_sql(cent_arr, _dot_sql('_snv', '_ac.ncv'))}), 0)"
     )
     assigned = v.select("doc", "nv", F.expr(fold).alias("cell"))
     # assigned feeds THREE consumers (both sides of the within-cluster

@@ -19,16 +19,30 @@ vectors, the residual codebook rows are the ``k_cb`` smallest salted-md5
 ids (both standing in for k-means, same seam as ivf/pq), and every argmax
 breaks ties by (score desc, id asc). All model artifacts come back in ONE
 driver collect.
+
+This module holds the one nearest-cell rule of every IVF path — the
+catalog's IVF queries, VectorIndex's build_ivf/build_ivfpq/search_ivf/
+search_ivfpq and semantic_dedup: :func:`cell_sql` (executors, a map-side
+fold; :func:`assign_cells` wraps it), :func:`probe_cells` (driver), the
+update rule :func:`argmax_cell_sql` and :func:`residual_sql`. Scores are
+cosine, ties go to the lowest cell, and a zero norm scores NaN, which
+Spark orders above every number.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from victor_spark.functions.vector import _cosine_sql, lit_doubles_sql
+from victor_spark.functions.vector import (
+    _cosine_normed_sql,
+    _dlit_sql,
+    _norm_sql,
+    lit_doubles_sql,
+    py_cosine,
+    py_norm,
+    sql_operand,
+)
 from victor_spark.operators import pq as PQ
 
 
@@ -68,27 +82,16 @@ def collect_ivfpq_model(df: DataFrame, id_col: str, vec_col: str,
     return centroids, codebook, query
 
 
-def _cosine(a: list[float], b: list[float]) -> float:
-    # the one driver-side cosine of the cell model; zero-norm guard: a
-    # zero vector sorts last instead of raising ZeroDivisionError
-    na = math.sqrt(sum(x * x for x in a))
-    nb = math.sqrt(sum(x * x for x in b))
-    if na == 0.0 or nb == 0.0:
-        return float("-inf")
-    return sum(x * y for x, y in zip(a, b)) / (na * nb)
-
-
-def _nearest_cell(v: list[float], centroids: dict) -> int:
-    # (cosine desc, cell asc) — the same tie-break the executors use
-    return min(centroids.items(), key=lambda kv: (-_cosine(v, kv[1]), kv[0]))[0]
-
-
 def probe_cells(query: list[float], centroids: dict, nprobe: int) -> list:
     """The ``nprobe`` cells whose centroids are nearest the query by
-    cosine (ties → lowest cell) — the driver-side probe ranking."""
-    return sorted(
-        centroids, key=lambda c: (-_cosine(query, centroids[c]), c)
-    )[:nprobe]
+    cosine (ties → lowest cell) — the driver-side probe ranking, scored
+    by :func:`py_cosine` and ordered as Spark orders the executors'
+    scores: a NaN score (a zero norm) ranks above every number."""
+    def _rank(c):
+        s = py_cosine(query, centroids[c])
+        return (0, 0.0, c) if s != s else (1, -s, c)
+
+    return sorted(centroids, key=_rank)[:nprobe]
 
 
 def cell_adc_sql(query: list[float], centroids: dict, cells: list,
@@ -108,52 +111,82 @@ def cell_adc_sql(query: list[float], centroids: dict, cells: list,
 
 
 def _residual(v: list[float], centroids: dict) -> list[float]:
-    cv = centroids[_nearest_cell(v, centroids)]
+    cv = centroids[probe_cells(v, centroids, 1)[0]]
     return [x - c for x, c in zip(v, cv)]
+
+
+def argmax_cell_sql(cents: str, score: str) -> str:
+    """The one nearest-cell update rule: a fold over the SQL array
+    ``cents`` of structs with a ``cell`` field, each element bound as
+    ``_ac`` while ``score`` (SQL over ``_ac``) rates it. A strictly
+    higher score wins; an exactly equal score (incl. NaN == NaN, true
+    under Spark's SQL ordering) wins only with a lower cell; a NULL score
+    keeps the accumulator. That is ``max_by(cell, struct(score, -cell))``
+    exactly. The init sentinel -2.0 sits below any real cosine, and NaN
+    (a zero norm) compares greater than it, so the first centroid always
+    replaces it — no NULL three-valued logic."""
+    return (
+        f"aggregate({cents}, named_struct('cs', -2.0D, 'cell', "
+        f"CAST({-(2 ** 62)} AS BIGINT)), (_aa, _ac) -> "
+        f"get(transform(array({score}), _acs -> CASE WHEN (_acs > _aa.cs) "
+        "OR ((_acs = _aa.cs) AND (_ac.cell < _aa.cell)) THEN "
+        "named_struct('cs', _acs, 'cell', _ac.cell) ELSE _aa END), 0), "
+        "_af -> _af.cell)"
+    )
+
+
+def cell_sql(vec: str, centroids: dict) -> str:
+    """SQL of the nearest centroid by cosine (ties → lowest cell) of the
+    vector operand ``vec`` (``sql_operand`` rules): the per-row fold of
+    :func:`argmax_cell_sql` over the centroid dict as a literal array.
+    The row's vector and its norm bind once per row; each centroid
+    carries its norm as a literal from :func:`py_norm`, bit-identical to
+    the JVM fold, so each element costs one dot and its score equals
+    ``cosine(vec, cv)`` bit for bit, zero guard included."""
+    cents = "array(" + ",".join(
+        f"named_struct('cell', CAST({int(cell)} AS BIGINT), "
+        f"'cv', {lit_doubles_sql(cv)}, 'cn', {_dlit_sql(py_norm(cv))})"
+        for cell, cv in sorted(centroids.items())
+    ) + ")"
+    fold = argmax_cell_sql(
+        cents, _cosine_normed_sql("_av", "_ac.cv", "_avn", "_ac.cn")
+    )
+    return (
+        f"get(transform(array({sql_operand(vec)}), _av -> get(transform("
+        f"array({_norm_sql('_av')}), _avn -> {fold}), 0)), 0)"
+    )
 
 
 def assign_cells(df: DataFrame, id_col: str, vec_col: str,
                  centroids: dict) -> DataFrame:
-    """(id, vec, cell): nearest centroid by cosine, as a MAP-SIDE fold —
-    at scale this is the partitioning job that writes partitionBy('cell').
-
-    The centroid dict is a collected model artifact (the caller already
-    holds it driver-side), so assignment bakes it into the plan as a
-    literal array and picks each row's argmax with a per-row ``aggregate``
-    fold — zero exchanges, no k-fold row inflation (round-11 optimization,
-    the semantic_dedup precedent). The old shape (broadcast crossJoin +
-    max_by groupBy) shuffled one row per id purely to run the argmax.
-
-    Fold semantics == ``max_by(cell, struct(cs, -cell))`` exactly: a
-    strictly-higher cosine wins; an exactly-equal cosine (incl. NaN ==
-    NaN, true under Spark's SQL ordering) wins only with a lower cell id;
-    NULL cosines skip (the ``when`` condition is NULL → keep acc), just
-    as max_by ignores NULL keys. The per-element cosine is the
-    ``functions.vector.cosine`` SQL template itself, so scores are
-    bit-identical to the crossJoin plan's. The
-    init sentinel -2.0 sits below any real cosine, and NaN (zero-norm
-    rows) compares greater than it under Spark's ordering, so the first
-    centroid always replaces the sentinel — no NULL three-valued logic.
-    """
-    # One parsed SQL expression (the PQ.encode rationale — the builder
-    # form's nested binds/lambdas cost ~0.3 s of py4j per call), with v
-    # and each element's cosine bound to lambda variables.
-    cents_sql = "array(" + ",".join(
-        f"named_struct('cell', CAST({int(cell)} AS BIGINT), "
-        f"'cv', {lit_doubles_sql(cv)})"
-        for cell, cv in sorted(centroids.items())
-    ) + ")"
-    cos_sql = _cosine_sql("_av", "_ac.cv")
-    assign_sql = (
-        "get(transform(array(`{v}`), _av -> aggregate({cents}, "
-        "named_struct('cs', -2.0D, 'cell', CAST({init_cell} AS BIGINT)), "
-        "(_aa, _ac) -> get(transform(array({cos}), _acs -> "
-        "CASE WHEN (_acs > _aa.cs) OR ((_acs = _aa.cs) AND "
-        "(_ac.cell < _aa.cell)) THEN named_struct('cs', _acs, 'cell', "
-        "_ac.cell) ELSE _aa END), 0), _af -> _af.cell)), 0)"
-    ).format(v=vec_col, cents=cents_sql, init_cell=-(2 ** 62), cos=cos_sql)
+    """(id, vec, cell): nearest centroid by cosine (:func:`cell_sql`), as
+    a MAP-SIDE fold — at scale this is the partitioning job that writes
+    partitionBy('cell'). The centroid dict is a collected model artifact,
+    so it rides in the plan as a literal: zero exchanges and no k-fold
+    row inflation, where a broadcast crossJoin + max_by groupBy shuffles
+    one row per id purely to run the argmax. With no centroids the frame
+    is empty, as the crossJoin's was."""
+    if not centroids:
+        return df.select(
+            F.col(id_col), F.col(vec_col), F.lit(0).cast("long").alias("cell")
+        ).filter(F.lit(False))
     return df.select(
-        F.col(id_col), F.col(vec_col), F.expr(assign_sql).alias("cell")
+        F.col(id_col), F.col(vec_col),
+        F.expr(cell_sql(vec_col, centroids)).alias("cell"),
+    )
+
+
+def residual_sql(vec: str, centroids: dict, cells) -> str:
+    """SQL of ``vec − centroids[cell]`` for a row whose ``cell`` column is
+    one of ``cells``: the vector binds once and a CASE on ``cell`` picks
+    the centroid literal. No ELSE: a row outside ``cells`` yields NULL."""
+    whens = " ".join(
+        f"WHEN `cell` = {int(c)} THEN zip_with(_iv, "
+        f"{lit_doubles_sql(centroids[c])}, (_ix, _iy) -> _ix - _iy)"
+        for c in cells
+    )
+    return (
+        f"get(transform(array({sql_operand(vec)}), _iv -> CASE {whens} END), 0)"
     )
 
 
@@ -179,25 +212,10 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, query_id,
         assigned = assign_cells(df, id_col, vec_col, centroids)
     cand = assigned.filter(F.col("cell").isin([int(c) for c in probed]))
 
-    # residual = v - centroid[cell]: centroid literal selected by the
-    # (already probe-filtered) cell column. One parsed SQL expression per
-    # projection (the PQ.encode rationale — the builder form's when-chains
-    # and lambdas cost ~2,100 py4j round trips per call): v binds once,
-    # the CASE picks the probed cell's centroid, no ELSE (non-probed rows
-    # were filtered; a stray cell yields NULL, as the when-chain did).
-    resid_sql = (
-        "get(transform(array(`{v}`), _iv -> CASE {whens} END), 0)"
-    ).format(
-        v=vec_col,
-        whens=" ".join(
-            "WHEN `cell` = {c} THEN zip_with(_iv, {cv}, "
-            "(_ix, _iy) -> _ix - _iy)".format(
-                c=int(c), cv=lit_doubles_sql(centroids[c])
-            )
-            for c in probed
-        ),
+    resid = cand.select(
+        F.col(id_col), "cell",
+        F.expr(residual_sql(vec_col, centroids, probed)).alias("_r"),
     )
-    resid = cand.select(F.col(id_col), "cell", F.expr(resid_sql).alias("_r"))
     enc = PQ.encode(resid, "_r", codebook, m=m)
 
     score_sql = cell_adc_sql(query, centroids, probed, codebook, m)

@@ -31,13 +31,14 @@ from victor_spark.functions import hashing as H
 from victor_spark.functions import text as T
 from victor_spark.functions.html import sql_normalize_ws
 from victor_spark.functions.vector import (
-    _dlit_sql,
     bind,
+    cosine_to_literal,
     dequantize,
     dot,
     euclidean,
     lit_doubles_sql,
     norm,
+    py_norm,
     quantize,
     to_double_array,
 )
@@ -923,117 +924,46 @@ def _ivf_collect_model(e, qid_filter):
     union'd round trip (the ann_recall ACTION-1 precedent: each serial
     driver action is a full job-launch barrier on a busy scheduler).
 
-    Returns (cents, qrows): cents is [(cell, cv, cn)] sorted by cell with
-    cn replaying norm()'s exact arithmetic (left-to-right double fold of
-    x*x from 0.0, IEEE sqrt — bit-identical to the JVM fold, the
-    semantic_dedup normalization precedent); qrows is [(vec_id, qv, qn)]
-    sorted by vec_id with qn replayed the same way."""
-    import math
-
-    def _norm(vs):
-        acc = 0.0
-        for x in vs:
-            acc += x * x
-        return math.sqrt(acc)
-
+    Returns (centroids, qrows): centroids is {cell: cv}; qrows is
+    [(vec_id, qv)] sorted by vec_id."""
     rows = (
         e.filter(F.col("vec_id") % 250 == 0)
         .select("vec_id", "v", F.lit("cent").alias("_part"))
         .unionAll(qid_filter.select("vec_id", "v", F.lit("q").alias("_part")))
     ).collect()
-    cents = []
-    for r in sorted((r for r in rows if r["_part"] == "cent"),
-                    key=lambda r: r["vec_id"]):
-        cv = [float(x) for x in r["v"]]
-        cents.append((int(r["vec_id"]), cv, _norm(cv)))
-    qrows = []
-    for r in sorted((r for r in rows if r["_part"] == "q"),
-                    key=lambda r: r["vec_id"]):
-        qv = [float(x) for x in r["v"]]
-        qrows.append((int(r["vec_id"]), qv, _norm(qv)))
-    return cents, qrows
-
-
-def _ivf_assign_map_side(e, cents):
-    """(vec_id, v, cell): nearest-centroid assignment as a MAP-SIDE fold
-    over the literal centroid array (round-11 optimization, the
-    ivfpq.assign_cells / semantic_dedup precedent). Replays the crossJoin
-    form's exact arithmetic — norm(v) folds ONCE per row (bound), each
-    element computes dot(v, cv)/(vn·cn) with cn a driver-replayed literal
-    — and the fold's (strictly-greater | equal-and-lower-cell) update is
-    max_by(cell, struct(cs, -cell)) exactly, so assignments and ties are
-    bit-identical to the old broadcast crossJoin + groupBy argmax, with
-    zero exchanges and no centroid-fold row inflation. Assembled as ONE
-    parsed SQL expression (the PQ.encode rationale — builder-API lambda
-    construction is hundreds of py4j round trips per call); equality with
-    the Column-builder fold is pinned by
-    tests/test_ann.py::test_ivf_assign_sql_matches_builder_reference."""
-    from victor_spark.functions.vector import _dot_sql, _norm_sql
-
-    if not cents:
-        # the crossJoin form yielded an EMPTY frame with no centroids
-        return e.select("vec_id", "v", F.lit(0).cast("long").alias("cell")).filter(
-            F.lit(False)
-        )
-    cents_sql = "array(" + ",".join(
-        f"named_struct('cell', CAST({int(cell)} AS BIGINT), "
-        f"'cv', {lit_doubles_sql(cv)}, 'cn', {_dlit_sql(float(cn))})"
-        for cell, cv, cn in cents
-    ) + ")"
-    # per-element score replays dot(v, cv)/(vn·cn): v read as the outer
-    # column, vn bound once per row
-    dot_sql = _dot_sql("`v`", "_ac.cv")
-    norm_sql = _norm_sql("`v`")
-    assign_sql = (
-        "get(transform(array({vn}), _avn -> aggregate({cents}, "
-        "named_struct('cs', -2.0D, 'cell', CAST({init_cell} AS BIGINT)), "
-        "(_aa, _ac) -> get(transform(array({dot} / (_avn * _ac.cn)), "
-        "_acs -> CASE WHEN (_acs > _aa.cs) OR ((_acs = _aa.cs) AND "
-        "(_ac.cell < _aa.cell)) THEN named_struct('cs', _acs, 'cell', "
-        "_ac.cell) ELSE _aa END), 0), _af -> _af.cell)), 0)"
-    ).format(vn=norm_sql, cents=cents_sql, init_cell=-(2 ** 62), dot=dot_sql)
-    return e.select("vec_id", "v", F.expr(assign_sql).alias("cell"))
+    centroids = {
+        int(r["vec_id"]): [float(x) for x in r["v"]]
+        for r in rows if r["_part"] == "cent"
+    }
+    qrows = sorted(
+        (int(r["vec_id"]), [float(x) for x in r["v"]])
+        for r in rows if r["_part"] == "q"
+    )
+    return centroids, qrows
 
 
 def _ivf_topk(spark, sf_dir, qid: int, k: int) -> DataFrame:
     """IVF candidates for vec ``qid`` (nprobe=2), top-k by exact cosine;
     returns (vec_id, _s) with _s unrounded.
 
-    Round-11 shape (the ivfpq_topk treatment): ONE fused model collect
-    (centroids + query), probe cells picked DRIVER-side from the model,
-    cell assignment as a map-side fold, scoring against the literal query
-    — the whole query is collect + one map-side TakeOrdered pass, zero
-    exchanges (the old shape shuffled one (vec_id, v) row per vector
-    through a groupBy purely to run the argmax — at 100 TB that is a
-    corpus-sized float-vector shuffle)."""
+    ONE fused model collect (centroids + query), probe cells ranked
+    driver-side (``ivfpq.probe_cells``), cell assignment as the map-side
+    fold (``ivfpq.assign_cells``), scoring against the literal query —
+    the whole query is collect + one map-side TakeOrdered pass, zero
+    exchanges."""
+    from victor_spark.operators.ivfpq import assign_cells, probe_cells
+
     e = _emb(spark, sf_dir).select("vec_id", "v")
-    cents, qrows = _ivf_collect_model(e, e.filter(F.col("vec_id") == qid))
+    centroids, qrows = _ivf_collect_model(e, e.filter(F.col("vec_id") == qid))
     if not qrows:
         # the broadcast form yielded an EMPTY frame when qid was missing
         return e.select("vec_id", F.lit(0.0).alias("_s")).filter(F.lit(False))
-    _, qv, qn = qrows[0]
-
-    def _pydot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    # probe selection replays the qcells expression driver-side:
-    # dot(cv, qv)/(cn·qn) in the same left-to-right fold, desc with
-    # cell-asc tie-break — identical top-2 set
-    probed = sorted(
-        ((cell, _pydot(cv, qv) / (cn * qn)) for cell, cv, cn in cents),
-        key=lambda t: (-t[1], t[0]),
-    )[:2]
-    probe_cells = [c for c, _ in probed]
-    cand = _ivf_assign_map_side(e, cents).filter(
-        F.col("cell").isin(probe_cells) if probe_cells else F.lit(False)
+    _, qv = qrows[0]
+    probed = probe_cells(qv, centroids, 2)
+    cand = assign_cells(e, "vec_id", "v", centroids).filter(
+        F.col("cell").isin(probed) if probed else F.lit(False)
     )
-    out = cand.select(
-        "vec_id",
-        (dot("v", lit_doubles_sql(qv)) / (norm("v") * F.lit(qn))).alias("_s"),
-    )
+    out = cand.select("vec_id", cosine_to_literal("v", qv).alias("_s"))
     return out.orderBy(F.desc("_s"), F.asc("vec_id")).limit(k)
 
 
@@ -1085,40 +1015,32 @@ FROM ranked WHERE rn <= 3
     "corpus scan instead of N scans",
 )
 def q_ann_ivf_batch(spark, sf_dir):
+    from victor_spark.functions.vector import _cosine_normed_sql, _norm_sql
+    from victor_spark.operators.ivfpq import assign_cells, probe_cells
+
     e = _emb(spark, sf_dir).select("vec_id", "v")
-    # Round-11 shape (the _ivf_topk treatment, batched): ONE fused model
-    # collect brings back the centroid rows AND the bounded query set
-    # (vec_id % 100 = 11 — n/100 rows, a model-sized artifact); the
-    # per-query probe list is computed driver-side replaying the qcells
-    # window's exact expression (dot(cv,qv)/(cn·qn), desc, cell-asc
-    # tie-break), and cell assignment is the map-side fold — the corpus
-    # never shuffles (the old groupBy argmax moved one (vec_id, v) float
-    # row per vector), and the only join left is the probed-cell
+    # The _ivf_topk shape, batched: ONE fused model collect brings back
+    # the centroid rows AND the bounded query set (vec_id % 100 = 11 —
+    # n/100 rows, a model-sized artifact); each query's probe list is
+    # ranked driver-side, and cell assignment is the map-side fold — the
+    # corpus never shuffles, and the only join left is the probed-cell
     # BroadcastHashJoin the serving path needs.
-    cents, qrows = _ivf_collect_model(
+    centroids, qrows = _ivf_collect_model(
         e, e.filter(F.col("vec_id") % 100 == 11)
     )
-
-    def _pydot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    probe_rows = []
-    for query_id, qv, qn in qrows:
-        top2 = sorted(
-            ((cell, _pydot(cv, qv) / (cn * qn)) for cell, cv, cn in cents),
-            key=lambda t: (-t[1], t[0]),
-        )[:2]
-        probe_rows.extend((query_id, qv, qn, cell) for cell, _ in top2)
     probe = F.broadcast(spark.createDataFrame(
-        probe_rows, "query_id long, qv array<double>, qn double, cell long"
+        [
+            (query_id, qv, py_norm(qv), cell)
+            for query_id, qv in qrows
+            for cell in probe_cells(qv, centroids, 2)
+        ],
+        "query_id long, qv array<double>, qn double, cell long",
     ))
-    cells = _ivf_assign_map_side(e, cents)
+    cells = assign_cells(e, "vec_id", "v", centroids)
     scored = cells.join(probe, "cell").select(
         "query_id", "vec_id",
-        (dot("v", "qv") / (norm("v") * F.col("qn"))).alias("_s"),
+        F.expr(_cosine_normed_sql("`v`", "`qv`", _norm_sql("`v`"), "`qn`"))
+        .alias("_s"),
     )
     rw = Window.partitionBy("query_id").orderBy(F.desc("_s"), F.asc("vec_id"))
     return (
@@ -1395,14 +1317,12 @@ SELECT 'ivf_pq', 10,
     "the tuning metric for m/nprobe, computed as a query",
 )
 def q_ann_recall(spark, sf_dir):
-    import math
-
     from victor_spark.operators import pq
-    from victor_spark.operators.ivfpq import _cosine as _pycos
     from victor_spark.operators.ivfpq import (
         _residual,
         assign_cells,
         ivfpq_topk,
+        probe_cells,
     )
     from victor_spark.operators.topk import topk_per_group
 
@@ -1454,10 +1374,6 @@ def q_ann_recall(spark, sf_dir):
     }
     model = (centroids, [_residual(v, centroids) for v in cb], q7v)
 
-    def _coslit(q):
-        qn = math.sqrt(sum(x * x for x in q))
-        return dot("v", lit_doubles_sql(q)) / (norm("v") * F.lit(qn))
-
     def _negl2(q):
         # negated so every leg ranks DESCENDING in the shared window
         return -euclidean("v", lit_doubles_sql(q))
@@ -1471,8 +1387,10 @@ def q_ann_recall(spark, sf_dir):
             "vec_id",
             F.explode(F.array(
                 F.struct(F.lit("pq_adc").alias("method"), _negl2(qv).alias("_s")),
-                F.struct(F.lit("ivf").alias("method"), _coslit(q7v).alias("_s")),
-                F.struct(F.lit("lsh").alias("method"), _coslit(q3v).alias("_s")),
+                F.struct(F.lit("ivf").alias("method"),
+                         cosine_to_literal("v", q7v).alias("_s")),
+                F.struct(F.lit("lsh").alias("method"),
+                         cosine_to_literal("v", q3v).alias("_s")),
                 F.struct(F.lit("ivf_pq").alias("method"), _negl2(q7v).alias("_s")),
             )).alias("x"),
         ).select("vec_id", F.col("x.method").alias("method"),
@@ -1494,12 +1412,9 @@ def q_ann_recall(spark, sf_dir):
     assigned = assign_cells(e, "vec_id", "v", centroids).localCheckpoint(
         eager=False
     )
-    probe7 = sorted(
-        centroids, key=lambda c: (-_pycos(q7v, centroids[c]), c)
-    )[:2]
     ivf_top = (
-        assigned.filter(F.col("cell").isin([int(c) for c in probe7]))
-        .select("vec_id", _coslit(q7v).alias("_s"))
+        assigned.filter(F.col("cell").isin(probe_cells(q7v, centroids, 2)))
+        .select("vec_id", cosine_to_literal("v", q7v).alias("_s"))
         .orderBy(F.desc("_s"), F.asc("vec_id"))
         .limit(10)
         .select(F.lit("ivf").alias("method"), "vec_id")
@@ -1511,7 +1426,7 @@ def q_ann_recall(spark, sf_dir):
     lsh_top = (
         e.withColumn("bucket", H.hyperplane_bucket("v", 8))
         .filter(F.col("bucket").isin(probes3))
-        .select("vec_id", _coslit(q3v).alias("_s"))
+        .select("vec_id", cosine_to_literal("v", q3v).alias("_s"))
         .orderBy(F.desc("_s"), F.asc("vec_id"))
         .limit(10)
         .select(F.lit("lsh").alias("method"), "vec_id")
