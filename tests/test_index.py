@@ -1412,3 +1412,158 @@ def test_ivf_builds_put_a_zero_vector_in_the_lowest_cell(idx):
     codes = {r["id"]: r["cell"]
              for r in spark.read.parquet(idx.ivfpq_path).collect()}
     assert codes[zero_id] == 0
+
+
+# -- scoring: one fold of each kind per stored row -------------------------
+
+_Q8 = [0.3, -0.2, 0.5, 0.1, -0.7, 0.2, 0.0, 0.4]
+
+
+@pytest.fixture()
+def idx8(idx):
+    import random
+
+    rng = random.Random(8)
+    idx.insert([(f"c{i}", [rng.gauss(0, 1) for _ in range(8)], [f"t{i % 3}"])
+                for i in range(40)])
+    return idx
+
+
+@pytest.mark.parametrize("tags", [None, ["t1"]])
+@pytest.mark.parametrize("strict_nan", [True, False])
+@pytest.mark.parametrize("batch", [False, True])
+def test_search_plans_fold_each_row_once(idx8, tags, strict_nan, batch):
+    """Each stored row is decoded once and folds its norm once and its
+    dot once per query: Spark does not share subexpressions that hold
+    lambda functions, so a fold spelled twice (the guard's NaN test, the
+    cosine's zero test, a NaN filter pushed below the scoring Project)
+    runs twice. In a batch, the query norms come from the query table,
+    so a (row, query) pair folds only its dot."""
+    import re
+
+    if batch:
+        df = idx8.search_batch({"a": _Q8, "b": _Q8[::-1]}, k=5, tags=tags,
+                               strict_nan=strict_nan)
+    else:
+        df = idx8.search(_Q8, k=5, tags=tags, strict_nan=strict_nan)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("zip_with(") == 2, plan
+    assert len(re.findall(r"zip_with\(embedding#\d+, embedding#\d+,", plan)) == 1
+    assert len(re.findall(r"zip_with\(_qv#\d+, _qv#\d+,", plan)) == 0
+    assert plan.count("transform(quant#") == 1, plan
+
+
+def test_fresh_query_vectors_compile_no_class(spark, idx8):
+    """The query's values never reach generated source: after a warm-up,
+    searches with fresh vectors reuse the compiled classes."""
+    import random
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    for _ in range(2):
+        idx8.search(_Q8, k=5).collect()
+    before = metric.getCount()
+    rng = random.Random(3)
+    for _ in range(3):
+        assert len(idx8.search([rng.gauss(0, 1) for _ in range(8)],
+                               k=5).collect()) == 5
+    assert metric.getCount() == before
+
+
+_SUB = 5e-324  # smallest subnormal double
+
+_EDGE_ROWS = [
+    ("zero", [0.0, 0.0, 0.0, 0.0]),           # zero norm: scores NaN
+    ("subnormal", [_SUB, 0.0, -0.0, 0.0]),    # underflows to a zero norm
+    ("nan", [float("nan"), 1.0, 2.0, 3.0]),
+    ("inf", [float("inf"), 1.0, -1.0, 0.0]),
+    ("ninf", [float("-inf"), 1.0, 2.0, 0.5]),
+    ("tiny", [1e-300, 2e-300, -1e-300, 3e-300]),
+]
+
+_EDGE_QUERIES = [
+    [0.25, -1.5, 3.0, 0.75],
+    [0.0, 0.0, 0.0, 0.0],
+    [_SUB, -0.0, 0.0, 0.0],
+    [float("nan"), 1.0, 1.0, 1.0],
+    [float("inf"), 1.0, 0.0, -1.0],
+    [1.0, 2.0, 3.0],                           # length mismatch
+]
+
+
+def _assert_scores_match_replay(idx, query, k, strict_nan, tags=None):
+    """The one equality helper: ``search`` and ``search_batch`` return the
+    k best scores of ``py_cosine`` over the dequantized rows, each row's
+    score equal to its replay bit for bit (``==`` on the repr, so NaN and
+    -0.0 count), NaN rows dropped without ``strict_nan`` and failing the
+    query with it, and a query of the wrong dimension failing both."""
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from victor_spark.functions.vector import py_cosine
+
+    stored = {r["id"]: r["embedding"]
+              for r in idx.scan(tags).select("id", "embedding").collect()}
+    calls = [
+        lambda: [(r["id"], r["score"]) for r in
+                 idx.search(query, k=k, tags=tags,
+                            strict_nan=strict_nan).collect()],
+        lambda: [(r["id"], r["score"]) for r in
+                 idx.search_batch({"q": query}, k=k, tags=tags,
+                                  strict_nan=strict_nan).collect()],
+    ]
+    dim = len(next(iter(stored.values())))
+    if len(query) != dim:
+        # a zero-norm row scores NaN before its length is tested, so in
+        # strict mode either error may fail the query first
+        match = "query dimension|NaN similarity" if strict_nan else "query dimension"
+        for call in calls:
+            with pytest.raises(SparkRuntimeException, match=match):
+                call()
+        return
+    replay = {i: py_cosine(v, query) for i, v in stored.items()}
+    if strict_nan and any(s != s for s in replay.values()):
+        for call in calls:
+            with pytest.raises(SparkRuntimeException, match="NaN similarity"):
+                call()
+        return
+    best = sorted((s for s in replay.values() if s == s), reverse=True)[:k]
+    for call in calls:
+        got = call()
+        assert sorted((s for _i, s in got), reverse=True) == best
+        for i, s in got:
+            assert repr(s) == repr(replay[i]), (i, s, replay[i])
+
+
+@pytest.mark.parametrize("strict_nan", [True, False])
+def test_search_scores_equal_the_replay_on_edge_vectors(idx, strict_nan):
+    import random
+
+    rng = random.Random(4)
+    idx.insert([(f"r{i}", [rng.gauss(0, 1) for _ in range(4)], ["r"])
+                for i in range(12)]
+               + [(n, v, ["e"]) for n, v in _EDGE_ROWS])
+    for query in _EDGE_QUERIES:
+        for tags in (None, ["r"]):
+            # k beyond the non-NaN rows: the NaN rows must not fill it
+            for k in (3, 30):
+                _assert_scores_match_replay(idx, query, k, strict_nan, tags)
+
+
+def test_scan_decodes_like_the_two_transform_decode(spark, idx):
+    """``scan()`` decodes in one transform; its embeddings equal, bit for
+    bit, the shift to unsigned bins followed by ``dequantize``."""
+    from pyspark.sql import functions as F
+
+    from victor_spark.functions.vector import dequantize
+
+    idx.insert([(n, v, []) for n, v in _EDGE_ROWS]
+               + [("big", [1e30, -3e29, 7.0, 0.0], []),
+                  ("plain", [0.1, 0.2, -0.3, 0.4], [])])
+    raw = spark.read.parquet(idx.data_path)
+    bins = F.transform(F.col("quant"), lambda b: b.cast("int") + 128)
+    want = {r["id"]: repr(r["e"]) for r in raw.select(
+        "id", dequantize(bins, "qmin", "qmax").alias("e")).collect()}
+    got = {r["id"]: repr(r["embedding"])
+           for r in idx.scan().select("id", "embedding").collect()}
+    assert len(got) == len(_EDGE_ROWS) + 2
+    assert got == want

@@ -4,8 +4,11 @@ Parity with the reference's similarity kernels (cosine
 /root/reference/src/similarity.rs:1-24, euclidean :26-43) and its 8-bit
 scalar quantizer (/root/reference/src/packed_vector.rs:11-35), re-expressed
 as Spark SQL higher-order expressions so every kernel runs
-JVM-side inside whole-stage codegen — no Python in the hot path, which is
-what keeps a 100 TB scan compute-bound rather than serialization-bound.
+JVM-side — no Python in the hot path, which is what keeps a 100 TB scan
+compute-bound rather than serialization-bound. Higher-order functions
+(``transform``, ``zip_with``, ``aggregate``) run interpreted, outside
+whole-stage codegen, so each fold a template spells out costs per row:
+the templates bind shared values once rather than repeat them.
 
 All arithmetic is done in double precision (the reference uses f32; we cast
 up so results are stable and match the DuckDB oracle bit-for-bit in the
@@ -154,9 +157,12 @@ def py_cosine(a, b) -> float:
 # Similarity kernels: one SQL template each, over pre-rendered operand SQL
 # ---------------------------------------------------------------------------
 #
-# Operands sit only in argument positions OUTSIDE the templates' lambda
-# bodies, so an operand that names an outer lambda variable can never be
-# captured by a template's own variables.
+# Every template lambda variable starts with an underscore (``_vx``,
+# ``_vy``, ``_vacc``, ``_la``, ``_ln``, ``_lx``, ``_cd``) and these names are
+# reserved: an operand must not be named like one. Operands mostly sit in
+# argument positions outside the lambda bodies, but the cosine template
+# reads both vectors inside its ``_cd`` lambda, where an operand of that
+# name would be captured by the template's own variable.
 
 _NAN = "CAST('NaN' AS DOUBLE)"
 
@@ -189,10 +195,19 @@ def _l2_normalize_sql(a: str) -> str:
 def _cosine_normed_sql(a: str, b: str, na: str, nb: str) -> str:
     """dot(a, b)/(na·nb) given the operands' norms ``na`` and ``nb``; a
     zero product scores NaN — under Spark 4's ANSI mode the bare 0/0
-    would be a DIVIDE_BY_ZERO job failure."""
+    would be a DIVIDE_BY_ZERO job failure.
+
+    The product binds once to ``_cd`` (the :func:`bind` idiom): Spark's
+    subexpression elimination skips expressions that hold lambda
+    functions, so a product spelled in both the test and the division
+    would fold each norm twice per row. Binding also keeps a literal norm
+    inside a higher-order function, which runs interpreted, so a query's
+    values never reach generated source and one compiled class serves
+    every query."""
     return (
-        f"CASE WHEN ({na} * {nb}) = 0.0D THEN {_NAN} "
-        f"ELSE {_dot_sql(a, b)} / ({na} * {nb}) END"
+        f"get(transform(array({na} * {nb}), _cd -> "
+        f"CASE WHEN _cd = 0.0D THEN {_NAN} "
+        f"ELSE {_dot_sql(a, b)} / _cd END), 0)"
     )
 
 
@@ -246,6 +261,16 @@ def cosine(a: str, b: str) -> Column:
     NaN policy (VectorIndex.search strict/drop) then decides.
     """
     return F.expr(_cosine_sql(sql_operand(a), sql_operand(b)))
+
+
+def cosine_normed(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms ``na`` and ``nb`` —
+    for callers that fold a norm once per row and reuse it across many
+    pairs (``search_batch``: one row norm for all of a batch's queries);
+    bit-identical to :func:`cosine` when the norms are :func:`norm`'s."""
+    return F.expr(_cosine_normed_sql(
+        sql_operand(a), sql_operand(b), sql_operand(na), sql_operand(nb)
+    ))
 
 
 def cosine_to_literal(v: str, q: list[float]) -> Column:
@@ -313,7 +338,8 @@ def quantize(v: ColumnOrName) -> Column:
     )
 
 
-def dequantize(quant: ColumnOrName, qmin: ColumnOrName, qmax: ColumnOrName) -> Column:
+def dequantize(quant: ColumnOrName, qmin: ColumnOrName, qmax: ColumnOrName,
+               shift: int = 0) -> Column:
     """Inverse map bin → double (reference packed_vector.rs:27-35).
 
     No zero-span guard here — nothing divides by the span, and when the
@@ -321,12 +347,20 @@ def dequantize(quant: ColumnOrName, qmin: ColumnOrName, qmax: ColumnOrName) -> C
     bin IS qmin. Substituting a fake span would instead invent values up
     to qmin+1 whenever a sub-float32 double range underflows to zero at
     store time (caught by hypothesis in test_property.py).
+
+    ``shift`` is added to each stored value (as an int) before the map,
+    inside the same ``transform``: storage that keeps the bins shifted
+    into a signed byte decodes in one pass over the array.
     """
     qmin_d = _col(qmin).cast("double")
     qmax_d = _col(qmax).cast("double")
-    return F.transform(
-        _col(quant), lambda b: qmin_d + b.cast("double") / 255.0 * (qmax_d - qmin_d)
-    )
+
+    def unpack(b: Column) -> Column:
+        if shift:
+            b = b.cast("int") + shift
+        return qmin_d + b.cast("double") / 255.0 * (qmax_d - qmin_d)
+
+    return F.transform(_col(quant), unpack)
 
 
 def dim(v: ColumnOrName) -> Column:

@@ -14,8 +14,10 @@ Physical design (SURVEY.md §1.4):
   tag-superset predicate never touches the data.
 - vectors stored quantized (qmin/qmax/quant columns, packed_vector.rs
   semantics) exactly as the reference always stores packed; search
-  dequantizes in the scan projection (a codegen'd transform, free relative
-  to I/O).
+  dequantizes in the scan projection. Decode and score are higher-order
+  functions, which Spark runs interpreted, outside whole-stage codegen:
+  they, not I/O, are a search's CPU cost, so each stored row is decoded
+  once, folds its norm once and its dot once per query.
 - PCA mode: a saved PCAModel artifact next to the table flips inserts to
   project before write and search to euclidean-ascending scoring
   (db.rs:233-255 — with the farthest-k bug fixed, SURVEY.md §2.3).
@@ -51,11 +53,13 @@ from victor_spark.fs import join as fsjoin
 
 from victor_spark.functions.hashing import md5_32
 from victor_spark.functions.vector import (
-    cosine,
+    cosine_normed,
     cosine_to_literal,
     dequantize,
     euclidean,
     euclidean_to_literal,
+    norm,
+    py_norm,
     quantize,
 )
 from victor_spark.operators.pca import PCAModel, fit_pca, project_column
@@ -199,36 +203,50 @@ def _encode(df: DataFrame, vec_col: str) -> DataFrame:
 
 
 def _decode(df: DataFrame) -> DataFrame:
-    """Stored rows plus the dequantized ``embedding`` column."""
-    bins = F.transform(F.col("quant"), lambda b: b.cast("int") + 128)
-    return df.withColumn("embedding", dequantize(bins, "qmin", "qmax"))
+    """Stored rows plus the dequantized ``embedding`` column: one
+    ``transform`` undoes the signed shift and dequantizes."""
+    return df.withColumn(
+        "embedding", dequantize("quant", "qmin", "qmax", shift=128)
+    )
 
 
 def _guard_score(df: DataFrame, score: Column, qdim: int,
-                 strict_nan: bool) -> tuple[DataFrame, Column]:
-    """The score as search serves it. A NaN score (a zero-norm vector
-    under cosine, or NaN inputs) fails the query with ``strict_nan`` —
-    the distributed mirror of the reference's panic in
-    NearestNeighborsResult::cmp (db.rs:742-748) — and is dropped
-    otherwise. A stored vector whose dimension is not the query's fails
-    the query in-plan in both modes: the vector kernels pad a length
-    mismatch with NULL, so its score is NULL, never NaN.
+                 strict_nan: bool) -> DataFrame:
+    """``df`` plus the ``score`` column as search serves it. A NaN score
+    (a zero-norm vector under cosine, or NaN inputs) fails the query with
+    ``strict_nan`` — the distributed mirror of the reference's panic in
+    NearestNeighborsResult::cmp (db.rs:742-748) — and becomes NULL
+    otherwise, which the caller orders last and drops after its limit
+    (:func:`_drop_nan_scores`). A stored vector whose dimension is not
+    the query's fails the query in-plan in both modes: the vector kernels
+    pad a length mismatch with NULL, so its score is NULL, never NaN.
 
-    The NaN test stays the CASE's first branch, as before the dimension
-    test existed: Spark's common-subexpression elimination treats only
-    a CASE's first condition as always evaluated, so a test placed ahead
-    of it could change how often the score expression runs per row."""
-    wrong_dim = F.size("embedding") != qdim
-    dim_error = F.raise_error(F.concat(
-        F.lit(f"query dimension {qdim} vs index dimension "),
-        F.size("embedding").cast("string"),
-    ))
-    if strict_nan:
-        nan_error = F.raise_error(F.lit("NaN similarity score (strict NaN mode)"))
-        return df, (F.when(F.isnan(score), nan_error)
-                    .when(wrong_dim, dim_error).otherwise(score))
-    return (df.filter(~F.isnan(score)),
-            F.when(wrong_dim, dim_error).otherwise(score))
+    The raw score is materialized as a column first and the guard reads
+    that column. The guard names the score twice (the NaN test and the
+    ELSE), and the optimizer does not merge a Project into one that
+    reads a costly output more than once, so every row is scored once.
+    A NaN filter instead would be pushed below the scoring Project with
+    the score inlined, scoring every row a second time. The guard is
+    one parsed SQL expression, as the vector kernels are: a handful of
+    py4j round trips where the Column builders cost about a hundred."""
+    nan_case = ("raise_error('NaN similarity score (strict NaN mode)')"
+                if strict_nan else "NULL")
+    guard = F.expr(
+        f"CASE WHEN isnan(score) THEN {nan_case} "
+        f"WHEN size(embedding) != {qdim} THEN raise_error(concat("
+        f"'query dimension {qdim} vs index dimension ', "
+        f"CAST(size(embedding) AS STRING))) "
+        f"ELSE score END"
+    )
+    return df.withColumn("score", score).withColumn("score", guard)
+
+
+def _drop_nan_scores(df: DataFrame, strict_nan: bool) -> DataFrame:
+    """Without ``strict_nan``, drop the rows whose score the guard turned
+    NULL. Applied after the top-k limit: NULL scores order last, so the
+    limit keeps exactly the rows it would keep over the non-NaN rows
+    alone, and the filter cannot be pushed into the scoring Project."""
+    return df if strict_nan else df.filter(F.col("score").isNotNull())
 
 
 def _lexical_jaccard(text: str) -> Column:
@@ -1026,7 +1044,7 @@ class VectorIndex:
         db.rs:217-283). Returns (id, content, tags, score) — cosine
         descending, or euclidean ascending in projected mode.
 
-        Plan: pruned scan → dequantize → score (codegen) →
+        Plan: pruned scan → dequantize → score → guard →
         TakeOrderedAndProject(k) — the reference's bounded heap,
         distributed.
 
@@ -1053,9 +1071,11 @@ class VectorIndex:
             score = euclidean_to_literal("embedding", q)
         else:
             score = cosine_to_literal("embedding", q)
-        df, score = _guard_score(df, score, len(q), strict_nan)
-        scored = topk(df, score, k, ascending=model is not None)
-        return scored.select("id", "content", "tags", "score")
+        df = _guard_score(df, score, len(q), strict_nan)
+        scored = topk(df, F.col("score"), k, ascending=model is not None)
+        return _drop_nan_scores(scored, strict_nan).select(
+            "id", "content", "tags", "score"
+        )
 
     def search_batch(self, queries: dict[str, list[float]], k: int = 10,
                      tags: list[str] | None = None,
@@ -1088,19 +1108,26 @@ class VectorIndex:
         qdim = len(qrows[0][1])
         for _qid, q in qrows:
             _check_dim(len(q), qdim, "first query")
+        # each query's norm folds on the driver (py_norm, bit-identical
+        # to the kernel's) and each stored row's once before the
+        # crossJoin, so a (row, query) pair folds only its dot
         qdf = F.broadcast(_local_frame(self.spark, {
             "query_id": [qid for qid, _q in qrows],
             "_qv": [q for _qid, q in qrows],
-        }, "query_id string, _qv array<double>"))
-        score = (euclidean("embedding", "_qv") if model is not None
-                 else cosine("embedding", "_qv"))
-        df = self.scan(tags).crossJoin(qdf).withColumn("score", score)
-        df, score = _guard_score(df, F.col("score"), qdim, strict_nan)
+            "_qn": [py_norm(q) for _qid, q in qrows],
+        }, "query_id string, _qv array<double>, _qn double"))
+        if model is not None:
+            rows = self.scan(tags)
+            score = euclidean("embedding", "_qv")
+        else:
+            rows = self.scan(tags).withColumn("_rn", norm("embedding"))
+            score = cosine_normed("embedding", "_qv", "_rn", "_qn")
+        df = _guard_score(rows.crossJoin(qdf), score, qdim, strict_nan)
         ranked = topk_per_group(
-            df.withColumn("score", score), ["query_id"], "score", k,
+            df, ["query_id"], "score", k,
             ascending=model is not None, tie_cols=["id"],
         )
-        return ranked.select(
+        return _drop_nan_scores(ranked, strict_nan).select(
             "query_id", "id", "content", "tags", "score", "rank"
         )
 

@@ -20,17 +20,21 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _score_order(score: Column, ascending: bool) -> Column:
+    return score.asc_nulls_last() if ascending else score.desc_nulls_last()
+
+
 def topk(df: DataFrame, score: Column, k: int, ascending: bool = False,
          score_name: str = "score") -> DataFrame:
     """Global top-k by a score expression → TakeOrderedAndProject.
 
     ascending=True is the projected-mode (euclidean distance) ordering —
     note the reference orders descending even for distance (farthest-k bug,
-    SURVEY.md §2.3); we implement nearest-k.
+    SURVEY.md §2.3); we implement nearest-k. A NULL score ranks last in
+    either direction.
     """
     scored = df.withColumn(score_name, score)
-    order = F.col(score_name).asc() if ascending else F.col(score_name).desc()
-    return scored.orderBy(order).limit(k)
+    return scored.orderBy(_score_order(F.col(score_name), ascending)).limit(k)
 
 
 def topk_per_group(df: DataFrame, group_cols: list[str], score_col: str, k: int,
@@ -40,9 +44,9 @@ def topk_per_group(df: DataFrame, group_cols: list[str], score_col: str, k: int,
 
     One shuffle on the group columns; `tie_cols` (ascending) break score
     ties deterministically — required whenever results feed a hash-checked
-    comparison.
+    comparison. A NULL score ranks last in either direction.
     """
-    order = [F.col(score_col).asc() if ascending else F.col(score_col).desc()]
+    order = [_score_order(F.col(score_col), ascending)]
     order += [F.col(c).asc() for c in (tie_cols or [])]
     w = Window.partitionBy(*group_cols).orderBy(*order)
     return (

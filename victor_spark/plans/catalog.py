@@ -1015,7 +1015,7 @@ FROM ranked WHERE rn <= 3
     "corpus scan instead of N scans",
 )
 def q_ann_ivf_batch(spark, sf_dir):
-    from victor_spark.functions.vector import _cosine_normed_sql, _norm_sql
+    from victor_spark.functions.vector import _norm_sql, cosine_normed
     from victor_spark.operators.ivfpq import assign_cells, probe_cells
 
     e = _emb(spark, sf_dir).select("vec_id", "v")
@@ -1039,8 +1039,7 @@ def q_ann_ivf_batch(spark, sf_dir):
     cells = assign_cells(e, "vec_id", "v", centroids)
     scored = cells.join(probe, "cell").select(
         "query_id", "vec_id",
-        F.expr(_cosine_normed_sql("`v`", "`qv`", _norm_sql("`v`"), "`qn`"))
-        .alias("_s"),
+        cosine_normed("v", "qv", _norm_sql("`v`"), "qn").alias("_s"),
     )
     rw = Window.partitionBy("query_id").orderBy(F.desc("_s"), F.asc("vec_id"))
     return (
