@@ -1549,21 +1549,114 @@ def test_search_scores_equal_the_replay_on_edge_vectors(idx, strict_nan):
                 _assert_scores_match_replay(idx, query, k, strict_nan, tags)
 
 
-def test_scan_decodes_like_the_two_transform_decode(spark, idx):
-    """``scan()`` decodes in one transform; its embeddings equal, bit for
-    bit, the shift to unsigned bins followed by ``dequantize``."""
-    from pyspark.sql import functions as F
+def _replay_codec(v):
+    """Python replay of the stored layout of an inserted (float32) vector:
+    float32 range endpoints and round-half-up bins
+    (``test_index_model.dequantized``) minus 128, with Spark's NaN
+    ordering in the clamp (``least(255, NaN)`` is 255)."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    from victor_spark.functions.vector import dequantize
+    import numpy as np
 
-    idx.insert([(n, v, []) for n, v in _EDGE_ROWS]
-               + [("big", [1e30, -3e29, 7.0, 0.0], []),
-                  ("plain", [0.1, 0.2, -0.3, 0.4], [])])
-    raw = spark.read.parquet(idx.data_path)
-    bins = F.transform(F.col("quant"), lambda b: b.cast("int") + 128)
-    want = {r["id"]: repr(r["e"]) for r in raw.select(
-        "id", dequantize(bins, "qmin", "qmax").alias("e")).collect()}
-    got = {r["id"]: repr(r["embedding"])
-           for r in idx.scan().select("id", "embedding").collect()}
-    assert len(got) == len(_EDGE_ROWS) + 2
+    v = [float(np.float32(x)) for x in v]
+    # as array_min/array_max pick them: NaN sorts above every number, and
+    # the first of equal extremes wins (-0.0 == 0.0)
+    key = lambda x: (x != x, x)  # noqa: E731
+    lo, hi = min(v, key=key), max(v, key=key)
+    span = 1.0 if hi - lo == 0.0 else hi - lo
+    quant = []
+    for x in v:
+        r = (x - lo) / span * 255.0
+        if r == r and abs(r) != float("inf"):
+            r = float(Decimal(repr(r)).quantize(Decimal(1),
+                                                rounding=ROUND_HALF_UP))
+        b = 255.0 if r != r else min(255.0, max(0.0, r))
+        quant.append(int(b) - 128)
+    return float(np.float32(lo)), float(np.float32(hi)), quant
+
+
+def test_stored_layout_equals_the_codec_replay(spark, idx):
+    """The stored (qmin, qmax, quant) of every row equals the Python
+    replay of the codec, and ``scan()`` decodes it as
+    ``qmin + (b+128)/255·(qmax-qmin)``: indexes written by any version
+    of the codec stay readable bit for bit."""
+    rows = _EDGE_ROWS + [("big", [1e30, -3e29, 7.0, 0.0]),
+                         ("plain", [0.1, 0.2, -0.3, 0.4])]
+    idx.insert([(n, v, []) for n, v in rows])
+    stored = {r["content"]: (r["qmin"], r["qmax"], list(r["quant"]))
+              for r in spark.read.parquet(idx.data_path).collect()}
+    # repr, so NaN endpoints and -0.0 count
+    assert {n: repr(t) for n, t in stored.items()} == {
+        n: repr(_replay_codec(v)) for n, v in rows}
+    got = {r["content"]: repr(r["embedding"])
+           for r in idx.scan().select("content", "embedding").collect()}
+    want = {n: repr([qmin + (b + 128) / 255.0 * (qmax - qmin) for b in q])
+            for n, (qmin, qmax, q) in stored.items()}
+    assert len(got) == len(rows)
     assert got == want
+
+
+def test_insert_reads_each_vectors_range_once(idx, monkeypatch):
+    """An insert's write plan reads the vector's min and max once each,
+    outside the per-element lambda, and makes one pass over its elements:
+    a min or max inside the lambda is re-folded for every element."""
+    import re
+
+    staged = []
+    real = VectorIndex._stage
+
+    def spy(self, out):
+        staged.append(out)
+        return real(self, out)
+
+    monkeypatch.setattr(VectorIndex, "_stage", spy)
+    idx.insert([("a", [1.0, 2.0, 3.0], ["x"])])
+    plan = staged[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_min(") == 1, plan
+    assert plan.count("array_max(") == 1, plan
+    passes = [m.end() for m in re.finditer(r"transform\((?!array\()", plan)]
+    assert len(passes) == 1, plan
+    depth, end = 1, passes[0]
+    while depth:
+        depth += {"(": 1, ")": -1}.get(plan[end], 0)
+        end += 1
+    body = plan[passes[0]:end]
+    assert "array_min(" not in body and "array_max(" not in body, body
+
+
+def test_large_model_projection_stores_and_searches(spark, tmp_path):
+    """A model past the literal-expression budget (d×k > 16,384) projects
+    through the pandas_udf path, in ``project()``'s backfill and in a
+    later insert, and the projected rows go through the codec and back."""
+    import random
+
+    import numpy as np
+
+    from victor_spark.operators import pca
+
+    d, k = 160, 120
+    assert d * k > pca._EXPR_PATH_MAX_COEFFS
+    rng = random.Random(11)
+    idx = VectorIndex(spark, str(tmp_path / "big_pca"))
+    rows = [(f"doc{i}", [rng.gauss(0, 1) for _ in range(d)], ["t"])
+            for i in range(130)]
+    idx.insert(rows)
+    # the backfill projects the decoded rows; a later insert its input
+    doc7 = idx.scan().filter("content = 'doc7'").first()["embedding"]
+    model = idx.project(k=k)
+    assert model.components.shape == (d, k)
+    late = [rng.gauss(0, 1) for _ in range(d)]
+    idx.insert([("late", late, ["t"])])
+    assert idx.dimension() == k
+    stored = {r["content"]: r["embedding"]
+              for r in idx.scan().select("content", "embedding").collect()}
+    assert len(stored) == 131
+    f32 = np.asarray(late, dtype=np.float32).astype(np.float64)
+    for name, v in [("doc7", doc7), ("late", f32)]:
+        want = (np.asarray(v) - model.means) @ model.components
+        # half a bin, plus the float32 rounding of the stored endpoints
+        bound = ((want.max() - want.min()) / 255.0 / 2.0
+                 + 2.0 ** -22 * np.abs(want).max())
+        assert np.abs(np.asarray(stored[name]) - want).max() <= bound
+    for name, v in [("doc7", rows[7][1]), ("late", late)]:
+        assert idx.search(v, k=1, tags=["t"]).first()["content"] == name

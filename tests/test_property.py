@@ -29,13 +29,11 @@ finite = st.floats(
 def test_quantize_roundtrip_error_bound(spark, vec):
     """Dequantized value within half a bin of the original — the invariant
     behind the reference's max-err<0.0005 claim (packed_vector.rs:142-143)."""
-    from pyspark.sql import functions as F
-
     from victor_spark.functions.vector import dequantize, quantize
 
     df = spark.createDataFrame([(vec,)], "v array<double>")
     out = df.select(quantize("v").alias("q"), "v").select(
-        "v", dequantize(F.col("q.quant"), F.col("q.qmin"), F.col("q.qmax")).alias("r")
+        "v", dequantize("q.quant", "q.qmin", "q.qmax").alias("r")
     )
     row = out.first()
     # half a bin, plus the float32 rounding of the stored qmin/qmax

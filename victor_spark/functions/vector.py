@@ -304,63 +304,68 @@ def euclidean_to_literal(v: str, q: list[float]) -> Column:
 # The reference divides by zero when min == max (constant vector); we guard
 # that case (FIXTURES.md §2 "quant edge") by defining the span as 1 when it
 # is 0, which makes constant vectors round-trip exactly (bin = 0 → x' = min).
+#
+# The stored layout is struct(qmin float, qmax float, quant array<tinyint>)
+# with each bin shifted by -128 into Spark's signed tinyint, so parquet
+# keeps a true 1-byte column: the reference's exact u8/dim + 2×f32 layout
+# (packed_vector.rs:3-9). quantize is the only writer of that layout and
+# dequantize its only reader. Every literal is a double (``255.0D``): a
+# bare ``255.0`` parses as a decimal and would change the result bits.
+# The lambda variables ``_qv``, ``_qlo``, ``_qhi``, ``_qs``, ``_qx`` and
+# ``_qb`` are reserved like the similarity kernels' (dequantize reads its
+# range operands inside its lambda).
 
 
-def quantize_bins(v: ColumnOrName) -> Column:
-    """array<double> → array<smallint> of 0..255 bins.
-
-    smallint (not tinyint) because Spark's tinyint is signed [-128,127];
-    the stored width is still 1 byte after parquet dictionary/bit-packing.
-    """
-    v = _col(v)
-    lo, hi = F.array_min(v), F.array_max(v)
-    span = F.when(hi - lo == 0.0, F.lit(1.0)).otherwise(hi - lo)
-    return F.transform(
-        v,
-        lambda x: F.least(
-            F.lit(255.0), F.greatest(F.lit(0.0), F.round((x - lo) / span * 255.0))
-        ).cast("smallint"),
+def _quantize_sql(v: str) -> str:
+    """The vector, its min and max, and its span each bind once per row
+    (the :func:`bind` idiom); the per-element body reads only lambda
+    variables, so a row packs in one pass over its elements."""
+    return (
+        f"get(transform(array({v}), _qv -> "
+        f"get(transform(array(array_min(_qv)), _qlo -> "
+        f"get(transform(array(array_max(_qv)), _qhi -> "
+        f"get(transform(array(CASE WHEN _qhi - _qlo = 0.0D THEN 1.0D "
+        f"ELSE _qhi - _qlo END), _qs -> "
+        f"named_struct('qmin', CAST(_qlo AS float), "
+        f"'qmax', CAST(_qhi AS float), "
+        f"'quant', transform(_qv, _qx -> CAST(least(255.0D, greatest(0.0D, "
+        f"round((_qx - _qlo) / _qs * 255.0D))) - 128.0D AS tinyint)))"
+        f"), 0)), 0)), 0)), 0)"
     )
 
 
-def quantize(v: ColumnOrName) -> Column:
-    """Pack a vector into struct(qmin float, qmax float, quant array<smallint>).
+def _dequantize_sql(quant: str, qmin: str, qmax: str) -> str:
+    return (
+        f"transform({quant}, _qb -> CAST({qmin} AS double) + "
+        f"CAST(_qb + 128 AS double) / 255.0D * "
+        f"(CAST({qmax} AS double) - CAST({qmin} AS double)))"
+    )
+
+
+def quantize(v: str) -> Column:
+    """Pack a vector into the stored layout struct(qmin float, qmax float,
+    quant array<tinyint>).
 
     Storage cost per vector = d bytes + 8 bytes of range, matching the
     reference's 1.01 B/dim + overhead layout (packed_vector.rs:3-9,
     README.md:9-10) before parquet's own encoding shrinks it further.
     """
-    v = _col(v)
-    return F.struct(
-        F.array_min(v).cast("float").alias("qmin"),
-        F.array_max(v).cast("float").alias("qmax"),
-        quantize_bins(v).alias("quant"),
-    )
+    return F.expr(_quantize_sql(sql_operand(v)))
 
 
-def dequantize(quant: ColumnOrName, qmin: ColumnOrName, qmax: ColumnOrName,
-               shift: int = 0) -> Column:
-    """Inverse map bin → double (reference packed_vector.rs:27-35).
+def dequantize(quant: str, qmin: str, qmax: str) -> Column:
+    """Inverse map of :func:`quantize`'s layout, bin → double (reference
+    packed_vector.rs:27-35), in one ``transform``.
 
     No zero-span guard here — nothing divides by the span, and when the
     stored (float32) range collapses to zero the correct inverse of every
     bin IS qmin. Substituting a fake span would instead invent values up
     to qmin+1 whenever a sub-float32 double range underflows to zero at
     store time (caught by hypothesis in test_property.py).
-
-    ``shift`` is added to each stored value (as an int) before the map,
-    inside the same ``transform``: storage that keeps the bins shifted
-    into a signed byte decodes in one pass over the array.
     """
-    qmin_d = _col(qmin).cast("double")
-    qmax_d = _col(qmax).cast("double")
-
-    def unpack(b: Column) -> Column:
-        if shift:
-            b = b.cast("int") + shift
-        return qmin_d + b.cast("double") / 255.0 * (qmax_d - qmin_d)
-
-    return F.transform(_col(quant), unpack)
+    return F.expr(_dequantize_sql(
+        sql_operand(quant), sql_operand(qmin), sql_operand(qmax)
+    ))
 
 
 def dim(v: ColumnOrName) -> Column:

@@ -182,10 +182,9 @@ def _check_dim(got: int, want: int, what: str) -> None:
 
 # -- the stored codec -----------------------------------------------------
 #
-# Vectors are stored quantized (packed_vector.rs semantics) with the 0..255
-# bins shifted to signed [-128,127], so parquet keeps a true 1-byte column —
-# the reference's exact u8/dim + 2×f32 layout (packed_vector.rs:3-9).
-# _encode is the only writer of that layout and _decode its only reader.
+# functions/vector.py's quantize writes the stored layout (qmin, qmax,
+# quant) and dequantize reads it; _encode and _decode are their only
+# callers here.
 
 
 def _encode(df: DataFrame, vec_col: str) -> DataFrame:
@@ -193,21 +192,13 @@ def _encode(df: DataFrame, vec_col: str) -> DataFrame:
     (id, content, tags, qmin, qmax, quant, tag_set_id)."""
     return df.select(
         "id", "content", "tags", quantize(vec_col).alias("q"), "tag_set_id"
-    ).select(
-        "id", "content", "tags",
-        F.col("q.qmin").alias("qmin"),
-        F.col("q.qmax").alias("qmax"),
-        F.transform(F.col("q.quant"), lambda b: (b - 128).cast("tinyint")).alias("quant"),
-        "tag_set_id",
-    )
+    ).selectExpr("id", "content", "tags", "q.qmin", "q.qmax", "q.quant",
+                 "tag_set_id")
 
 
 def _decode(df: DataFrame) -> DataFrame:
-    """Stored rows plus the dequantized ``embedding`` column: one
-    ``transform`` undoes the signed shift and dequantizes."""
-    return df.withColumn(
-        "embedding", dequantize("quant", "qmin", "qmax", shift=128)
-    )
+    """Stored rows plus the dequantized ``embedding`` column."""
+    return df.withColumn("embedding", dequantize("quant", "qmin", "qmax"))
 
 
 def _guard_score(df: DataFrame, score: Column, qdim: int,

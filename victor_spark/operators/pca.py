@@ -114,7 +114,8 @@ def project_column(vec: Column | str, model: PCAModel) -> Column:
 
     Two physical forms, same semantics:
     - small models (d×k ≤ 16k coefficients): k dot-products against literal
-      component arrays — pure codegen, no Python.
+      component arrays — JVM-side, no Python (higher-order functions run
+      interpreted, outside whole-stage codegen).
     - large models (the reference's 1536×500 = 768k coefficients): an
       Arrow-batched pandas_udf doing one numpy matmul per batch — the plan
       stays a single projection and the coefficients ship once per executor

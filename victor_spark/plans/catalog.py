@@ -361,7 +361,7 @@ FROM err
 def q_quantize_roundtrip(spark, sf_dir):
     e = _emb(spark, sf_dir)
     q = e.withColumn("q", quantize("v")).withColumn(
-        "back", dequantize(F.col("q.quant"), F.col("q.qmin"), F.col("q.qmax"))
+        "back", dequantize("q.quant", "q.qmin", "q.qmax")
     )
     ae = F.zip_with("v", "back", lambda a, b: F.abs(a - b))
     return q.select(
